@@ -15,10 +15,13 @@ Here both are generic DataFrame combinators.  Scale notes:
   (run it per arriving month against only the partitions the batch
   touches) or a Delta/Iceberg MERGE; the operator itself is the kernel
   either way.
-- ``insert_if_absent`` is a null-safe LEFT ANTI join.  SQL ``NOT IN``
-  returns *no rows* if the subquery yields a NULL; ``left_anti`` keeps
-  non-matching rows.  We expose ``not_in_semantics=True`` to replicate
-  the SQL behaviour exactly (SURVEY.md §4.3) and pin it with tests.
+- ``absent_rows`` is a null-safe LEFT ANTI join: the incoming rows
+  whose key is new.  Append-only tables (the gold and warehouse dims)
+  write just these; ``insert_if_absent`` unions them with the existing
+  rows.  SQL ``NOT IN`` returns *no rows* if the subquery yields a
+  NULL; ``left_anti`` keeps non-matching rows.  We expose
+  ``not_in_semantics=True`` to replicate the SQL behaviour exactly
+  (SURVEY.md §4.3) and pin it with tests.
 """
 
 from __future__ import annotations
@@ -60,21 +63,22 @@ def latest_wins(
     )
 
 
-def insert_if_absent(
+def absent_rows(
     existing: DataFrame | None,
     incoming: DataFrame,
     keys: Sequence[str],
     not_in_semantics: bool = False,
 ) -> DataFrame:
-    """Insert-if-absent: rows of ``incoming`` whose key is not already in
-    ``existing``, unioned with ``existing``; result deduplicated like the
-    reference's set-semantics UNION (python_scripts.py:269-271).
+    """Rows of ``incoming`` whose key is not already in ``existing`` — a
+    LEFT ANTI join on ``keys``.  These are exactly the rows an
+    append-only table must add, so appending them is idempotent: a
+    replayed batch finds its keys present and adds nothing.
 
     ``not_in_semantics=True`` replicates SQL ``NOT IN`` exactly: if
     ``existing`` contains a NULL key, *no* incoming rows qualify.
     """
     if existing is None:
-        return incoming.distinct()
+        return incoming
     fresh = incoming
     if not_in_semantics:
         for k in keys:
@@ -86,5 +90,19 @@ def insert_if_absent(
                 how="left",
             ).where(F.col("__poison").isNull()).drop("__poison")
             fresh = fresh.where(F.col(k).isNotNull())
-    fresh = fresh.join(existing.select(*keys).distinct(), list(keys), "left_anti")
-    return fresh.unionByName(existing).distinct()
+    return fresh.join(existing.select(*keys), list(keys), "left_anti")
+
+
+def insert_if_absent(
+    existing: DataFrame | None,
+    incoming: DataFrame,
+    keys: Sequence[str],
+    not_in_semantics: bool = False,
+) -> DataFrame:
+    """Insert-if-absent: ``absent_rows`` unioned with ``existing``;
+    result deduplicated like the reference's set-semantics UNION
+    (python_scripts.py:269-271)."""
+    fresh = absent_rows(existing, incoming, keys, not_in_semantics)
+    if existing is not None:
+        fresh = fresh.unionByName(existing)
+    return fresh.distinct()

@@ -21,15 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import insert_if_absent, latest_wins
+from ..operators.merge import absent_rows, latest_wins
+from ..schemas import DIM_KEYS
+from ..session import local_df
 from ..sources.tables import WAREHOUSE_SCHEMA, create_warehouse
-
-DIM_KEYS = {
-    "dim_openings": ["pgn_eco_url"],
-    "dim_date": ["game_date"],
-    "dim_time_control": ["time_control"],
-    "dim_results": ["result_code"],
-}
 
 
 def read_watermark(spark: SparkSession, schema: str = WAREHOUSE_SCHEMA):
@@ -46,17 +41,25 @@ def load_warehouse(
     location: str | None = None,
     schema: str = WAREHOUSE_SCHEMA,
 ) -> None:
-    """Incremental warehouse load: DDL if absent, insert-if-absent dims,
-    watermark-filtered latest-wins fact merge."""
+    """Incremental warehouse load: DDL if absent, append-only dims,
+    watermark-filtered latest-wins fact merge.
+
+    Each dim gets only the rows whose key it lacks, appended as one file;
+    a load that brings no new key writes nothing to it.  A replayed load
+    finds its keys present, so the append is idempotent.  Dims are
+    broadcast-sized, so the new rows come to the driver: one job both
+    finds them and tells whether there is anything to write."""
     create_warehouse(spark, location=location, schema=schema)
 
     for dim, keys in DIM_KEYS.items():
-        existing = spark.table(f"{schema}.{dim}")
-        target_cols = existing.columns
-        incoming = gold[dim].select(*target_cols)
-        merged = insert_if_absent(existing, incoming, keys)
-        # localCheckpoint breaks lineage off the table being overwritten
-        merged.localCheckpoint().write.insertInto(f"{schema}.{dim}", overwrite=True)
+        table = f"{schema}.{dim}"
+        existing = spark.table(table)
+        incoming = gold[dim].select(*existing.columns)
+        new_rows = absent_rows(existing, incoming, keys).collect()
+        if new_rows:
+            local_df(spark, new_rows, incoming.schema).coalesce(1).write.insertInto(
+                table, overwrite=False
+            )
 
     fact_table = f"{schema}.fact_games"
     existing_fact = spark.table(fact_table)

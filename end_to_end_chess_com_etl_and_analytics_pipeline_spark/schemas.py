@@ -161,6 +161,22 @@ DIM_RESULTS_SCHEMA = T.StructType(
     ]
 )
 
+# The four dims by table name, with their primary keys (the warehouse
+# DDL's PKs).  Both the gold stream and the warehouse load append only
+# the rows whose key is new.
+DIM_SCHEMAS: dict[str, T.StructType] = {
+    "dim_openings": DIM_OPENINGS_SCHEMA,
+    "dim_date": DIM_DATE_SCHEMA,
+    "dim_time_control": DIM_TIME_CONTROL_SCHEMA,
+    "dim_results": DIM_RESULTS_SCHEMA,
+}
+DIM_KEYS: dict[str, list[str]] = {
+    "dim_openings": ["pgn_eco_url"],
+    "dim_date": ["game_date"],
+    "dim_time_control": ["time_control"],
+    "dim_results": ["result_code"],
+}
+
 # openings.csv lookup (dev_files/Data/openings.csv — 3,513 rows)
 OPENINGS_CSV_SCHEMA = T.StructType(
     [

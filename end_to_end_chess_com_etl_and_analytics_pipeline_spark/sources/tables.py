@@ -25,10 +25,8 @@ from pyspark.sql import types as T
 from ..session import local_df
 
 from ..schemas import (
-    DIM_DATE_SCHEMA,
-    DIM_OPENINGS_SCHEMA,
     DIM_RESULTS_SCHEMA,
-    DIM_TIME_CONTROL_SCHEMA,
+    DIM_SCHEMAS,
     FACT_GAMES_SCHEMA,
     TESTDATA_SCHEMAS,
 )
@@ -566,12 +564,10 @@ def _ddl_columns(schema: T.StructType) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
 
 
+# PKs: schemas.DIM_KEYS for the dims, game_url for fact_games
 WAREHOUSE_TABLES: dict[str, str] = {
-    "dim_openings": _ddl_columns(DIM_OPENINGS_SCHEMA),  # PK: pgn_eco_url
-    "dim_date": _ddl_columns(DIM_DATE_SCHEMA),  # PK: game_date
-    "dim_time_control": _ddl_columns(DIM_TIME_CONTROL_SCHEMA),  # PK: time_control
-    "dim_results": _ddl_columns(DIM_RESULTS_SCHEMA),  # PK: result_code
-    "fact_games": _ddl_columns(FACT_GAMES_SCHEMA),  # PK: game_url
+    name: _ddl_columns(schema)
+    for name, schema in {**DIM_SCHEMAS, "fact_games": FACT_GAMES_SCHEMA}.items()
 }
 
 

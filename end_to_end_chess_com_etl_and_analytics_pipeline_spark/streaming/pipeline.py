@@ -31,7 +31,8 @@ from pyspark.sql import types as T
 
 from ..plans.gold import build_gold, merge_fact
 from ..plans.silver import bronze_to_silver
-from ..schemas import RAW_GAME_SCHEMA
+from ..schemas import DIM_KEYS, DIM_SCHEMAS, FACT_GAMES_SCHEMA, RAW_GAME_SCHEMA
+from ..session import local_df
 from ..sources.tables import read_events_raw, repair_events_ts
 
 
@@ -49,10 +50,23 @@ def stream_bronze_to_silver(
     return bronze_to_silver(raw)
 
 
+# The gold fact as stored: the logical fact plus its (year, month)
+# partition columns.  Scans declare it, so none spends a job inferring
+# the schema from a footer.
+GOLD_FACT_SCHEMA = T.StructType(
+    FACT_GAMES_SCHEMA.fields
+    + [T.StructField("year", T.IntegerType()), T.StructField("month", T.IntegerType())]
+)
+
+
+def _scan_gold_fact(spark: SparkSession, fact_path: str) -> DataFrame:
+    return spark.read.schema(GOLD_FACT_SCHEMA).parquet(fact_path)
+
+
 def read_gold_fact(spark: SparkSession, gold_dir: str) -> DataFrame:
     """Read the incremental gold fact back without its (year, month)
     partition-layout columns — the logical fact schema."""
-    return spark.read.parquet(os.path.join(gold_dir, "fact_games")).drop(
+    return _scan_gold_fact(spark, os.path.join(gold_dir, "fact_games")).drop(
         "year", "month"
     )
 
@@ -66,7 +80,7 @@ def run_incremental_gold(
     run_ts: str,
 ) -> None:
     """Incremental gold build: each arriving bronze month merges into the
-    gold fact with the latest-wins kernel; dims append-if-absent.
+    gold fact with the latest-wins kernel; dims are append-only.
     ``availableNow`` processes the backlog then stops (the Airflow
     catchup=True equivalent).
 
@@ -96,45 +110,41 @@ def run_incremental_gold(
         recover_pending_swaps,
         two_phase_partition_overwrite,
     )
-    from ..operators.merge import insert_if_absent
+    from ..operators.merge import absent_rows
     from ..sources.tables import fs_exists
 
-    DIM_KEYS = {
-        "dim_openings": ["pgn_eco_url"],
-        "dim_date": ["game_date"],
-        "dim_time_control": ["time_control"],
-        "dim_results": ["result_code"],
-    }
-
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Build this batch's gold layer first (dims + projection +
-        # in-batch latest-wins); localCheckpoint pins the fact so the
-        # month probe below and the merge/write share one computation
-        # and the write cannot read-from-while-writing.
         # finish any fact swap a previous attempt crashed mid-commit
         # BEFORE anything reads the fact this batch
         recover_pending_swaps(spark, fact_path)
-        gold = build_gold(spark, batch_df, username, run_ts)
+        # The bronze read and the PGN parse run once: the fact, every
+        # dim and the month probe below consume this materialized batch.
+        batch = batch_df.localCheckpoint()
+        gold = build_gold(spark, batch, username, run_ts)
+        # pins the fact so the month probe below and the merge/write
+        # share one computation and the write cannot read-from-while-
+        # writing
         batch_fact = gold["fact_games"].localCheckpoint()
-        # T5: dims append-if-absent per micro-batch (the reference's
-        # monthly create_dim_* tasks).  Dims are broadcast-sized at any
-        # data scale, so a full-file rewrite per batch is O(dim), fine.
-        # (r11: overlapping the four dim chains in a thread pool was
-        # measured and REJECTED — 9.6 s → 12.3 s best-of-3; inside a
-        # micro-batch the tiny concurrent jobs contend on the batch-
-        # scoped 8-partition shuffle width and the scheduler, unlike
-        # the top-level artifact writes that did benefit.)
+        # T5: dims are append-only (the reference's monthly create_dim_*
+        # tasks).  Only rows whose key is new land, as one more file; a
+        # batch that brings no new key writes nothing.  Existing dim
+        # files are never rewritten, so no crash point loses a dim's
+        # history, and a replayed batch finds its keys present and
+        # appends nothing twice.  Dims are broadcast-sized, so the new
+        # rows come to the driver: one job both finds them and tells
+        # whether there is anything to write.
         for dim, keys in DIM_KEYS.items():
             dim_path = os.path.join(gold_dir, dim)
             existing_dim = (
-                spark.read.parquet(dim_path)
+                spark.read.schema(DIM_SCHEMAS[dim]).parquet(dim_path)
                 if fs_exists(spark, dim_path)
                 else None
             )
-            merged_dim = insert_if_absent(
-                existing_dim, gold[dim], keys
-            ).localCheckpoint()
-            merged_dim.write.mode("overwrite").parquet(dim_path)
+            new_rows = absent_rows(existing_dim, gold[dim], keys).collect()
+            if new_rows:
+                local_df(spark, new_rows, gold[dim].schema).coalesce(1).write.mode(
+                    "append"
+                ).parquet(dim_path)
         # Months this batch touches — driver-sized (one row per month;
         # a monthly re-pull touches 1-2). Re-pulled games may carry
         # game_dates outside the bronze file's nominal month, so probe
@@ -165,7 +175,8 @@ def run_incremental_gold(
             # deployment replaces the probe with a slim game_url →
             # (year, month) key index (or a MERGE-capable table
             # format's key lookup).
-            batch_keys = batch_fact.select("game_url").distinct()
+            # unique already: the in-batch latest-wins keeps one row a key
+            batch_keys = batch_fact.select("game_url")
             in_batch_months = reduce(
                 lambda a, b: a | b,
                 [
@@ -176,7 +187,7 @@ def run_incremental_gold(
             )
             stale_months = {
                 (r["y"], r["m"])
-                for r in spark.read.parquet(fact_path)
+                for r in _scan_gold_fact(spark, fact_path)
                 .select("game_url", "year", "month")
                 .where(~in_batch_months)
                 .join(F.broadcast(batch_keys), "game_url", "left_semi")
@@ -197,7 +208,7 @@ def run_incremental_gold(
             )
             # partition pruning: only the overlapping months are read
             existing = (
-                spark.read.parquet(fact_path).where(hit).drop("year", "month")
+                _scan_gold_fact(spark, fact_path).where(hit).drop("year", "month")
             )
         merged = merge_fact(existing, batch_fact).localCheckpoint()
         out = merged.withColumn("year", F.year("game_date")).withColumn(

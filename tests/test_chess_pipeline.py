@@ -24,6 +24,7 @@ from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.analytics impor
     win_rate_by_opening,
 )
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.schemas import (
+    DIM_KEYS,
     OPENINGS_CSV_SCHEMA,
     RAW_GAME_SCHEMA,
     SILVER_SCHEMA,
@@ -631,6 +632,9 @@ def test_warehouse_incremental_load_honors_watermark(
         assert spark.table(f"{db}.fact_games").count() == n1 + 45
         # dims stayed insert-if-absent (15 static result codes, no dups)
         assert spark.table(f"{db}.dim_results").count() == 15
+        for dim, keys in DIM_KEYS.items():
+            t = spark.table(f"{db}.{dim}")
+            assert t.count() == t.select(*keys).distinct().count(), dim
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 

@@ -301,3 +301,68 @@ def test_reader_during_swap_sees_old_or_new_never_mix(spark, tmp_path):
     assert rows() == sorted([(1, "a2", 100), (2, "c2", 200)])
     assert not os.path.exists(staged)
     assert not os.path.exists(os.path.join(table, "._swap_intent_t1"))
+
+
+def test_incremental_gold_dim_append_crash_replay(spark, tmp_path, monkeypatch):
+    """Dims are append-only: a batch that crashes after appending its new
+    dim keys and before staging the fact swap, then replays, must not
+    append them twice.  Each gold dim equals the batch build over both
+    months, one row per key."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.gold import (
+        build_gold,
+    )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.silver import (
+        bronze_to_silver,
+    )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.schemas import (
+        DIM_KEYS,
+        RAW_GAME_SCHEMA,
+    )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.sources import demo
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.streaming.pipeline import (
+        read_gold_fact,
+        run_incremental_gold,
+    )
+
+    bronze, gold, ckpt = tmp_path / "bronze", tmp_path / "gold", tmp_path / "ck"
+    bronze.mkdir()
+    demo.write_month_json(str(bronze / "2024-01-games.json"), month=1)
+    run_incremental_gold(
+        spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+        "2024-03-01 00:00:00",
+    )
+
+    demo.write_month_json(str(bronze / "2024-02-games.json"), month=2)
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash: dims appended, fact not staged")
+
+    monkeypatch.setattr(commit, "two_phase_partition_overwrite", boom)
+    with pytest.raises(Exception):
+        run_incremental_gold(
+            spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+            "2024-03-01 00:00:00",
+        )
+    monkeypatch.undo()
+    # the crash point really is past the append: month 2's dates landed
+    dim_date = spark.read.parquet(str(gold / "dim_date"))
+    assert dim_date.where(F.col("month") == 2).count() > 0
+
+    run_incremental_gold(
+        spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+        "2024-03-01 00:00:00",
+    )
+    both = spark.createDataFrame(
+        demo.month_payload(1) + demo.month_payload(2), RAW_GAME_SCHEMA
+    )
+    batch = build_gold(
+        spark, bronze_to_silver(both), demo.USERNAME, "2024-03-01 00:00:00"
+    )
+    for dim, keys in DIM_KEYS.items():
+        got = spark.read.parquet(str(gold / dim))
+        assert got.count() == got.select(*keys).distinct().count(), dim
+        assert got.exceptAll(batch[dim]).count() == 0, dim
+        assert batch[dim].exceptAll(got).count() == 0, dim
+    streamed = read_gold_fact(spark, str(gold))
+    assert streamed.count() == 90
+    assert streamed.exceptAll(batch["fact_games"]).count() == 0

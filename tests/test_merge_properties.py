@@ -1,7 +1,8 @@
 """Property-based tests (hypothesis) for the merge kernels
 (SURVEY.md §5.2.3): latest-wins upsert is idempotent, latest-wins, and
 key-unique; insert-if-absent never shrinks, never overwrites, and is
-idempotent — over arbitrary generated key/version data.
+idempotent; the absent rows an append-only table adds are exactly the
+incoming rows with a new key, and appending them twice adds nothing — over arbitrary generated key/version data.
 
 Example counts are small because each example runs Spark jobs; the
 generators still cover duplicate keys, ties, and empty frames.
@@ -13,6 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.merge import (
+    absent_rows,
     insert_if_absent,
     latest_wins,
 )
@@ -82,3 +84,19 @@ def test_insert_if_absent_properties(spark, old, new):
     # idempotence
     again = insert_if_absent(merged, new_df, ["k"])
     assert sorted(map(tuple, again.collect())) == got
+
+
+@given(old=ROWS, new=ROWS)
+@settings(**_SETTINGS)
+def test_absent_rows_properties(spark, old, new):
+    old_df, new_df = _df(spark, old), _df(spark, new)
+    fresh = absent_rows(old_df, new_df, ["k"])
+
+    # exactly the incoming rows (with multiplicity) whose key is new
+    old_keys = {k for k, _, _ in old}
+    want = sorted(r for r in new if r[0] not in old_keys)
+    assert sorted(map(tuple, fresh.collect())) == want
+
+    # appending them makes a replay a no-op
+    appended = old_df.unionByName(fresh)
+    assert absent_rows(appended, new_df, ["k"]).count() == 0

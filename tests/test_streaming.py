@@ -116,6 +116,60 @@ def test_incremental_gold_untouched_partitions(spark, tmp_path):
     assert (2024, 2) in months
 
 
+def test_repull_without_new_keys_writes_no_dim_file(spark, tmp_path):
+    """Dims are append-only on both the gold and the warehouse side: a
+    re-pull whose dim keys are all present already must leave every dim
+    file byte-identical, while the fact still takes the re-pull."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.warehouse import (
+        load_warehouse,
+        read_watermark,
+    )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.schemas import (
+        DIM_KEYS,
+    )
+
+    bronze = tmp_path / "bronze"
+    gold = tmp_path / "gold"
+    dw = tmp_path / "dw"
+    ckpt = tmp_path / "ckpt"
+    bronze.mkdir()
+    db = "chess_dw_repull_test"
+
+    def land(run_ts):
+        run_incremental_gold(
+            spark, str(bronze), str(gold), str(ckpt), demo.USERNAME, run_ts
+        )
+        tables = {"fact_games": read_gold_fact(spark, str(gold))}
+        for dim in DIM_KEYS:
+            tables[dim] = spark.read.parquet(str(gold / dim))
+        load_warehouse(spark, tables, location=str(dw), schema=db)
+
+    def dim_files():
+        out = {}
+        for root in [gold / d for d in DIM_KEYS] + [dw / d for d in DIM_KEYS]:
+            for dirpath, _dirs, files in os.walk(str(root)):
+                for f in files:
+                    p = os.path.join(dirpath, f)
+                    with open(p, "rb") as fh:
+                        out[p] = fh.read()
+        return out
+
+    try:
+        demo.write_month_json(str(bronze / "2024-01-games.json"), month=1)
+        land("2024-03-01 00:00:00")
+        before = dim_files()
+        assert any(str(dw) in p for p in before), "warehouse dims should exist"
+
+        demo.write_month_json(str(bronze / "2024-01-repull.json"), month=1)
+        land("2024-04-01 00:00:00")
+        assert dim_files() == before
+        assert read_watermark(spark, db).month == 4
+        fact = read_gold_fact(spark, str(gold))
+        assert fact.where(F.month("last_updated") == 4).count() == 45
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
 def test_incremental_gold_cross_month_correction(spark, tmp_path):
     """A re-pull that CORRECTS a game's date into a different month must
     retire the stale row in the old month's partition: exactly one row
