@@ -16,10 +16,12 @@ Here both are generic DataFrame combinators.  Scale notes:
   touches) or a Delta/Iceberg MERGE; the operator itself is the kernel
   either way.
 - ``absent_rows`` is a null-safe LEFT ANTI join: the incoming rows
-  whose key is new.  Append-only tables (the gold and warehouse dims)
-  write just these; ``insert_if_absent`` unions them with the existing
-  rows.  SQL ``NOT IN`` returns *no rows* if the subquery yields a
-  NULL; ``left_anti`` keeps non-matching rows.  We expose
+  whose key is new, where a NULL key matches a NULL key (Chess.com's
+  daily-game control ``1/86400`` formats to a NULL ``time_control``).
+  Append-only tables (the gold and warehouse dims) write just these,
+  through ``new_dim_rows``; ``insert_if_absent`` unions them with the
+  existing rows.  SQL ``NOT IN`` returns *no rows* if the subquery
+  yields a NULL; ``left_anti`` keeps non-matching rows.  We expose
   ``not_in_semantics=True`` to replicate the SQL behaviour exactly
   (SURVEY.md §4.3) and pin it with tests.
 """
@@ -27,9 +29,12 @@ Here both are generic DataFrame combinators.  Scale notes:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..session import local_df
 
 
 def latest_wins(
@@ -70,7 +75,8 @@ def absent_rows(
     not_in_semantics: bool = False,
 ) -> DataFrame:
     """Rows of ``incoming`` whose key is not already in ``existing`` — a
-    LEFT ANTI join on ``keys``.  These are exactly the rows an
+    LEFT ANTI join on ``keys``, null-safe (a NULL key is present when
+    ``existing`` holds a NULL key).  These are exactly the rows an
     append-only table must add, so appending them is idempotent: a
     replayed batch finds its keys present and adds nothing.
 
@@ -90,7 +96,33 @@ def absent_rows(
                 how="left",
             ).where(F.col("__poison").isNull()).drop("__poison")
             fresh = fresh.where(F.col(k).isNotNull())
-    return fresh.join(existing.select(*keys), list(keys), "left_anti")
+    on = reduce(
+        lambda a, b: a & b,
+        [F.col(f"__i.{k}").eqNullSafe(F.col(f"__e.{k}")) for k in keys],
+    )
+    return fresh.alias("__i").join(
+        existing.select(*keys).alias("__e"), on, "left_anti"
+    )
+
+
+def new_dim_rows(
+    spark: SparkSession,
+    existing: DataFrame | None,
+    incoming: DataFrame,
+    keys: Sequence[str],
+) -> DataFrame | None:
+    """The rows an append-only dim must add, as a one-file frame ready
+    to append — or None when every incoming key is present, so the
+    caller writes nothing.
+
+    Dims are broadcast-sized, so the absent rows come to the driver:
+    one job both finds them and tells whether there is anything to
+    write, and the append then reads driver-local rows, not the
+    ``existing``/``incoming`` lineage a second time."""
+    rows = absent_rows(existing, incoming, keys).collect()
+    if not rows:
+        return None
+    return local_df(spark, rows, incoming.schema).coalesce(1)
 
 
 def insert_if_absent(

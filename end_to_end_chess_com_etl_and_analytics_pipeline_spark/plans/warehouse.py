@@ -21,9 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import absent_rows, latest_wins
+from ..operators.merge import latest_wins, new_dim_rows
 from ..schemas import DIM_KEYS
-from ..session import local_df
 from ..sources.tables import WAREHOUSE_SCHEMA, create_warehouse
 
 
@@ -46,20 +45,16 @@ def load_warehouse(
 
     Each dim gets only the rows whose key it lacks, appended as one file;
     a load that brings no new key writes nothing to it.  A replayed load
-    finds its keys present, so the append is idempotent.  Dims are
-    broadcast-sized, so the new rows come to the driver: one job both
-    finds them and tells whether there is anything to write."""
+    finds its keys present, so the append is idempotent."""
     create_warehouse(spark, location=location, schema=schema)
 
     for dim, keys in DIM_KEYS.items():
         table = f"{schema}.{dim}"
         existing = spark.table(table)
         incoming = gold[dim].select(*existing.columns)
-        new_rows = absent_rows(existing, incoming, keys).collect()
-        if new_rows:
-            local_df(spark, new_rows, incoming.schema).coalesce(1).write.insertInto(
-                table, overwrite=False
-            )
+        fresh = new_dim_rows(spark, existing, incoming, keys)
+        if fresh is not None:
+            fresh.write.insertInto(table, overwrite=False)
 
     fact_table = f"{schema}.fact_games"
     existing_fact = spark.table(fact_table)

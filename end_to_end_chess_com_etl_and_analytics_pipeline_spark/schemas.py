@@ -124,6 +124,14 @@ FACT_GAMES_SCHEMA = T.StructType(
     ]
 )
 
+# The gold fact as stored by the incremental stream: the logical fact
+# plus its (year, month) partition columns.  Scans declare it, so none
+# spends a job inferring the schema from a footer.
+GOLD_FACT_SCHEMA = T.StructType(
+    FACT_GAMES_SCHEMA.fields
+    + [T.StructField("year", T.IntegerType()), T.StructField("month", T.IntegerType())]
+)
+
 DIM_OPENINGS_SCHEMA = T.StructType(
     [
         T.StructField("pgn_eco_url", T.StringType(), False),

@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from ..plans.gold import build_gold, merge_fact
 from ..plans.silver import bronze_to_silver
-from ..schemas import DIM_KEYS, DIM_SCHEMAS, FACT_GAMES_SCHEMA, RAW_GAME_SCHEMA
+from ..schemas import DIM_KEYS, DIM_SCHEMAS, GOLD_FACT_SCHEMA, RAW_GAME_SCHEMA
 from ..session import local_df
 from ..sources.tables import read_events_raw, repair_events_ts
 
@@ -50,24 +50,13 @@ def stream_bronze_to_silver(
     return bronze_to_silver(raw)
 
 
-# The gold fact as stored: the logical fact plus its (year, month)
-# partition columns.  Scans declare it, so none spends a job inferring
-# the schema from a footer.
-GOLD_FACT_SCHEMA = T.StructType(
-    FACT_GAMES_SCHEMA.fields
-    + [T.StructField("year", T.IntegerType()), T.StructField("month", T.IntegerType())]
-)
-
-
-def _scan_gold_fact(spark: SparkSession, fact_path: str) -> DataFrame:
-    return spark.read.schema(GOLD_FACT_SCHEMA).parquet(fact_path)
-
-
 def read_gold_fact(spark: SparkSession, gold_dir: str) -> DataFrame:
     """Read the incremental gold fact back without its (year, month)
     partition-layout columns — the logical fact schema."""
-    return _scan_gold_fact(spark, os.path.join(gold_dir, "fact_games")).drop(
-        "year", "month"
+    return (
+        spark.read.schema(GOLD_FACT_SCHEMA)
+        .parquet(os.path.join(gold_dir, "fact_games"))
+        .drop("year", "month")
     )
 
 
@@ -110,7 +99,7 @@ def run_incremental_gold(
         recover_pending_swaps,
         two_phase_partition_overwrite,
     )
-    from ..operators.merge import absent_rows
+    from ..operators.merge import new_dim_rows
     from ..sources.tables import fs_exists
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -130,9 +119,7 @@ def run_incremental_gold(
         # batch that brings no new key writes nothing.  Existing dim
         # files are never rewritten, so no crash point loses a dim's
         # history, and a replayed batch finds its keys present and
-        # appends nothing twice.  Dims are broadcast-sized, so the new
-        # rows come to the driver: one job both finds them and tells
-        # whether there is anything to write.
+        # appends nothing twice.
         for dim, keys in DIM_KEYS.items():
             dim_path = os.path.join(gold_dir, dim)
             existing_dim = (
@@ -140,11 +127,13 @@ def run_incremental_gold(
                 if fs_exists(spark, dim_path)
                 else None
             )
-            new_rows = absent_rows(existing_dim, gold[dim], keys).collect()
-            if new_rows:
-                local_df(spark, new_rows, gold[dim].schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(dim_path)
+            fresh = new_dim_rows(spark, existing_dim, gold[dim], keys)
+            if fresh is None and existing_dim is None:
+                # an idle first month (no games) still creates the dim,
+                # so readers of the gold layer always find it
+                fresh = local_df(spark, [], DIM_SCHEMAS[dim])
+            if fresh is not None:
+                fresh.write.mode("append").parquet(dim_path)
         # Months this batch touches — driver-sized (one row per month;
         # a monthly re-pull touches 1-2). Re-pulled games may carry
         # game_dates outside the bronze file's nominal month, so probe
@@ -187,7 +176,8 @@ def run_incremental_gold(
             )
             stale_months = {
                 (r["y"], r["m"])
-                for r in _scan_gold_fact(spark, fact_path)
+                for r in spark.read.schema(GOLD_FACT_SCHEMA)
+                .parquet(fact_path)
                 .select("game_url", "year", "month")
                 .where(~in_batch_months)
                 .join(F.broadcast(batch_keys), "game_url", "left_semi")
@@ -208,7 +198,10 @@ def run_incremental_gold(
             )
             # partition pruning: only the overlapping months are read
             existing = (
-                _scan_gold_fact(spark, fact_path).where(hit).drop("year", "month")
+                spark.read.schema(GOLD_FACT_SCHEMA)
+                .parquet(fact_path)
+                .where(hit)
+                .drop("year", "month")
             )
         merged = merge_fact(existing, batch_fact).localCheckpoint()
         out = merged.withColumn("year", F.year("game_date")).withColumn(

@@ -2,7 +2,8 @@
 (SURVEY.md §5.2.3): latest-wins upsert is idempotent, latest-wins, and
 key-unique; insert-if-absent never shrinks, never overwrites, and is
 idempotent; the absent rows an append-only table adds are exactly the
-incoming rows with a new key, and appending them twice adds nothing — over arbitrary generated key/version data.
+incoming rows with a new key, and appending them twice adds nothing —
+over arbitrary generated key/version data, NULL keys included.
 
 Example counts are small because each example runs Spark jobs; the
 generators still cover duplicate keys, ties, and empty frames.
@@ -21,7 +22,9 @@ from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.merge impor
 
 ROWS = st.lists(
     st.tuples(
-        st.integers(min_value=0, max_value=5),  # key: small range forces collisions
+        # key: small range forces collisions; NULL is a key like any other
+        # (a daily game's time_control formats to NULL)
+        st.one_of(st.none(), st.integers(min_value=0, max_value=5)),
         st.integers(min_value=0, max_value=10),  # version
         st.integers(min_value=0, max_value=100),  # payload
     ),
@@ -37,6 +40,12 @@ _SETTINGS = dict(
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "k: long, v: long, payload: long")
+
+
+def _sorted(rows):
+    """Rows as tuples in a total order (a NULL key does not compare
+    with an int)."""
+    return sorted(map(tuple, rows), key=repr)
 
 
 @given(old=ROWS, new=ROWS)
@@ -63,7 +72,7 @@ def test_latest_wins_properties(spark, old, new):
 
     # idempotence: merging the result with itself changes nothing
     again = latest_wins(merged, merged, ["k"], "v")
-    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, merged.collect()))
+    assert _sorted(again.collect()) == _sorted(merged.collect())
 
 
 @given(old=ROWS, new=ROWS)
@@ -71,7 +80,7 @@ def test_latest_wins_properties(spark, old, new):
 def test_insert_if_absent_properties(spark, old, new):
     old_df, new_df = _df(spark, old), _df(spark, new)
     merged = insert_if_absent(old_df, new_df, ["k"])
-    got = sorted(map(tuple, merged.collect()))
+    got = _sorted(merged.collect())
 
     # never shrinks, never overwrites: every distinct existing row survives
     for row in set(old):
@@ -83,7 +92,7 @@ def test_insert_if_absent_properties(spark, old, new):
 
     # idempotence
     again = insert_if_absent(merged, new_df, ["k"])
-    assert sorted(map(tuple, again.collect())) == got
+    assert _sorted(again.collect()) == got
 
 
 @given(old=ROWS, new=ROWS)
@@ -94,8 +103,8 @@ def test_absent_rows_properties(spark, old, new):
 
     # exactly the incoming rows (with multiplicity) whose key is new
     old_keys = {k for k, _, _ in old}
-    want = sorted(r for r in new if r[0] not in old_keys)
-    assert sorted(map(tuple, fresh.collect())) == want
+    want = _sorted(r for r in new if r[0] not in old_keys)
+    assert _sorted(fresh.collect()) == want
 
     # appending them makes a replay a no-op
     appended = old_df.unionByName(fresh)

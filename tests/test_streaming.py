@@ -119,7 +119,12 @@ def test_incremental_gold_untouched_partitions(spark, tmp_path):
 def test_repull_without_new_keys_writes_no_dim_file(spark, tmp_path):
     """Dims are append-only on both the gold and the warehouse side: a
     re-pull whose dim keys are all present already must leave every dim
-    file byte-identical, while the fact still takes the re-pull."""
+    file byte-identical, while the fact still takes the re-pull.  The
+    month holds a daily game, whose '1/86400' control formats to a NULL
+    time_control key: a NULL key is present like any other, so each dim
+    keeps one row per key, NULL included."""
+    import json
+
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.warehouse import (
         load_warehouse,
         read_watermark,
@@ -154,20 +159,75 @@ def test_repull_without_new_keys_writes_no_dim_file(spark, tmp_path):
                         out[p] = fh.read()
         return out
 
+    def write_month(name):
+        games = demo.month_payload(1)
+        games[0]["time_control"] = "1/86400"
+        games[0]["time_class"] = "daily"
+        (bronze / name).write_text(json.dumps(games))
+
+    def assert_one_row_per_key():
+        for dim, keys in DIM_KEYS.items():
+            for got in (
+                spark.read.parquet(str(gold / dim)),
+                spark.table(f"{db}.{dim}"),
+            ):
+                assert got.count() == got.select(*keys).distinct().count(), dim
+        tc = spark.table(f"{db}.dim_time_control")
+        assert tc.where(F.col("time_control").isNull()).count() == 1
+
     try:
-        demo.write_month_json(str(bronze / "2024-01-games.json"), month=1)
+        write_month("2024-01-games.json")
         land("2024-03-01 00:00:00")
+        assert_one_row_per_key()
         before = dim_files()
         assert any(str(dw) in p for p in before), "warehouse dims should exist"
 
-        demo.write_month_json(str(bronze / "2024-01-repull.json"), month=1)
+        write_month("2024-01-repull.json")
         land("2024-04-01 00:00:00")
         assert dim_files() == before
+        assert_one_row_per_key()
         assert read_watermark(spark, db).month == 4
         fact = read_gold_fact(spark, str(gold))
         assert fact.where(F.month("last_updated") == 4).count() == 45
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_incremental_gold_idle_first_month_creates_dims(spark, tmp_path):
+    """A first month with no games (Chess.com returns an empty games
+    array for an idle month) must still leave every gold dim readable,
+    and the next month's games then land in it."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.schemas import (
+        DIM_KEYS,
+    )
+
+    bronze = tmp_path / "bronze"
+    gold = tmp_path / "gold"
+    ckpt = tmp_path / "ckpt"
+    bronze.mkdir()
+    (bronze / "2024-01-games.json").write_text("[]")
+    run_incremental_gold(
+        spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+        "2024-03-01 00:00:00",
+    )
+    for dim in DIM_KEYS:
+        got = spark.read.parquet(str(gold / dim)).count()
+        # dim_results is a static seed; the others come from the games
+        assert got > 0 if dim == "dim_results" else got == 0, dim
+
+    demo.write_month_json(str(bronze / "2024-02-games.json"), month=2)
+    run_incremental_gold(
+        spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+        "2024-03-01 00:00:00",
+    )
+    raw = spark.createDataFrame(demo.month_payload(2), RAW_GAME_SCHEMA)
+    batch = build_gold(
+        spark, bronze_to_silver(raw), demo.USERNAME, "2024-03-01 00:00:00"
+    )
+    for dim in DIM_KEYS:
+        got = spark.read.parquet(str(gold / dim))
+        assert got.exceptAll(batch[dim]).count() == 0, dim
+        assert batch[dim].exceptAll(got).count() == 0, dim
 
 
 def test_incremental_gold_cross_month_correction(spark, tmp_path):
