@@ -38,6 +38,7 @@ from ..schemas import OPENINGS_CSV_SCHEMA, RAW_GAME_SCHEMA
 from ..sources import demo
 from ..sources.tables import read_json
 from ..streaming.pipeline import (
+    _events_stream,
     read_gold_fact,
     run_incremental_gold,
     run_stream_to_memory,
@@ -188,19 +189,33 @@ def c04_chess_openings_classified(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def st01_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming watermarked tumbling-window aggregate over
-    the events table, drained with availableNow — must equal the batch
-    tumbling aggregate (oracle = the same SQL as x09)."""
+def _staged_events_dir(sf_dir: str) -> str:
     stream_dir = tempfile.mkdtemp(prefix="events_stream_")
     shutil.copy(
         os.path.join(sf_dir, "events.parquet"),
         os.path.join(stream_dir, "events.parquet"),
     )
-    name = f"st_tumbling_{uuid.uuid4().hex[:8]}"
-    agg = streaming_tumbling_counts(spark, stream_dir, "1 hour", "30 minutes")
-    run_stream_to_memory(agg, name, output_mode="complete")
-    return spark.table(name).select(
+    return stream_dir
+
+
+def _drained_table(
+    stream_df: DataFrame, prefix: str, output_mode: str = "append"
+) -> DataFrame:
+    """Drain ``stream_df`` into a fresh uniquely named in-memory table
+    (streaming.pipeline.run_stream_to_memory) and return that table."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    run_stream_to_memory(stream_df, name, output_mode=output_mode)
+    return stream_df.sparkSession.table(name)
+
+
+def st01_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Structured Streaming watermarked tumbling-window aggregate over
+    the events table, drained with availableNow — must equal the batch
+    tumbling aggregate (oracle = the same SQL as x09)."""
+    agg = streaming_tumbling_counts(
+        spark, _staged_events_dir(sf_dir), "1 hour", "30 minutes"
+    )
+    return _drained_table(agg, "st_tumbling", output_mode="complete").select(
         "window_start",
         "event_type",
         "n_events",
@@ -226,34 +241,22 @@ def c06_chess_result_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _staged_events_dir(sf_dir: str) -> str:
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "events.parquet"),
-    )
-    return stream_dir
-
-
 def st02_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandasWithState sessionization over the events stream —
     custom per-user state (session ordinal + last event time).  Drained
     with availableNow it must equal the batch gaps-and-islands
     sessionize, so the oracle is x11's SQL."""
     sessions = streaming_stateful_sessions(spark, _staged_events_dir(sf_dir))
-    name = f"st_sessions_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(sessions, name, output_mode="append")
-    return spark.table(name)
+    return _drained_table(sessions, "st_sessions")
 
 
 def st03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark over a self-unioned events stream
     (every row arrives twice): the output must be each event exactly
     once — the oracle is a plain scan of the events table."""
-    deduped = streaming_dedup(spark, _staged_events_dir(sf_dir))
-    name = f"st_dedup_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(deduped, name, output_mode="append")
-    return spark.table(name)
+    return _drained_table(
+        streaming_dedup(spark, _staged_events_dir(sf_dir)), "st_dedup"
+    )
 
 
 _ST03_SQL = "SELECT event_id, ts, user_id, event_type FROM events"
@@ -292,39 +295,41 @@ def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes, never grows with the stream).  Drained with
     availableNow the inner join must equal the batch self-join — the
     oracle."""
-    from ..streaming.pipeline import _events_stream
+    joined = _view_purchase_join(spark, _staged_events_dir(sf_dir), "inner")
+    return _drained_table(joined, "st_ssj")
 
-    stream_dir = _staged_events_dir(sf_dir)
-    views = (
-        _events_stream(spark, stream_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
+
+def _view_purchase_join(
+    spark: SparkSession,
+    stream_dir: str,
+    how: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """st05/st08's stream-stream interval join over the events stream:
+    each view joins the same user's purchases within the following
+    hour, both sides watermarked 1 hour."""
+    def side(event_type: str, id_col: str, user_col: str, ts_col: str):
+        return (
+            _events_stream(spark, stream_dir, max_files_per_trigger)
+            .where(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(user_col),
+                F.col("ts").alias(ts_col),
+            )
+            .withWatermark(ts_col, "1 hour")
         )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        _events_stream(spark, stream_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
+
+    views = side("view", "view_id", "user_id", "view_ts")
+    purchases = side("purchase", "purchase_id", "p_user_id", "purchase_ts")
+    return views.join(
         purchases,
         F.expr(
             "user_id = p_user_id AND purchase_ts >= view_ts "
             "AND purchase_ts <= view_ts + interval 1 hour"
         ),
+        how,
     ).select("user_id", "view_id", "purchase_id")
-    name = f"st_ssj_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(joined, name, output_mode="append")
-    return spark.table(name)
 
 
 _ST05_SQL = """
@@ -403,47 +408,18 @@ def st08_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real event-time progress.  With the books closed, the drained
     stream must equal the batch LEFT JOIN (the oracle).  State stays
     bounded by interval + watermark delay at any stream length."""
-    from ..streaming.pipeline import _events_stream
-
     stream_dir = _staged_events_dir(sf_dir)
     _write_flush_files(os.path.join(stream_dir, "events.parquet"))
-    views = (
-        _events_stream(spark, stream_dir, max_files_per_trigger=1)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
+    joined = _view_purchase_join(
+        spark, stream_dir, "left_outer", max_files_per_trigger=1
     )
-    purchases = (
-        _events_stream(spark, stream_dir, max_files_per_trigger=1)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND purchase_ts >= view_ts "
-            "AND purchase_ts <= view_ts + interval 1 hour"
-        ),
-        "left_outer",
-    ).select("user_id", "view_id", "purchase_id")
-    name = f"st_ssloj_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(joined, name, output_mode="append")
     # Drop the flush sentinel's own row AFTER the drain: a stream-side
     # user_id filter is pushed through the left-outer join into BOTH
     # scans (left directly, right via the p_user_id = user_id equi
     # constraint), which prunes the flush rows at the source — before
     # they ever reach the watermark operators, silently defeating the
     # close-the-books mechanism (measured: 8 tail views withheld).
-    return spark.table(name).where(F.col("user_id") >= 0)
+    return _drained_table(joined, "st_ssloj").where(F.col("user_id") >= 0)
 
 
 _ST08_SQL = """
@@ -473,8 +449,6 @@ def st10_streaming_native_sessions(spark: SparkSession, sf_dir: str) -> DataFram
     flush rows at the scan and silently withhold the tail (the st08
     lesson, CONTRACTS.md).  Drained, the stream must equal x56's
     batch query, so the oracle is x56's SQL."""
-    from ..streaming.pipeline import _events_stream
-
     stream_dir = _staged_events_dir(sf_dir)
     _write_flush_files(os.path.join(stream_dir, "events.parquet"))
     sessions = (
@@ -490,11 +464,9 @@ def st10_streaming_native_sessions(spark: SparkSession, sf_dir: str) -> DataFram
             "n_events",
         )
     )
-    name = f"st_nsess_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(sessions, name, output_mode="append")
     # NULL-safe sentinel exclusion: NULL user_id sessions are real data
     # (the NULL probe injects them) and must survive this filter
-    return spark.table(name).where(
+    return _drained_table(sessions, "st_nsess").where(
         F.col("user_id").isNull() | (F.col("user_id") >= 0)
     )
 

@@ -471,13 +471,14 @@ def _span_base(docs: DataFrame, w: int, with_nt: bool) -> DataFrame:
 
 
 def _dup_flag_window(base: DataFrame) -> DataFrame:
-    """Cross-doc duplication flag, WINDOW formulation: min(doc_id) ≠
-    max(doc_id) over the gram-key window (O(1) window state — no
-    COUNT(DISTINCT), no collect_set).  ONE occurrence-sized exchange
-    that also sorts (WindowExec).  Wins when per-gram duplication is
-    LOW and most grams are unique: the partial aggregation the aggjoin
-    formulation leans on collapses nothing there, so its extra agg
-    exchange buys nothing."""
+    """Cross-doc duplication flag: min(doc_id) ≠ max(doc_id) over the
+    gram-key window (O(1) window state — no COUNT(DISTINCT), no
+    collect_set).  ONE occurrence-sized exchange that also sorts
+    (WindowExec).  It is the one formulation because it measured
+    fastest: a partial-agg/join formulation pays a second exchange plus
+    a join on near-dup corpora, where the duplicated-key set is about
+    every distinct gram (SCALE.md "Round 11: x68/x69 formulation
+    A/B"), and salting that aggregation did not recover it."""
     w_g = Window.partitionBy("__has_g", "__k")
     keep = [c for c in base.columns if c not in ("__has_g", "__k")]
     return base.select(
@@ -489,96 +490,7 @@ def _dup_flag_window(base: DataFrame) -> DataFrame:
     )
 
 
-def _dup_flag_aggjoin(base: DataFrame) -> DataFrame:
-    """Cross-doc duplication flag, PARTIAL-AGG/JOIN formulation:
-    collapse (gram-key → min_doc, max_doc) through a map-side partial
-    aggregation first — distinct grams ≪ occurrences when duplication
-    is high — keep only keys with min ≠ max, and join that
-    duplicated-key set back to the positions.  AQE broadcasts the set
-    while it fits the bar, skipping the occurrence-sized exchange
-    entirely; past the bar it degrades to a key-partitioned join whose
-    big-side exchange is the one the window formulation pays anyway
-    (minus its sort, plus the map-side-reduced agg exchange).
-
-    MEASURED LOSER (r11 A/B, SCALE.md "Round 11: x68/x69 formulation
-    A/B") — r10 predicted this formulation would win when per-gram
-    duplication is high (the 1000× replica decade, where the window
-    exchange went superlinear), but on the near-dup replica corpus the
-    dup-key set ≈ ALL distinct grams (replicas duplicate everything),
-    far over the broadcast bar, so the "self-gating" degradation is
-    the common case: base exchange + agg exchange + join loses to the
-    window's one exchange+sort at every measured corpus and scale
-    (replica 100×/1000×, hotgram, unique — 0.57-1.06× speedup, i.e.
-    mostly slowdown).  Kept as the measured alternative the probe
-    re-times each round, NOT the default."""
-    dup_keys = (
-        base.where("__has_g")
-        .groupBy("__k")
-        .agg(F.min("doc_id").alias("__dmin"), F.max("doc_id").alias("__dmax"))
-        .where(F.col("__dmin") != F.col("__dmax"))
-        .select("__k", F.lit(True).alias("__dup_k"))
-    )
-    keep = [base[c] for c in base.columns if c not in ("__has_g", "__k")]
-    return base.join(
-        dup_keys, (base["__has_g"]) & (base["__k"] == dup_keys["__k"]), "left"
-    ).select(
-        *keep,
-        F.coalesce(F.col("__dup_k"), F.lit(False)).alias("__dup"),
-    )
-
-
-def _dup_flag_saltagg(base: DataFrame, salts: int = 16) -> DataFrame:
-    """Cross-doc duplication flag, SALTED TWO-STAGE AGG formulation
-    (r11 verdict #7's skew experiment): stage 1 aggregates
-    (gram-key, salt) → (min_doc, max_doc) with the salt spreading a
-    hot gram's reduce rows over ``salts`` partitions (guide §2.5
-    two-level aggregation); stage 2 merges the salted partials per key
-    (min of mins / max of maxes — the same global extrema); the
-    duplicated-key set then joins back to the positions exactly like
-    :func:`_dup_flag_aggjoin`.  Identical output by construction.
-
-    MEASURED LOSER (r12 A/B, SCALE.md "Round 12: x68/x69 salted
-    aggregation") — kept behind the formulation switch as the measured
-    alternative, NOT the default."""
-    part = (
-        base.where("__has_g")
-        .groupBy(
-            "__k",
-            F.pmod(F.xxhash64("doc_id"), F.lit(int(salts))).alias("__salt"),
-        )
-        .agg(F.min("doc_id").alias("__pmin"), F.max("doc_id").alias("__pmax"))
-    )
-    dup_keys = (
-        part.groupBy("__k")
-        .agg(F.min("__pmin").alias("__dmin"), F.max("__pmax").alias("__dmax"))
-        .where(F.col("__dmin") != F.col("__dmax"))
-        .select("__k", F.lit(True).alias("__dup_k"))
-    )
-    keep = [base[c] for c in base.columns if c not in ("__has_g", "__k")]
-    return base.join(
-        dup_keys, (base["__has_g"]) & (base["__k"] == dup_keys["__k"]), "left"
-    ).select(
-        *keep,
-        F.coalesce(F.col("__dup_k"), F.lit(False)).alias("__dup"),
-    )
-
-
-def _dup_flagged(base: DataFrame, formulation: str) -> DataFrame:
-    """Dispatch to a duplication-flag formulation (identical output by
-    construction; tools/x68_ab_probe.py asserts it and SCALE.md records
-    the A/B timings that picked the default)."""
-    if formulation == "window":
-        return _dup_flag_window(base)
-    if formulation == "aggjoin":
-        return _dup_flag_aggjoin(base)
-    if formulation == "saltagg":
-        return _dup_flag_saltagg(base)
-    raise ValueError(f"unknown dup-flag formulation: {formulation!r}")
-
-
-def duplicate_spans(
-    docs: DataFrame, w: int = PASSAGE_W, formulation: str = "window"
-) -> DataFrame:
+def duplicate_spans(docs: DataFrame, w: int = PASSAGE_W) -> DataFrame:
     """Position-aware duplicated-span coverage per document.
 
     The cutting complement of :func:`passage_dedup`: x40 answers *how
@@ -602,14 +514,12 @@ def duplicate_spans(
     classic gaps-and-islands formulation, identical in Spark and the
     DuckDB oracle.
 
-    Shape at 100 TB: ONE corpus scan; the duplication flag is the
-    ``formulation`` choice (:func:`_dup_flag_window`, the r11 A/B
-    winner at every measured corpus/scale, vs the partial-agg/join
-    alternative :func:`_dup_flag_aggjoin`); the islands windows
+    Shape at 100 TB: ONE corpus scan; the duplication flag is
+    :func:`_dup_flag_window`'s one gram-key exchange; the islands windows
     exchange by doc_id; the (doc, island) and doc rollups reuse that
     partitioning (HashPartitioning(doc_id) satisfies both clusterings
     — no further exchange)."""
-    flagged = _dup_flagged(_span_base(docs, w, with_nt=True), formulation)
+    flagged = _dup_flag_window(_span_base(docs, w, with_nt=True))
     order = F.col("pos").asc_nulls_first()
     w_prev = (
         Window.partitionBy("doc_id")
@@ -725,9 +635,7 @@ FROM toks LEFT JOIN agg ON toks.doc_id = agg.doc_id
 """
 
 
-def span_cut_text(
-    docs: DataFrame, w: int = PASSAGE_W, formulation: str = "window"
-) -> DataFrame:
+def span_cut_text(docs: DataFrame, w: int = PASSAGE_W) -> DataFrame:
     """The ACTION twin of :func:`duplicate_spans`: emit each document's
     text with every cross-doc duplicated span removed (what the trainer
     actually feeds the tokenizer after exact-substring dedup), plus the
@@ -742,7 +650,7 @@ def span_cut_text(
     the family's NULL contract.
 
     Shape at 100 TB: dup-position detection is shared with x68
-    (:func:`_span_base` + the ``formulation`` flag choice); the
+    (:func:`_span_base` + :func:`_dup_flag_window`); the
     positions then COLLAPSE per doc (collect_list bounded by the doc's
     own token count — per-doc state, the same bound the token array
     itself has) and rejoin the corpus by doc_id.  The per-token cut is
@@ -755,7 +663,7 @@ def span_cut_text(
     toks = tokens("text")
     base = _span_base(docs, w, with_nt=False)
     dup_pos = (
-        _dup_flagged(base, formulation)
+        _dup_flag_window(base)
         .where(F.col("__dup"))
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("__ps"))
@@ -1037,7 +945,6 @@ def train_bigram_lm(
     docs: DataFrame,
     top_b: int = BIGRAM_TOP_B,
     counts: DataFrame | None = None,
-    grams: DataFrame | None = None,
 ) -> DataFrame:
     """The bigram half of the stupid-backoff artifact: the top
     ``top_b`` bigrams by corpus count, each with its PRECOMPUTED
@@ -1052,10 +959,9 @@ def train_bigram_lm(
     if counts is None:
         counts = token_counts(docs)
     uni = counts.withColumnRenamed("cnt", "ucnt")
-    if grams is None:
-        grams = _doc_bigrams(docs)
     bi = (
-        grams.where(F.col("g").isNotNull())
+        _doc_bigrams(docs)
+        .where(F.col("g").isNotNull())
         .groupBy("g")
         .agg(F.count("*").alias("cnt"))
     )
@@ -1134,9 +1040,7 @@ def x45_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the checkpoint trades one scan+tokenize for writing AND
     # re-reading corpus-scale executor storage — not the bounded-small
     # artifact the BM25 tf checkpoint materializes (guide §5: cache
-    # only when recompute costs more than the storage pressure).  The
-    # ``grams=`` plumbing stays: training and scoring still accept a
-    # shared stream for callers whose gram pass is genuinely expensive.
+    # only when recompute costs more than the storage pressure).
     big = train_bigram_lm(docs, counts=counts)
     vocab, stats = train_lm(docs, counts=counts)
     return score_bigram_lm(docs, big, vocab, stats)
@@ -1147,13 +1051,10 @@ def score_bigram_lm(
     big: DataFrame,
     vocab: DataFrame,
     stats: DataFrame,
-    grams: DataFrame | None = None,
 ) -> DataFrame:
     """Scoring half of x45 (see x45_bigram_lm): docs against frozen
-    bigram + unigram artifacts.  ``grams`` shares a precomputed
-    (doc_id, g) stream with training (see x45_bigram_lm)."""
-    if grams is None:
-        grams = _doc_bigrams(docs)
+    bigram + unigram artifacts."""
+    grams = _doc_bigrams(docs)
     has_g = F.col("g").isNotNull()
     w2 = F.substring_index(F.col("g"), " ", -1)
     scored = (

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -24,6 +25,27 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the artifact-write thread pools
 _ARROW_FLIP_LOCK = threading.Lock()
 _EXPR_CACHE_LOCK = threading.Lock()
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the ``with`` body only.
+
+    On exit — normal or raised — the caller's value is put back, or the
+    key is unset if the caller had not set it.  Session conf is global
+    to every thread and query, so a library function must not leave its
+    own setting behind; this is the package's one place that writes
+    session conf (a guard test keeps it that way).
+    """
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -70,8 +92,7 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         columns=names,
     )
     arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(arrow_conf)
-    if prev == "true":
+    if spark.conf.get(arrow_conf) == "true":
         return spark.createDataFrame(pdf, schema=st)
     # without Arrow the pandas path degrades to the same pickled-row
     # plan; the conf is runtime-settable and is the documented
@@ -84,15 +105,8 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     # artifact-write thread pools): the conf is session-global, and a
     # concurrent restore mid-creation would silently demote a sibling
     # to the pickled-row plan.
-    with _ARROW_FLIP_LOCK:
-        spark.conf.set(arrow_conf, "true")
-        try:
-            return spark.createDataFrame(pdf, schema=st)
-        finally:
-            if prev is None:
-                spark.conf.unset(arrow_conf)
-            else:
-                spark.conf.set(arrow_conf, prev)
+    with _ARROW_FLIP_LOCK, conf_scope(spark, arrow_conf, "true"):
+        return spark.createDataFrame(pdf, schema=st)
 
 
 _EXPR_CACHE = None  # weakref.WeakKeyDictionary[SparkSession, dict]

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from ..session import local_df
+from ..session import conf_scope, local_df
 
 from ..schemas import (
     DIM_RESULTS_SCHEMA,
@@ -72,15 +72,8 @@ def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
     try:
         return spark.read.parquet(path)
     except Exception:
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
+        with conf_scope(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
             return spark.read.parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
 
 
 _BYTE_SUFFIXES = {
@@ -143,6 +136,13 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
+def _hidden_path(name: str) -> bool:
+    """Spark's hidden-path rule for file sources: a name starting with
+    ``.``, or with ``_`` unless it is a ``key=val`` partition directory
+    (``__bucket=3``)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def raw_row_count(spark: SparkSession, path: str) -> int:
     """Raw row count of a parquet file/dir from FOOTER METADATA — the
     sizing heuristic several operators derive codebook/stride geometry
@@ -164,11 +164,15 @@ def raw_row_count(spark: SparkSession, path: str) -> int:
             # still finds no data files (delta/iceberg manifests, an
             # empty staging dir), fall through to the Spark count
             # rather than asserting "0 rows" from absence of evidence.
+            # Hidden paths are pruned as Spark's file index prunes them:
+            # `_delta_log/`, operators/commit.py's `.staged_<token>/`
+            # and the like hold parquet files that are not table data.
             total = 0
             n_files = 0
-            for root, _dirs, files in os.walk(p):
+            for root, dirs, files in os.walk(p):
+                dirs[:] = [d for d in dirs if not _hidden_path(d)]
                 for entry in files:
-                    if entry.endswith(".parquet"):
+                    if entry.endswith(".parquet") and not _hidden_path(entry):
                         n_files += 1
                         total += pq.ParquetFile(
                             os.path.join(root, entry)

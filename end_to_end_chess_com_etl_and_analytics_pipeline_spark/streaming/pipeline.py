@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from ..plans.gold import build_gold, merge_fact
 from ..plans.silver import bronze_to_silver
 from ..schemas import DIM_KEYS, DIM_SCHEMAS, GOLD_FACT_SCHEMA, RAW_GAME_SCHEMA
-from ..session import local_df
+from ..session import conf_scope, local_df
 from ..sources.tables import read_events_raw, repair_events_ts
 
 
@@ -57,6 +57,54 @@ def read_gold_fact(spark: SparkSession, gold_dir: str) -> DataFrame:
         spark.read.schema(GOLD_FACT_SCHEMA)
         .parquet(os.path.join(gold_dir, "fact_games"))
         .drop("year", "month")
+    )
+
+
+# Micro-batches here are month- or file-sized, not table-sized, and a
+# stateful operator keeps one state store (one commit per batch) per
+# shuffle partition: at a vanilla session's 200 partitions a drain
+# spends several times longer scheduling empty tasks and committing
+# stores than processing data.  So every drain runs at this
+# batch-scoped width and restores the caller's afterwards; a real
+# deployment sizes it to arrival volume and state size instead.
+_DRAIN_SHUFFLE_PARTITIONS = "8"
+
+
+def _drain(spark: SparkSession, writer) -> None:
+    """Start ``writer`` (a configured DataStreamWriter) with the
+    ``availableNow`` trigger — process the whole backlog, then stop —
+    and wait for it, at the batch-scoped shuffle width."""
+    with conf_scope(
+        spark, "spark.sql.shuffle.partitions", _DRAIN_SHUFFLE_PARTITIONS
+    ):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _append_stream(
+    spark: SparkSession, in_dir: str, kernel, out_path: str, checkpoint_dir: str
+) -> None:
+    """Drain a parquet file-source stream over ``in_dir``, one arriving
+    file per micro-batch, appending ``kernel(batch_df)`` to ``out_path``.
+    The checkpoint makes each file land exactly once.  The shape of
+    every ingest that runs against frozen artifacts: the caller builds
+    the artifacts once and closes ``kernel`` over them, so a batch's
+    output depends only on its own rows and the union of the appends
+    equals the one-shot batch computation."""
+    schema = spark.read.parquet(in_dir).schema  # footer probe
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        kernel(batch_df).write.mode("append").parquet(out_path)
+
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(append).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
 
 
@@ -239,25 +287,12 @@ def run_incremental_gold(
             drop_partitions=drops,
         )
 
-    # micro-batches are month-sized, not table-sized: a vanilla
-    # 200-partition session spends longer scheduling empty tasks than
-    # merging, so scope the shuffle width to the batch for the drain
-    # (a real deployment sizes this to arrival volume instead).
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            silver_stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        spark,
+        silver_stream.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+    )
 
 
 def streaming_tumbling_counts(
@@ -434,39 +469,20 @@ def streaming_incremental_dedup(
     ``availableNow`` drains the backlog then stops."""
     from ..operators.dedup import incremental_lsh_matches
 
-    schema = spark.read.parquet(batch_docs_dir).schema  # footer probe
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_docs_dir)
-    )
     index = spark.read.parquet(index_path)
-
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_lsh_matches(
+    _append_stream(
+        spark,
+        batch_docs_dir,
+        lambda batch_df: incremental_lsh_matches(
             index,
             batch_df,
             num_hashes=num_hashes,
             bands=bands,
             shingle_len=shingle_len,
-        ).write.mode("append").parquet(out_path)
-
-    # batch-scoped shuffle width (see run_incremental_gold)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        ),
+        out_path,
+        checkpoint_dir,
+    )
 
 
 def streaming_lm_gate(
@@ -494,12 +510,6 @@ def streaming_lm_gate(
     ``availableNow`` drains the backlog then stops."""
     from ..plans.quality import LM_KEEP_HI, LM_KEEP_LO, score_lm
 
-    schema = spark.read.parquet(batch_docs_dir).schema  # footer probe
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_docs_dir)
-    )
     # pin the frozen model frames ONCE: without the checkpoint every
     # micro-batch's scoring action re-scans (and re-broadcasts) the
     # vocab/stats parquets — model-artifact-sized, so pinning is O(V)
@@ -508,28 +518,13 @@ def streaming_lm_gate(
     stats = spark.read.parquet(stats_path).localCheckpoint()
     lo = LM_KEEP_LO if keep_lo is None else keep_lo
     hi = LM_KEEP_HI if keep_hi is None else keep_hi
-
-    def score(batch_df: DataFrame, batch_id: int) -> None:
-        score_lm(batch_df, vocab, stats, lo, hi).write.mode(
-            "append"
-        ).parquet(out_path)
-
-    # batch-scoped shuffle width (see run_incremental_gold)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(score)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _append_stream(
+        spark,
+        batch_docs_dir,
+        lambda batch_df: score_lm(batch_df, vocab, stats, lo, hi),
+        out_path,
+        checkpoint_dir,
+    )
 
 
 def streaming_bm25_scores(
@@ -559,12 +554,6 @@ def streaming_bm25_scores(
     ``availableNow`` drains the backlog then stops."""
     from ..operators.retrieval import bm25_score, bm25_tf
 
-    schema = spark.read.parquet(batch_docs_dir).schema  # footer probe
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_docs_dir)
-    )
     scalars = spark.read.parquet(scalars_path)
     qterms = spark.read.parquet(qterms_path).localCheckpoint()
     # prune the vocab-sized terms table to the batch's query tokens
@@ -583,28 +572,11 @@ def streaming_bm25_scores(
         .localCheckpoint()
     )
 
-    def score(batch_df: DataFrame, batch_id: int) -> None:
+    def score(batch_df: DataFrame) -> DataFrame:
         tf = bm25_tf(batch_df).where(F.col("token").isin(qtoks))
-        bm25_score(tf, terms, scalars, qterms, k1, b).write.mode(
-            "append"
-        ).parquet(out_path)
+        return bm25_score(tf, terms, scalars, qterms, k1, b)
 
-    # batch-scoped shuffle width (see run_incremental_gold)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(score)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _append_stream(spark, batch_docs_dir, score, out_path, checkpoint_dir)
 
 
 def streaming_archive_ingest(
@@ -631,33 +603,15 @@ def streaming_archive_ingest(
     ``availableNow`` drains the backlog then stops."""
     from ..sources.tables import fetch_archives
 
-    schema = spark.read.parquet(requests_dir).schema  # footer probe
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(requests_dir)
-    )
-
-    def fetch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fetch_archives(
+    _append_stream(
+        spark,
+        requests_dir,
+        lambda batch_df: fetch_archives(
             spark, batch_df, fetcher=fetcher, partitions=partitions
-        ).write.mode("append").parquet(bronze_path)
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(fetch_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        ),
+        bronze_path,
+        checkpoint_dir,
+    )
 
 
 def streaming_sketch_merge(
@@ -679,65 +633,21 @@ def streaming_sketch_merge(
     arriving file; the reader merges with one ≤D·W-row aggregation."""
     from ..operators.sketch import cms_cells
 
-    schema = spark.read.parquet(batch_dir).schema  # footer probe
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_dir)
-    )
-
-    def append_cells(batch_df: DataFrame, batch_id: int) -> None:
-        cms_cells(batch_df).write.mode("append").parquet(cells_path)
-
-    # batch-scoped shuffle width (see run_incremental_gold)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(append_cells)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _append_stream(spark, batch_dir, cms_cells, cells_path, checkpoint_dir)
 
 
 def run_stream_to_memory(
     stream_df: DataFrame, table_name: str, output_mode: str = "complete"
 ) -> None:
     """Drain a streaming aggregate into an in-memory table with
-    ``availableNow`` (process-everything-then-stop).
-
-    Stateful streaming cost scales with the state-store partition count
-    (one store + one commit per shuffle partition per batch), so the
-    drain temporarily drops ``spark.sql.shuffle.partitions`` for the
-    demo-scale fixture and restores the caller's value afterwards — a
-    vanilla 200-partition session spends ~5x longer on store commits
-    than on data otherwise.  On a real cluster the partition count is
-    sized to state volume instead.
-    """
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream_df.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    ``availableNow`` (process-everything-then-stop; see :func:`_drain`
+    for the shuffle width it runs at)."""
+    _drain(
+        stream_df.sparkSession,
+        stream_df.writeStream.format("memory")
+        .queryName(table_name)
+        .outputMode(output_mode),
+    )
 
 
 def streaming_ivf_pq_encode(
@@ -767,12 +677,6 @@ def streaming_ivf_pq_encode(
     codes and must hash-match x62's batch oracle."""
     from ..operators.pq import ivf_pq_corpus_encoder
 
-    schema = spark.read.parquet(batch_vecs_dir).schema  # footer probe
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_vecs_dir)
-    )
     # the codebooks are FROZEN for the whole stream, so the encode
     # projection's Column trees (centroid argmin + M codebook argmin
     # lambdas — ~0.5 s of driver-side expression construction,
@@ -782,26 +686,7 @@ def streaming_ivf_pq_encode(
     encoder = ivf_pq_corpus_encoder(
         spark, centroids, codebooks, vec_col, id_col, residual
     )
-
-    def enc(batch_df: DataFrame, batch_id: int) -> None:
-        encoder(batch_df).write.mode("append").parquet(out_path)
-
-    # batch-scoped shuffle width (see run_incremental_gold)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(enc)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _append_stream(spark, batch_vecs_dir, encoder, out_path, checkpoint_dir)
 
 
 def stage_events_by_time(events_path: str, out_dir: str, n_files: int = 4) -> int:
@@ -929,12 +814,7 @@ def run_streaming_scd2(
             f"n_buckets={persisted} (or rebuild the table)."
         )
 
-    raw_schema = read_events_raw(spark, events_dir).schema
-    stream = repair_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
+    stream = _events_stream(spark, events_dir, max_files_per_trigger)
 
     def bucket_of(col: Column) -> Column:
         # xxhash64(NULL) is the seed hash (non-NULL), so NULL users get
@@ -1019,19 +899,9 @@ def run_streaming_scd2(
             spark, out, dim_path, ["__bucket"], token=f"b{batch_id}"
         )
 
-    # batch-scoped shuffle width (see run_incremental_gold)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+    )

@@ -9,6 +9,7 @@ python-RDD scan)."""
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import types as T
 
@@ -73,8 +74,6 @@ def test_plan_has_no_python_rdd_scan(spark):
 
 
 def test_raw_row_count_matches_spark_count(spark):
-    import os
-
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.sources.tables import (
         raw_row_count,
     )
@@ -112,3 +111,31 @@ def test_raw_row_count_hive_partitioned_dir(spark, tmp_path):
     df = spark.range(100).selectExpr("id", "id % 3 AS k")
     df.write.partitionBy("k").mode("overwrite").parquet(out)
     assert raw_row_count(spark, out) == 100
+    # Hidden paths hold parquet that is not table data: a commit's
+    # `.staged_<token>/` copy (operators/commit.py) and a table
+    # format's `_delta_log/` checkpoints.  Spark's file index skips
+    # them, so the footer count must too.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stray = pa.table({"id": list(range(7))})
+    for hidden in (".staged_b0/k=1", "_delta_log"):
+        os.makedirs(os.path.join(out, hidden))
+        pq.write_table(stray, os.path.join(out, hidden, "stray.parquet"))
+    assert spark.read.parquet(out).count() == 100
+    assert raw_row_count(spark, out) == 100
+
+
+def test_raw_row_count_underscore_partition_dir(spark, tmp_path):
+    """A ``_``-prefixed name holding ``=`` is a partition directory
+    (run_streaming_scd2 lays out ``__bucket=<n>/``), not a hidden path;
+    Spark reads it, so the footer count must count it."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.sources.tables import (
+        raw_row_count,
+    )
+
+    out = str(tmp_path / "bucketed")
+    spark.range(50).selectExpr("id", "id % 4 AS __bucket").write.partitionBy(
+        "__bucket"
+    ).parquet(out)
+    assert raw_row_count(spark, out) == spark.read.parquet(out).count() == 50
