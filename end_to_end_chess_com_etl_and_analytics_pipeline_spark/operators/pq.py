@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..functions.fastlit import array_lit
 from ..functions.rounding import round_fixed
 from ..functions.vectors import usable_vec
-from ..session import local_df
+from ..session import local_df, run_concurrently
 from .clustering import _sq_dist, kmeans
 
 Codebooks = list[list[tuple[int, list[float]]]]  # [subspace][(code, sub)]
@@ -617,11 +617,10 @@ def ivf_pq_build_index(
 ) -> None:
     """Persist the FULL IVF-PQ index as parquet artifacts under
     ``path`` (codes/, centroids/, codebooks/, meta/) — the ANN analog
-    of retrieval.bm25_build_index (r8 verdict #5: the registered x62
-    rebuilt codebooks and re-encoded the corpus per query batch; the
-    production shape trains/encodes on rebuild cadence and serves
-    arbitrary later batches from the artifact, exactly st12's frozen
-    contract but persisted for batch scoring too).
+    of retrieval.bm25_build_index: the production shape trains/encodes
+    on rebuild cadence and serves arbitrary later batches from the
+    artifact, exactly st12's frozen contract but persisted for batch
+    scoring too.
 
     The codes table is range-laid-out by ``__cell`` and sorted within
     partitions, so a query batch's ``__cell IN (probed cells)`` scan
@@ -632,7 +631,6 @@ def ivf_pq_build_index(
     contract; persisting them makes the artifact self-describing — a
     scorer needs only ``path``."""
     import os
-    from concurrent.futures import ThreadPoolExecutor
 
     spark = corpus.sparkSession
     codes = ivf_pq_encode_corpus(
@@ -642,78 +640,55 @@ def ivf_pq_build_index(
     # repartitionByRange first runs a SAMPLING job over its child to
     # pick range bounds, so without this the full scan+argmin encode
     # executes twice (guide §1.2: don't compute things you throw
-    # away).  ``persist`` instead of the r11 ``localCheckpoint``: the
-    # sampling job itself computes the encode and populates the cache
-    # as a side effect, so the standalone eager-checkpoint job
-    # disappears (r12: build 3 jobs → 2; one fewer full pass over the
-    # cached codes at scale — checkpoint paid write-blocks + sampling
-    # re-read, persist folds them into the sampling pass).  The cached
-    # codes are ~40 B/row — the compressed representation, far smaller
-    # than the raw vectors the encode reads; eviction under pressure
-    # just recomputes that slice of the deterministic encode.  The
-    # cache is released before return — nothing persists across
-    # queries (r12 A/B: persist 0.805 s vs checkpoint 0.758 s best at
-    # sf0.1, a tie within the rep spread; the exact-count explicit-
-    # bounds layout variant measured 0.910 s and was rejected).
+    # away).  ``persist`` instead of ``localCheckpoint``: the sampling
+    # job itself computes the encode and populates the cache as a side
+    # effect, so the standalone eager-checkpoint job disappears (build
+    # 3 jobs → 2; one fewer full pass over the cached codes at scale —
+    # checkpoint paid write-blocks + sampling re-read, persist folds
+    # them into the sampling pass).  The cached codes are ~40 B/row —
+    # the compressed representation, far smaller than the raw vectors
+    # the encode reads; eviction under pressure just recomputes that
+    # slice of the deterministic encode.  The cache is released before
+    # return — nothing persists across queries (A/B: persist 0.805 s vs
+    # checkpoint 0.758 s best at sf0.1, a tie within the rep spread;
+    # the exact-count explicit-bounds layout variant measured 0.910 s
+    # and was rejected).
     codes = codes.persist()
 
-    # the four artifact writes are independent — submit them from a
-    # small thread pool so the three tiny metadata writes overlap the
-    # codes write instead of queueing behind it (guide §2.6: Spark
-    # schedules concurrent jobs happily; actions are only sequential
-    # because driver code calls them sequentially)
-    def _write_codes() -> None:
-        (
-            codes.repartitionByRange("__cell")
+    def small_write(name: str, rows: list, schema: str):
+        # a driver-sized model table, one file
+        return lambda: local_df(spark, rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, name))
+
+    # the four artifact writes are independent — the three tiny
+    # model writes overlap the codes write instead of queueing behind it
+    try:
+        run_concurrently(
+            lambda: codes.repartitionByRange("__cell")
             .sortWithinPartitions("__cell")
             .write.mode("overwrite")
-            .parquet(os.path.join(path, "codes"))
+            .parquet(os.path.join(path, "codes")),
+            small_write(
+                "centroids",
+                [(int(cid), [float(v) for v in vec]) for cid, vec in centroids],
+                "cid long, cv array<double>",
+            ),
+            small_write(
+                "codebooks",
+                [
+                    (j, int(code), [float(v) for v in sub])
+                    for j, book in enumerate(codebooks)
+                    for code, sub in book
+                ],
+                "subspace int, code int, cv array<double>",
+            ),
+            small_write(
+                "meta",
+                [(len(codebooks), bool(residual))],
+                "m int, residual boolean",
+            ),
         )
-
-    def _write_centroids() -> None:
-        local_df(
-            spark,
-            [(int(cid), [float(v) for v in vec]) for cid, vec in centroids],
-            "cid long, cv array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
-        )
-
-    def _write_codebooks() -> None:
-        local_df(
-            spark,
-            [
-                (j, int(code), [float(v) for v in sub])
-                for j, book in enumerate(codebooks)
-                for code, sub in book
-            ],
-            "subspace int, code int, cv array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "codebooks")
-        )
-
-    def _write_meta() -> None:
-        local_df(
-            spark,
-            [(len(codebooks), bool(residual))],
-            "m int, residual boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "meta")
-        )
-
-    try:
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = [
-                pool.submit(fn)
-                for fn in (
-                    _write_codes,
-                    _write_centroids,
-                    _write_codebooks,
-                    _write_meta,
-                )
-            ]
-            for f in futures:
-                f.result()
     finally:
         codes.unpersist()
 
@@ -730,29 +705,10 @@ def read_ivf_pq_index(
     from ..sources.tables import read_parquet_noinfer
 
     codes = read_parquet_noinfer(spark, os.path.join(path, "codes"))
-    # the three metadata artifacts are driver-sized by the build
-    # contract (centroids ~100 rows, codebooks M·k rows, meta 1 row):
-    # read them with pyarrow straight on the driver — three Spark
-    # collect jobs over few-KB files cost ~0.5 s of fixed job overhead
-    # EACH (guide §5: the driver should do almost no data work, but
-    # driver-sized metadata is exactly what it should read itself).
-    # Spark-collect fallback for anything pyarrow can't read
-    # (non-local FS, encrypted footers).
-    try:
-        cent_rows, book_rows, meta_rows = (
-            _read_small_parquet(os.path.join(path, name))
-            for name in ("centroids", "codebooks", "meta")
-        )
-    except Exception:
-        cent_rows = spark.read.parquet(
-            os.path.join(path, "centroids")
-        ).collect()
-        book_rows = spark.read.parquet(
-            os.path.join(path, "codebooks")
-        ).collect()
-        meta_rows = [
-            spark.read.parquet(os.path.join(path, "meta")).first()
-        ]
+    cent_rows, book_rows, meta_rows = (
+        _read_small_parquet(spark, os.path.join(path, name))
+        for name in ("centroids", "codebooks", "meta")
+    )
     cents = sorted(
         (r["cid"], [float(v) for v in r["cv"]]) for r in cent_rows
     )
@@ -765,24 +721,22 @@ def read_ivf_pq_index(
     return codes, cents, books, bool(meta["residual"])
 
 
-def _read_small_parquet(path: str) -> list[dict]:
-    """Driver-side read of a TINY parquet dir (a coalesce(1) metadata
-    artifact): list of plain row dicts via pyarrow — no Spark job.
-    Raises for non-local schemes so callers fall back to Spark."""
-    import os
-
+def _read_small_parquet(spark, path: str) -> list:
+    """The rows of a TINY parquet dir (a coalesce(1) metadata artifact:
+    centroids ~100 rows, codebooks M·k rows, meta 1 row), indexable by
+    column name.  A local path is read with pyarrow straight on the
+    driver — a Spark collect job over a few-KB file costs ~0.5 s of
+    fixed job overhead, and driver-sized metadata is exactly what the
+    driver should read itself; any other scheme is collected through
+    Spark."""
     import pyarrow.parquet as pq
 
-    p = path.removeprefix("file:")
-    files = sorted(
-        os.path.join(p, f)
-        for f in os.listdir(p)
-        if f.endswith(".parquet")
-    )
-    out: list[dict] = []
-    for f in files:
-        out.extend(pq.read_table(f).to_pylist())
-    return out
+    from ..sources.tables import local_data_files
+
+    files = local_data_files(path)
+    if not files:
+        return spark.read.parquet(path).collect()
+    return [row for f in files for row in pq.read_table(f).to_pylist()]
 
 
 def py_probe_cells(

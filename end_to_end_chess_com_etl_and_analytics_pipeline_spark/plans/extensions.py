@@ -46,7 +46,7 @@ from ..operators.dedup import (
 from ..operators.similarity import brute_force_topk, ivf_topk, mmr_rerank
 from ..operators.windows import sessionize, sliding_agg, tumbling_agg
 from ..sources.tables import load_table, raw_row_count, read_parquet_noinfer
-from ..session import local_df
+from ..session import local_df, run_concurrently, scratch_dir
 
 # ---------------------------------------------------------------------------
 # shared oracle-SQL building blocks
@@ -950,8 +950,6 @@ def st11_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot x58 by construction (a doc's scores depend only on its own
     tokens + the frozen index), so the oracle is x58's SQL."""
     import os as _os
-    import shutil
-    import tempfile
 
     from ..operators.retrieval import (
         bm25_index,
@@ -961,10 +959,9 @@ def st11_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import streaming_bm25_scores
 
     docs = load_table(spark, "documents", sf_dir)
-    root = tempfile.mkdtemp(prefix="st11_")
-    try:
-        # tokenize ONCE (r11): terms, scalars, and the derived qterms
-        # are three consumers of tf's tokenize+agg lineage — without
+    with scratch_dir("st11_") as root:
+        # tokenize ONCE: terms, scalars, and the derived qterms are
+        # three consumers of tf's tokenize+agg lineage — without
         # materialization each artifact write re-tokenized the corpus
         # (same fix as bm25_topk / write_bm25_index)
         tf = bm25_tf(docs).localCheckpoint()
@@ -979,19 +976,13 @@ def st11_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             for n in ("terms", "scalars", "qterms", "batch", "scores", "ckpt")
         }
         # the four artifact writes are independent — overlap them
-        # (guide §2.6) instead of paying four sequential job tails
-        from concurrent.futures import ThreadPoolExecutor
-
-        writes = [
+        run_concurrently(
             lambda: terms.write.parquet(paths["terms"]),
             lambda: scalars.write.parquet(paths["scalars"]),
             lambda: qterms.write.parquet(paths["qterms"]),
             # several arriving files → several micro-batches
             lambda: docs.repartition(3).write.parquet(paths["batch"]),
-        ]
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for fut in [pool.submit(w) for w in writes]:
-                fut.result()
+        )
         streaming_bm25_scores(
             spark,
             paths["batch"],
@@ -1001,12 +992,9 @@ def st11_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             paths["scores"],
             paths["ckpt"],
         )
-        out = bm25_rank_topk(
+        return bm25_rank_topk(
             read_parquet_noinfer(spark, paths["scores"]), _X58_K
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 _X58_SCORE = round_fixed_sql(
@@ -1061,9 +1049,8 @@ _X58_SQL = _x58_sql(0)
 
 
 def x61_bm25_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 against a PERSISTED index (r6 verdict latent #4: the batch
-    path rebuilt the index per query batch; st11 froze only
-    terms/scalars).  Build + persist the full index ONCE
+    """BM25 against a PERSISTED index (the batch path rebuilds the
+    index per query batch; st11 freezes only terms/scalars).  Build + persist the full index ONCE
     (operators/retrieval.py::bm25_build_index — tf range-laid-out by
     token, so scans prune row groups), then score a SECOND query batch
     (the corpus's terms ranked 9..16 by total count — disjoint from
@@ -1073,15 +1060,8 @@ def x61_bm25_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is O(postings of the query terms), independent of corpus size
     (SCALE.md's persisted-vs-rebuild row).  Oracle: the x58 SQL with
     the query window OFFSET by 8."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="x61_")
-    try:
-        out = x61_scoring_frame(spark, sf_dir, root).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    with scratch_dir("x61_") as root:
+        return x61_scoring_frame(spark, sf_dir, root).localCheckpoint()
 
 
 def x61_scoring_frame(
@@ -1092,8 +1072,7 @@ def x61_scoring_frame(
     (tools/explain_audit.py) can explain the real scoring plan — the
     pushed ``token IN (...)`` filter on the tf scan — instead of the
     ``Scan ExistingRDD`` the registry entry's localCheckpoint leaves
-    behind (r7 verdict: the pushdown claim was backed by tests and the
-    probe but invisible in PLANS.md).  Caller owns ``root``'s lifetime:
+    behind.  Caller owns ``root``'s lifetime:
     the frame reads from it lazily."""
     from ..operators.retrieval import bm25_build_index, bm25_topk_from_index
 
@@ -1621,8 +1600,6 @@ def st12_streaming_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ analog of st11's frozen BM25 index and st06's persisted LSH
     index)."""
     import os as _os
-    import shutil
-    import tempfile
 
     from ..operators.pq import ivf_pq_topk_from_codes
     from ..streaming.pipeline import streaming_ivf_pq_encode
@@ -1633,8 +1610,7 @@ def st12_streaming_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id long, cand_id long, adc_d2 double, rnk int"
         )
-    root = tempfile.mkdtemp(prefix="st12_")
-    try:
+    with scratch_dir("st12_") as root:
         batch_dir = _os.path.join(root, "batch")
         fin.select("vec_id", "embedding").repartition(3).write.parquet(
             batch_dir
@@ -1649,7 +1625,7 @@ def st12_streaming_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(root, "ckpt"),
         )
         queries = _model_queries(spark, fin, init, 0, _X62_NQ)
-        out = ivf_pq_topk_from_codes(
+        return ivf_pq_topk_from_codes(
             read_parquet_noinfer(spark, codes_dir),
             queries,
             cents,
@@ -1657,15 +1633,12 @@ def st12_streaming_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=_X62_K,
             nprobe=_X62_NPROBE,
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 def x65_ivf_pq_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ against a PERSISTED index (r8 verdict #5: the registered
-    x62 re-derived codebooks and re-encoded the corpus on every call —
-    honest in SCALE.md but not the production shape).  Build + persist
+    """IVF-PQ against a PERSISTED index (x62 re-derives codebooks and
+    re-encodes the corpus on every call — not the production shape).
+    Build + persist
     the full index ONCE (operators/pq.py::ivf_pq_build_index — codes
     range-laid-out by cell so scans prune row groups), then score a
     SECOND query batch (the finite vectors ranked {_X62_NQ}..{2·_X62_NQ}
@@ -1676,15 +1649,8 @@ def x65_ivf_pq_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is O(postings of the probed cells), independent of corpus
     size.  Oracle: the x62 SQL with the query window OFFSET by
     {_X62_NQ}."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="x65_")
-    try:
-        out = x65_scoring_frame(spark, sf_dir, root).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    with scratch_dir("x65_") as root:
+        return x65_scoring_frame(spark, sf_dir, root).localCheckpoint()
 
 
 def x65_scoring_frame(
@@ -2249,17 +2215,14 @@ def st09_streaming_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch equals the one-shot batch sketch cell-for-cell — so the
     oracle is x53's SQL, and a drifting merge hash-fails the driver."""
     import os as _os
-    import shutil
-    import tempfile
 
     from ..streaming.pipeline import streaming_sketch_merge
 
     ev = load_table(spark, "events", sf_dir)
-    root = tempfile.mkdtemp(prefix="st09_")
-    batch_dir = _os.path.join(root, "batch")
-    cells_path = _os.path.join(root, "cells")
-    ckpt = _os.path.join(root, "ckpt")
-    try:
+    with scratch_dir("st09_") as root:
+        batch_dir = _os.path.join(root, "batch")
+        cells_path = _os.path.join(root, "cells")
+        ckpt = _os.path.join(root, "ckpt")
         # several arriving files → several micro-batch sketches to merge
         ev.select(_cms_item().alias("item")).where(
             F.col("item").isNotNull()
@@ -2269,10 +2232,8 @@ def st09_streaming_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_parquet_noinfer(spark, cells_path)
             .groupBy("seed", "bucket")
             .agg(F.sum("cell_cnt").alias("cell_cnt"))
-            .localCheckpoint()  # pin before the temp tree disappears
+            .localCheckpoint()  # pin before the scratch dir disappears
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     counts = (
         load_table(spark, "events", sf_dir)
         .select(_cms_item().alias("item"))
@@ -2896,8 +2857,7 @@ def _exact_cosine_pool(usable: DataFrame, cand: DataFrame) -> DataFrame:
 
 
 def x67_persisted_ann_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production RAG serving shape as a SCORED query (r9 verdict
-    "What's missing" #3): candidate generation FROM the persisted
+    """The production RAG serving shape as a SCORED query: candidate generation FROM the persisted
     IVF-PQ artifact — x65's build-once index, scoring a LATER disjoint
     query batch (the finite vectors ranked {_X62_NQ}..{2·_X62_NQ}, the
     x61 offset pattern) with the codes scan pushed down to
@@ -2910,15 +2870,8 @@ def x67_persisted_ann_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     x62 ANN CTE chain with the OFFSET query batch feeding the shared
     x64 greedy chain — every half reused from a parent oracle, so none
     can drift."""
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="x67_")
-    try:
-        out = x67_scoring_frame(spark, sf_dir, root).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    with scratch_dir("x67_") as root:
+        return x67_scoring_frame(spark, sf_dir, root).localCheckpoint()
 
 
 def x67_scoring_frame(

@@ -19,12 +19,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from ..session import local_df
+from ..session import local_df, scratch_dir
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_fixed, round_fixed_sql
@@ -189,33 +188,39 @@ def c04_chess_openings_classified(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _staged_events_dir(sf_dir: str) -> str:
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "events.parquet"),
-    )
-    return stream_dir
-
-
-def _drained_table(
-    stream_df: DataFrame, prefix: str, output_mode: str = "append"
+def _drained_events(
+    sf_dir: str,
+    prefix: str,
+    build: Callable[[str], DataFrame],
+    output_mode: str = "append",
+    flush: bool = False,
 ) -> DataFrame:
-    """Drain ``stream_df`` into a fresh uniquely named in-memory table
-    (streaming.pipeline.run_stream_to_memory) and return that table."""
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(stream_df, name, output_mode=output_mode)
-    return stream_df.sparkSession.table(name)
+    """Copy the events file into a scratch dir, open ``build(dir)`` —
+    a stream over it — and drain that stream into a fresh uniquely
+    named in-memory table (streaming.pipeline.run_stream_to_memory),
+    which outlives the scratch dir.  ``flush`` adds the
+    close-the-books files of :func:`_write_flush_files`."""
+    with scratch_dir("events_stream_") as stream_dir:
+        events = os.path.join(stream_dir, "events.parquet")
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), events)
+        if flush:
+            _write_flush_files(events)
+        stream_df = build(stream_dir)
+        name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+        run_stream_to_memory(stream_df, name, output_mode=output_mode)
+        return stream_df.sparkSession.table(name)
 
 
 def st01_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming watermarked tumbling-window aggregate over
     the events table, drained with availableNow — must equal the batch
     tumbling aggregate (oracle = the same SQL as x09)."""
-    agg = streaming_tumbling_counts(
-        spark, _staged_events_dir(sf_dir), "1 hour", "30 minutes"
-    )
-    return _drained_table(agg, "st_tumbling", output_mode="complete").select(
+    return _drained_events(
+        sf_dir,
+        "st_tumbling",
+        lambda d: streaming_tumbling_counts(spark, d, "1 hour", "30 minutes"),
+        output_mode="complete",
+    ).select(
         "window_start",
         "event_type",
         "n_events",
@@ -246,16 +251,17 @@ def st02_streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFr
     custom per-user state (session ordinal + last event time).  Drained
     with availableNow it must equal the batch gaps-and-islands
     sessionize, so the oracle is x11's SQL."""
-    sessions = streaming_stateful_sessions(spark, _staged_events_dir(sf_dir))
-    return _drained_table(sessions, "st_sessions")
+    return _drained_events(
+        sf_dir, "st_sessions", lambda d: streaming_stateful_sessions(spark, d)
+    )
 
 
 def st03_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark over a self-unioned events stream
     (every row arrives twice): the output must be each event exactly
     once — the oracle is a plain scan of the events table."""
-    return _drained_table(
-        streaming_dedup(spark, _staged_events_dir(sf_dir)), "st_dedup"
+    return _drained_events(
+        sf_dir, "st_dedup", lambda d: streaming_dedup(spark, d)
     )
 
 
@@ -275,16 +281,17 @@ def st04_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         demo.write_month_json(
             os.path.join(bronze_dir, f"2024-{m:02d}-games.json"), month=m
         )
-    work = tempfile.mkdtemp(prefix="st04_gold_")
-    run_incremental_gold(
-        spark,
-        bronze_dir,
-        os.path.join(work, "gold"),
-        os.path.join(work, "ckpt"),
-        demo.USERNAME,
-        "2024-03-01 00:00:00",
-    )
-    return read_gold_fact(spark, os.path.join(work, "gold"))
+    with scratch_dir("st04_gold_") as work:
+        run_incremental_gold(
+            spark,
+            bronze_dir,
+            os.path.join(work, "gold"),
+            os.path.join(work, "ckpt"),
+            demo.USERNAME,
+            "2024-03-01 00:00:00",
+        )
+        # pin the fact before the scratch dir disappears
+        return read_gold_fact(spark, os.path.join(work, "gold")).localCheckpoint()
 
 
 def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,8 +302,9 @@ def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes, never grows with the stream).  Drained with
     availableNow the inner join must equal the batch self-join — the
     oracle."""
-    joined = _view_purchase_join(spark, _staged_events_dir(sf_dir), "inner")
-    return _drained_table(joined, "st_ssj")
+    return _drained_events(
+        sf_dir, "st_ssj", lambda d: _view_purchase_join(spark, d, "inner")
+    )
 
 
 def _view_purchase_join(
@@ -408,10 +416,13 @@ def st08_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from real event-time progress.  With the books closed, the drained
     stream must equal the batch LEFT JOIN (the oracle).  State stays
     bounded by interval + watermark delay at any stream length."""
-    stream_dir = _staged_events_dir(sf_dir)
-    _write_flush_files(os.path.join(stream_dir, "events.parquet"))
-    joined = _view_purchase_join(
-        spark, stream_dir, "left_outer", max_files_per_trigger=1
+    drained = _drained_events(
+        sf_dir,
+        "st_ssloj",
+        lambda d: _view_purchase_join(
+            spark, d, "left_outer", max_files_per_trigger=1
+        ),
+        flush=True,
     )
     # Drop the flush sentinel's own row AFTER the drain: a stream-side
     # user_id filter is pushed through the left-outer join into BOTH
@@ -419,7 +430,7 @@ def st08_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # constraint), which prunes the flush rows at the source — before
     # they ever reach the watermark operators, silently defeating the
     # close-the-books mechanism (measured: 8 tail views withheld).
-    return _drained_table(joined, "st_ssloj").where(F.col("user_id") >= 0)
+    return drained.where(F.col("user_id") >= 0)
 
 
 _ST08_SQL = """
@@ -449,26 +460,25 @@ def st10_streaming_native_sessions(spark: SparkSession, sf_dir: str) -> DataFram
     flush rows at the scan and silently withhold the tail (the st08
     lesson, CONTRACTS.md).  Drained, the stream must equal x56's
     batch query, so the oracle is x56's SQL."""
-    stream_dir = _staged_events_dir(sf_dir)
-    _write_flush_files(os.path.join(stream_dir, "events.parquet"))
-    sessions = (
-        _events_stream(spark, stream_dir, max_files_per_trigger=1)
-        .where(F.col("ts").isNotNull())
-        .withWatermark("ts", "1 hour")
-        .groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end_gap"),
-            "n_events",
+    def sessions(stream_dir: str) -> DataFrame:
+        return (
+            _events_stream(spark, stream_dir, max_files_per_trigger=1)
+            .where(F.col("ts").isNotNull())
+            .withWatermark("ts", "1 hour")
+            .groupBy("user_id", F.session_window("ts", "30 minutes"))
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                "user_id",
+                F.col("session_window.start").alias("session_start"),
+                F.col("session_window.end").alias("session_end_gap"),
+                "n_events",
+            )
         )
-    )
+
+    drained = _drained_events(sf_dir, "st_nsess", sessions, flush=True)
     # NULL-safe sentinel exclusion: NULL user_id sessions are real data
     # (the NULL probe injects them) and must survive this filter
-    return _drained_table(sessions, "st_nsess").where(
-        F.col("user_id").isNull() | (F.col("user_id") >= 0)
-    )
+    return drained.where(F.col("user_id").isNull() | (F.col("user_id") >= 0))
 
 
 def st13_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,19 +489,20 @@ def st13_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     history recompute (streaming.pipeline.run_streaming_scd2).  Drained
     with availableNow the table must equal the batch SCD2 build, so the
     oracle is q25's SQL."""
-    stream_dir = tempfile.mkdtemp(prefix="st13_events_")
-    n = stage_events_by_time(
-        os.path.join(sf_dir, "events.parquet"), stream_dir, n_files=4
-    )
-    assert n >= 1
-    work = tempfile.mkdtemp(prefix="st13_scd2_")
-    dim_path = os.path.join(work, "dim_history")
-    run_streaming_scd2(
-        spark, stream_dir, dim_path, os.path.join(work, "ckpt")
-    )
-    return spark.read.parquet(dim_path).select(
-        "user_id", "attr_value", "valid_from", "valid_to", "is_current"
-    )
+    with scratch_dir("st13_") as root:
+        stream_dir = os.path.join(root, "events")
+        n = stage_events_by_time(
+            os.path.join(sf_dir, "events.parquet"), stream_dir, n_files=4
+        )
+        assert n >= 1
+        dim_path = os.path.join(root, "dim_history")
+        run_streaming_scd2(
+            spark, stream_dir, dim_path, os.path.join(root, "ckpt")
+        )
+        # pin the table before the scratch dir disappears
+        return spark.read.parquet(dim_path).select(
+            "user_id", "attr_value", "valid_from", "valid_to", "is_current"
+        ).localCheckpoint()
 
 
 def m01_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:

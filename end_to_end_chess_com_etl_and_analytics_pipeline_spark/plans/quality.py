@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import round_fixed, round_fixed_sql
 from ..functions.text import tokens
+from ..session import run_concurrently, scratch_dir
 from ..sources.tables import load_table, read_parquet_noinfer
 
 # whitespace tokenization with empties dropped — single-sourced next to
@@ -1157,42 +1158,31 @@ def st07_streaming_lm_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM in foreachBatch.  The appended verdicts must equal the one-shot
     batch scoring, so the oracle is x42's SQL."""
     import os as _os
-    import shutil
-    import tempfile
 
     from ..streaming.pipeline import streaming_lm_gate
 
     docs = load_table(spark, "documents", sf_dir)
-    root = tempfile.mkdtemp(prefix="st07_")
-    vocab_path = _os.path.join(root, "lm_vocab")
-    stats_path = _os.path.join(root, "lm_stats")
-    batch_dir = _os.path.join(root, "batch")
-    out_path = _os.path.join(root, "verdicts")
-    ckpt = _os.path.join(root, "ckpt")
-    try:
+    with scratch_dir("st07_") as root:
+        vocab_path = _os.path.join(root, "lm_vocab")
+        stats_path = _os.path.join(root, "lm_stats")
+        batch_dir = _os.path.join(root, "batch")
+        out_path = _os.path.join(root, "verdicts")
+        ckpt = _os.path.join(root, "ckpt")
         vocab, stats = train_lm(docs)
         # the three artifact writes are independent (vocab/stats read
         # the checkpointed token counts, the batch staging re-scans
-        # docs) — overlap them (guide §2.6, the st11/st06 pattern)
-        from concurrent.futures import ThreadPoolExecutor
-
-        writes = [
+        # docs) — overlap them
+        run_concurrently(
             lambda: vocab.write.parquet(vocab_path),
             lambda: stats.write.parquet(stats_path),
             # several arriving files → several micro-batches
             lambda: docs.repartition(3).write.parquet(batch_dir),
-        ]
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [pool.submit(w) for w in writes]:
-                fut.result()
+        )
         streaming_lm_gate(
             spark, batch_dir, vocab_path, stats_path, out_path, ckpt
         )
-        # pin results before the temp tree disappears
-        out = read_parquet_noinfer(spark, out_path).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        # pin results before the scratch dir disappears
+        return read_parquet_noinfer(spark, out_path).localCheckpoint()
 
 
 def _x42_sql() -> str:

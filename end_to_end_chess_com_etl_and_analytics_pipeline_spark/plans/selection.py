@@ -63,6 +63,7 @@ from ..functions.hashing import md5_long, md5_long_sql
 from ..functions.rounding import round_fixed, round_fixed_sql
 from ..functions.text import bpe_ish_token_count, casefold, quality_score, tokens
 from ..operators.ids import shard_offsets
+from ..session import run_concurrently, scratch_dir
 from ..sources.tables import load_table, read_parquet_noinfer
 
 # x33: quality-bucket shard count and the token budget.  The budget is
@@ -393,8 +394,6 @@ def st06_streaming_incremental_dedup(
     files → several micro-batches), and each micro-batch probes the
     index in foreachBatch.  The appended verdicts must equal the
     one-shot batch probe, so the oracle is x35's SQL."""
-    import shutil
-    import tempfile
     import os as _os
 
     from ..operators.dedup import band_signatures
@@ -406,37 +405,26 @@ def st06_streaming_incremental_dedup(
     from ..streaming.pipeline import streaming_incremental_dedup
 
     docs = load_table(spark, "documents", sf_dir)
-    root = tempfile.mkdtemp(prefix="st06_")
-    index_path = _os.path.join(root, "index")
-    batch_dir = _os.path.join(root, "batch")
-    out_path = _os.path.join(root, "verdicts")
-    ckpt = _os.path.join(root, "ckpt")
-    try:
+    with scratch_dir("st06_") as root:
+        index_path = _os.path.join(root, "index")
+        batch_dir = _os.path.join(root, "batch")
+        out_path = _os.path.join(root, "verdicts")
+        ckpt = _os.path.join(root, "ckpt")
         # the index build and the batch staging write are independent
-        # corpus passes — overlap them (guide §2.6) so the cheap batch
-        # write back-fills the signature pass's task tail (r11)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_index() -> None:
-            band_signatures(
+        # corpus passes — overlap them so the cheap batch write
+        # back-fills the signature pass's task tail
+        run_concurrently(
+            lambda: band_signatures(
                 docs.where(F.col("doc_id") % BATCH_MOD != 0),
                 num_hashes=_MINHASH_N,
                 bands=_MINHASH_BANDS,
                 shingle_len=_MINHASH_SHINGLE,
-            ).write.parquet(index_path)
-
-        def _write_batch() -> None:
+            ).write.parquet(index_path),
             # several arriving files → several micro-batches
-            docs.where(F.col("doc_id") % BATCH_MOD == 0).repartition(
-                3
-            ).write.parquet(batch_dir)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [
-                pool.submit(_write_index),
-                pool.submit(_write_batch),
-            ]:
-                fut.result()
+            lambda: docs.where(F.col("doc_id") % BATCH_MOD == 0)
+            .repartition(3)
+            .write.parquet(batch_dir),
+        )
         streaming_incremental_dedup(
             spark,
             batch_dir,
@@ -447,11 +435,8 @@ def st06_streaming_incremental_dedup(
             bands=_MINHASH_BANDS,
             shingle_len=_MINHASH_SHINGLE,
         )
-        # pin results before the temp tree disappears
-        out = read_parquet_noinfer(spark, out_path).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        # pin results before the scratch dir disappears
+        return read_parquet_noinfer(spark, out_path).localCheckpoint()
 
 
 # x37: leakage-safe split fractions and hash seed.

@@ -13,17 +13,18 @@ count (re-size to ~2-3× total cores on a real cluster).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# serializes local_df's arrow-conf flip (sessions created without the
-# conf) and cached_column's check-then-build — both are called from
-# the artifact-write thread pools
-_ARROW_FLIP_LOCK = threading.Lock()
+# serializes cached_column's check-then-build — it is called from
+# run_concurrently's pool threads
 _EXPR_CACHE_LOCK = threading.Lock()
 
 
@@ -56,57 +57,61 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     parquet write, a noop) spins up a Python worker to deserialize the
     rows — measured at 1–6 s of fixed cost PER ACTION on this harness
     (thread dump: the write task blocked in
-    ``BasePythonRunner$ReaderInputStream.read``).  Converting via a
-    pandas DataFrame with Arrow enabled moves the data into the JVM
-    ONCE at creation; the same 64-row codebook-map write drops from
-    6.2 s to 0.15 s (guide §4: eliminate the JVM↔Python boundary; §6:
-    Arrow for driver transfers).
+    ``BasePythonRunner$ReaderInputStream.read``).  A ``pyarrow.Table``
+    moves the data into the JVM ONCE at creation, whatever the
+    session's Arrow conf says; the same 64-row codebook-map write drops
+    from 6.2 s to 0.15 s.
 
-    Values are bit-identical either way — Python floats round-trip
-    through an object-dtype pandas column into Arrow float64 exactly,
-    and the declared ``schema`` types the result on both paths.  Rows
-    may be tuples or pyspark Rows (anything positionally indexable).
+    Each column is built with the arrow type of the declared ``schema``
+    field, so Python floats land in float64 bit-exactly and NULLs stay
+    NULL; a naive ``datetime`` is read as UTC.  Rows may be tuples or
+    pyspark Rows (anything positionally indexable).
     """
-    from pyspark.sql.types import StructType
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
 
-    if isinstance(schema, StructType):
-        st = schema
-    else:
-        from pyspark.sql.types import _parse_datatype_string
-
-        st = _parse_datatype_string(schema)
+    st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(st)
     rows = list(rows)
-    if not rows:
-        # empty local relations never reach a hot path; keep the plain
-        # builder (the pandas path would need dtype scaffolding for 0
-        # rows for no benefit)
-        return spark.createDataFrame([], st)
-    import pandas as pd
-
-    names = st.fieldNames()
-    pdf = pd.DataFrame(
-        {
-            n: pd.Series([r[i] for r in rows], dtype="object")
-            for i, n in enumerate(names)
-        },
-        columns=names,
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
     )
-    arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
-    if spark.conf.get(arrow_conf) == "true":
-        return spark.createDataFrame(pdf, schema=st)
-    # without Arrow the pandas path degrades to the same pickled-row
-    # plan; the conf is runtime-settable and is the documented
-    # recommended setting (guide §9) — enable it for THIS creation
-    # only and restore the caller's value after (r11 verdict #3: a
-    # library function must not flip session state as a side effect;
-    # values are identical either way, pinned by the vanilla contract
-    # drive, which runs with Arrow off).  The lock serializes the
-    # flip-create-restore against concurrent local_df calls (the
-    # artifact-write thread pools): the conf is session-global, and a
-    # concurrent restore mid-creation would silently demote a sibling
-    # to the pickled-row plan.
-    with _ARROW_FLIP_LOCK, conf_scope(spark, arrow_conf, "true"):
-        return spark.createDataFrame(pdf, schema=st)
+    return spark.createDataFrame(table, schema=st)
+
+
+@contextmanager
+def scratch_dir(prefix: str):
+    """A fresh ``tempfile.mkdtemp`` directory (so ``TMPDIR`` applies)
+    for one query's artifacts, removed on exit — normal or raised.  A
+    frame reading from it must be materialized (``localCheckpoint``, a
+    memory-sink table) inside the ``with`` body.  The package's one
+    creator of scratch space (a guard test keeps it that way)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def run_concurrently(*actions) -> None:
+    """Run independent Spark actions (zero-argument callables) at once
+    and wait for all of them; the first failure is raised.  Small
+    artifact writes then overlap a large one instead of queueing behind
+    it.  Each action runs under ``inheritable_thread_target``
+    so its jobs keep the caller's job group and local properties — a
+    pool thread is a fresh JVM thread that would otherwise lose them."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [pool.submit(wrap(action)) for action in actions]
+        for future in futures:
+            future.result()
 
 
 _EXPR_CACHE = None  # weakref.WeakKeyDictionary[SparkSession, dict]

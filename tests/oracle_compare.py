@@ -114,8 +114,9 @@ def dtype_mismatches(spark_df, duck_rel) -> list:
     ]
 
 
-def compare(spark_df, duck_rel) -> None:
-    """Assert spark_df ≡ duck_rel (order-insensitive), values AND dtypes.
+def compare(spark_df, duck_rel) -> int:
+    """Assert spark_df ≡ duck_rel (order-insensitive), values AND dtypes;
+    return the row count.
 
     Uses collect()/fetchall() (not pandas) so DATE stays datetime.date
     and TIMESTAMP stays datetime.datetime in both engines."""
@@ -138,3 +139,4 @@ def compare(spark_df, duck_rel) -> None:
     du_rows = sorted(tuple(_canon(row[i]) for i in d_order) for row in du)
     for i, (a, b) in enumerate(zip(sp_rows, du_rows)):
         assert a == b, f"value mismatch at sorted row {i}:\n spark={a}\n duck ={b}"
+    return len(sp)

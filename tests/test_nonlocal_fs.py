@@ -1,5 +1,5 @@
-"""Non-local filesystem scheme coverage (r6 verdict "What's missing"
-#1): the engine claims its lake paths work on Hadoop-connector schemes
+"""Non-local filesystem scheme coverage: the engine claims its lake
+paths work on Hadoop-connector schemes
 (s3a://, abfss://, hdfs:// — SURVEY.md §2.1 S3), and the write/merge/
 compact code deliberately uses the Hadoop FileSystem API instead of
 os/shutil so those claims hold — but every prior test ran on the local
@@ -8,8 +8,10 @@ genuine non-``file:`` scheme shipped in hadoop-common (a client-side
 mount table — here mounted onto a local directory, so the suite stays
 offline).  Every operation crosses the scheme boundary: parquet
 write/read, dynamic partition overwrite, the streaming gold merge's
-stale-partition retirement (Hadoop ``fs.delete``), and maintain_table's
-staged z-order rewrite (Hadoop ``fs.rename``).  What viewfs does NOT
+stale-partition retirement (Hadoop ``fs.delete``), maintain_table's
+staged z-order rewrite (Hadoop ``fs.rename``), and the footer readers'
+Spark branch (``raw_row_count``, ``read_parquet_noinfer``,
+``read_ivf_pq_index``).  What viewfs does NOT
 prove: object-store consistency/latency semantics (no committer
 differences are exercised) — it proves the engine never assumes a
 ``file:`` path, which is exactly the failure mode os/shutil would have
@@ -134,3 +136,54 @@ def test_maintain_table_zorder_rename_via_scheme(spark, viewfs_root):
 
     res2 = maintain_table(spark, path, ["p"], zorder=("a", "b"))
     assert res2["rewritten"] == []
+
+
+def test_footer_readers_via_scheme(spark, viewfs_root):
+    """On a non-local scheme the footer readers list nothing driver-
+    side and read through Spark; their results equal the pyarrow reads
+    of the same files through the local backing path."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.pq import (
+        ivf_pq_build_index,
+        read_ivf_pq_index,
+    )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.sources.tables import (
+        local_data_files,
+        raw_row_count,
+        read_parquet_noinfer,
+    )
+
+    remote = f"{viewfs_root}/ivfpq"
+    backing = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.viewfs.mounttable.graftcluster.link./data"
+    )
+    local = backing.removeprefix("file://") + "/ivfpq"
+    corpus = spark.range(40).selectExpr(
+        "id AS vec_id",
+        "array(CAST(id % 5 AS DOUBLE), CAST(id % 3 AS DOUBLE), "
+        "CAST(id % 7 AS DOUBLE), CAST(id % 2 AS DOUBLE)) AS embedding",
+    )
+    cents = [(0, [0.0, 0.0, 0.0, 0.0]), (1, [4.0, 2.0, 6.0, 1.0])]
+    books = [
+        [(0, [0.0, 0.0]), (1, [4.0, 2.0])],
+        [(0, [0.0, 0.0]), (1, [6.0, 1.0])],
+    ]
+    ivf_pq_build_index(corpus, cents, books, remote)
+
+    codes = f"{remote}/codes"
+    assert local_data_files(codes) is None
+    assert local_data_files(f"{local}/codes")
+    assert raw_row_count(spark, codes) == raw_row_count(spark, f"{local}/codes") == 40
+
+    remote_df = read_parquet_noinfer(spark, codes)
+    local_df_ = read_parquet_noinfer(spark, f"{local}/codes")
+    assert remote_df.schema == local_df_.schema
+    assert sorted(map(tuple, remote_df.collect())) == sorted(
+        map(tuple, local_df_.collect())
+    )
+
+    remote_codes, *remote_model = read_ivf_pq_index(spark, remote)
+    local_codes, *local_model = read_ivf_pq_index(spark, local)
+    assert remote_model == local_model == [cents, books, False]
+    assert sorted(map(tuple, remote_codes.collect())) == sorted(
+        map(tuple, local_codes.collect())
+    )

@@ -113,53 +113,48 @@ def main() -> None:
         "expression work.",
         "",
     ]
-    import shutil
-    import tempfile
-
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.extensions import (
         x61_scoring_frame,
         x65_scoring_frame,
         x67_scoring_frame,
     )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.session import (
+        scratch_dir,
+    )
 
-    x61_root = tempfile.mkdtemp(prefix="x61_audit_")
-    x65_root = tempfile.mkdtemp(prefix="x65_audit_")
-    x67_root = tempfile.mkdtemp(prefix="x67_audit_")
+    # the persisted-index registry entries localCheckpoint (their index
+    # dir is gone on return), which hides the scoring plan behind Scan
+    # ExistingRDD; audit the live scoring frame so the pushed token-IN /
+    # __cell-IN filter on the index scan is visible
+    scoring_frames = {
+        "x61_bm25_persisted_index": x61_scoring_frame,
+        "x65_ivf_pq_persisted_index": x65_scoring_frame,
+        "x67_persisted_ann_mmr": x67_scoring_frame,
+    }
     for name, claim in HEADLINE:
-        if name == "x61_bm25_persisted_index":
-            # the registry entry localCheckpoints (its temp index dir is
-            # deleted on return), which hides the scoring plan behind
-            # Scan ExistingRDD; audit the live pre-checkpoint frame so
-            # the pushed token-IN filter is visible
-            df = x61_scoring_frame(spark, sf_dir, x61_root)
-        elif name == "x65_ivf_pq_persisted_index":
-            # same localCheckpoint-hides-the-plan shape as x61: audit
-            # the live scoring frame so the pushed __cell-IN filter on
-            # the codes scan is visible
-            df = x65_scoring_frame(spark, sf_dir, x65_root)
-        elif name == "x67_persisted_ann_mmr":
-            # same shape again: audit the live persisted-pool frame so
-            # the pushed __cell-IN codes scan under the rerank is visible
-            df = x67_scoring_frame(spark, sf_dir, x67_root)
-        else:
-            df = qs[name](spark, sf_dir)
-        df.collect()  # let AQE finalize
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
+        with scratch_dir(f"{name}_audit_") as root:
+            if name in scoring_frames:
+                df = scoring_frames[name](spark, sf_dir, root)
+            else:
+                df = qs[name](spark, sf_dir)
+            df.collect()  # let AQE finalize
+            plan = df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
             )
-        )
+            # count nodes on the executed (AQE-final) plan, where each
+            # node prints exactly once; formatted output is kept for
+            # display only
+            executed = (
+                df._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+                .split("== Initial Plan ==")[0]
+            )
         # strip volatile ids ( #123 / plan_id=.. ) so regeneration diffs clean
         plan = re.sub(r"#\d+L?", "#", plan)
         plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
-        # count nodes on the executed (AQE-final) plan, where each node
-        # prints exactly once; formatted output is kept for display only
-        executed = (
-            df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
         n_ex = executed.count("Exchange ")
         n_bc = executed.count("BroadcastHashJoin")
         out += [
@@ -173,9 +168,6 @@ def main() -> None:
             "```",
             "",
         ]
-    shutil.rmtree(x61_root, ignore_errors=True)
-    shutil.rmtree(x65_root, ignore_errors=True)
-    shutil.rmtree(x67_root, ignore_errors=True)
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(HEADLINE)} queries)")

@@ -36,7 +36,7 @@ def main() -> int:
 
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans import suites
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.session import get_spark
-    from oracle_compare import _canon, dtype_mismatches
+    from oracle_compare import _canon, compare
 
     raw = sys.argv[1:]
     argv, confs, i = [], {}, 0
@@ -76,46 +76,16 @@ def main() -> int:
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
-            rows = df.collect()
-            cols = list(df.columns)
-            # rows-only canonicalization must not crash (x21's r1 bug)
-            canon = sorted(
-                tuple(_canon(v) for v in row) for row in rows
-            )
             if name in oracles:
-                rel = con.sql(oracles[name])
-                drows = rel.fetchall()
-                dcols = list(rel.columns)
-                ok_cols = sorted(cols) == sorted(dcols)
-                bad_types = dtype_mismatches(df, rel) if ok_cols else []
-                s_order = sorted(range(len(cols)), key=lambda i: cols[i])
-                d_order = sorted(range(len(dcols)), key=lambda i: dcols[i])
-                sp_rows = sorted(
-                    tuple(_canon(r[i]) for i in s_order) for r in rows
-                )
-                du_rows = sorted(
-                    tuple(_canon(r[i]) for i in d_order) for r in drows
-                )
-                ok_rows = len(sp_rows) == len(du_rows)
-                ok_vals = (
-                    ok_cols and not bad_types and ok_rows and sp_rows == du_rows
-                )
-                status = "PASS" if ok_vals else "FAIL"
-                if not ok_vals:
+                try:
+                    n_rows = compare(df, con.sql(oracles[name]))
+                    status, detail = "PASS", f" rows={n_rows}"
+                except AssertionError as exc:
                     failures += 1
-                    detail = (
-                        f" cols_match={ok_cols} rows {len(sp_rows)}/{len(du_rows)}"
-                    )
-                    if bad_types:
-                        detail += f" dtype_mismatch={bad_types}"
-                    if ok_cols and ok_rows:
-                        for i, (a, b) in enumerate(zip(sp_rows, du_rows)):
-                            if a != b:
-                                detail += f"\n  first diff row {i}:\n   spark={a}\n   duck ={b}"
-                                break
-                else:
-                    detail = f" rows={len(sp_rows)}"
+                    status, detail = "FAIL", f" {exc}"
             else:
+                # rows-only canonicalization must not crash (x21's r1 bug)
+                canon = [tuple(_canon(v) for v in row) for row in df.collect()]
                 status, detail = "ROWS_ONLY", f" rows={len(canon)}"
             print(f"{status:9s} {name}{detail}  ({time.time() - t0:.1f}s)", flush=True)
         except Exception:
