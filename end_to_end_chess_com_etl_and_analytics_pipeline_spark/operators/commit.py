@@ -5,17 +5,18 @@ Spark's dynamic partition overwrite deletes and rewrites the affected
 partition directories directly in the live table; a crash mid-swap can
 leave an affected partition empty, and a foreachBatch checkpoint replay
 then rebuilds that partition from the batch's rows alone — silently
-losing its prior history (r8/r9 verdict on the streaming SCD2 and
-incremental-gold sinks).  This module applies the same two-phase
+losing its prior history (the streaming SCD2 and incremental-gold
+sinks both replay that way).  This module applies the same two-phase
 protocol ``bm25_refresh_index`` uses for its index artifacts
 (operators/retrieval.py) to arbitrary partitioned tables:
 
 - **Phase 1 (stage):** write the batch's full replacement content for
   the affected partitions to ``{table}/.staged_{token}`` — a
   dot-prefixed sibling Spark's file listing hides from every reader of
-  the live table — then record partition directories to DROP (emptied
-  partitions dynamic overwrite cannot express) as empty marker dirs
-  under ``.staged_{token}/_drops/``, and finally create the intent file
+  the live table — then record partition directories to DROP (the
+  caller's rewrite-set partitions the batch emptied, which dynamic
+  overwrite cannot express) as empty marker dirs under
+  ``.staged_{token}/_drops/``, and finally create the intent file
   ``{table}/._swap_intent_{token}``.  Nothing live is touched; a crash
   anywhere in phase 1 leaves the live table exactly as it was, and the
   checkpoint replay re-stages under the same deterministic token with
@@ -38,10 +39,15 @@ sources/tables.py:273).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 
 _INTENT = "._swap_intent_"
 _STAGED = ".staged_"
+# Spark's dir name for a NULL partition value; integer and plain string
+# values are written as they are
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _fs(spark: SparkSession, path: str):
@@ -150,11 +156,15 @@ def two_phase_partition_overwrite(
     table_path: str,
     partition_cols: list[str],
     token: str,
-    drop_partitions: list[str] | None = None,
+    rewrite_set: Iterable[tuple] = (),
 ) -> None:
     """Crash-atomic replacement of exactly the partitions present in
-    ``df`` (plus explicit ``drop_partitions`` — relative dirs like
-    ``year=2021/month=5`` to remove because the batch emptied them).
+    ``df``.  ``rewrite_set`` holds the partition value tuples (in
+    ``partition_cols`` order) the caller rewrites; each one ``df`` has no
+    rows for — a partition the batch emptied, which dynamic overwrite
+    cannot express — is dropped in the same phase 2.  The staged leaf
+    dirs tell which partitions ``df`` filled, so working that out takes
+    a listing, not a Spark job.
 
     ``token`` must be deterministic per batch (the micro-batch id): a
     replay after a pre-intent crash restages over its own leftovers; a
@@ -164,7 +174,16 @@ def two_phase_partition_overwrite(
     root = table_path.rstrip("/")
     staged = f"{root}/{_STAGED}{token}"
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
-    for rel in drop_partitions or []:
+    drops = {
+        "/".join(
+            f"{c}={_NULL_PARTITION if v is None else v}"
+            for c, v in zip(partition_cols, values)
+        )
+        for values in rewrite_set
+    }
+    if drops:
+        drops -= set(_leaf_partitions(fs, P, P(staged), True))
+    for rel in drops:
         fs.mkdirs(P(f"{staged}/_drops/{rel}"))
     fs.createNewFile(P(f"{root}/{_INTENT}{token}"))
     _finish_swap(spark, table_path, token)

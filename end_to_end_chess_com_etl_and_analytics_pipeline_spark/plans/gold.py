@@ -15,12 +15,16 @@ functions.  Deliberate, documented divergences from the reference
   reference drops it on one branch of dim_time_control,
   python_scripts.py:414-418).
 
-At scale: dims are broadcast-sized; the fact merge shuffles once on
-game_url; gold is partitioned by (year, month) so a monthly arrival
-rewrites only its partition.
+``land_gold`` is the one path that writes gold: append-only dims and a
+latest-wins fact merge partitioned by (year, month), so a monthly
+arrival rewrites only its months.  Dims are broadcast-sized; the fact
+merge shuffles once on game_url.
 """
 
 from __future__ import annotations
+
+import os
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,8 +36,11 @@ from ..functions.pgn import (
     opening_variation,
     pgn_depth,
 )
-from ..operators.merge import insert_if_absent, latest_wins
-from ..sources.tables import dim_results_seed
+from ..operators import commit
+from ..operators.merge import latest_wins, new_dim_rows
+from ..schemas import DIM_KEYS, DIM_SCHEMAS, GOLD_FACT_SCHEMA
+from ..session import local_df
+from ..sources.tables import dim_results_seed, fs_exists
 
 
 def build_dim_openings(
@@ -186,11 +193,16 @@ def merge_fact(
     return latest_wins(existing, incoming, keys=["game_url"], order_by="last_updated")
 
 
-def merge_dim(
-    existing: DataFrame | None, incoming: DataFrame, keys: list[str]
-) -> DataFrame:
-    """J3/U1/T5: insert-if-absent dimension append."""
-    return insert_if_absent(existing, incoming, keys)
+def _in_months(months: set[tuple]) -> Column:
+    """The fact's rows in ``months``, (year, month) partition values
+    matched null-safely: a NULL game_date lands in the NULL partition."""
+    return reduce(
+        lambda a, b: a | b,
+        [
+            F.col("year").eqNullSafe(F.lit(y)) & F.col("month").eqNullSafe(F.lit(m))
+            for (y, m) in months
+        ],
+    )
 
 
 def build_gold(
@@ -198,10 +210,9 @@ def build_gold(
     silver: DataFrame,
     username: str,
     run_ts: str,
-    existing_fact: DataFrame | None = None,
     openings_lookup: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Full gold layer for one silver batch — the reference's DAG-1 tail
+    """Full gold layer for one silver frame — the reference's DAG-1 tail
     (four dim loads + fact load) as one lineage."""
     dims = {
         "dim_openings": build_dim_openings(silver, openings_lookup),
@@ -217,5 +228,103 @@ def build_gold(
         dims["dim_results"],
         dims["dim_time_control"],
     )
-    fact = merge_fact(existing_fact, fact)
     return {"fact_games": fact, **dims}
+
+
+def land_gold(
+    spark: SparkSession,
+    silver: DataFrame,
+    gold_dir: str,
+    username: str,
+    run_ts: str,
+    token: str,
+    openings_lookup: DataFrame | None = None,
+) -> None:
+    """Land a silver frame in the gold dir — the one code path that
+    merges into and commits to gold.  A backfill is one call over all
+    its months; the incremental stream makes one call per micro-batch.
+    Gold does not depend on how months are split across calls or on the
+    order they arrive in.
+
+    - Dims are append-only (T5, the reference's monthly create_dim_*
+      tasks): only rows whose key is new land, as one more file, and a
+      call that brings no new key writes nothing.  Dim files are never
+      rewritten, so no crash point loses a dim's history, and a replay
+      finds its keys present and appends nothing twice.
+    - The fact lives partitioned by (year, month) of game_date and
+      merges latest-wins by game_url (T4), scoped to the rewrite set:
+      the months the frame's rows fall in, plus any month holding a
+      stale copy of one of its keys.  Only those months are read
+      (partition pruning) and replaced, through the crash-atomic
+      two-phase swap in operators/commit.py; every other month stays
+      byte-identical.  A call costs O(its months) in data plus a
+      game_url-only probe of the other partitions, not O(table).
+
+    ``token`` names the swap and must be deterministic per landing (the
+    stream passes ``b{batch_id}``): a replay after a crash restages over
+    its own leftovers or finds its swap finished."""
+    fact_path = os.path.join(gold_dir, "fact_games")
+    # finish any swap a crashed attempt left behind BEFORE anything
+    # reads the fact
+    commit.recover_pending_swaps(spark, fact_path)
+    # the source read and the PGN parse run once for every consumer
+    silver = silver.localCheckpoint()
+    gold = build_gold(spark, silver, username, run_ts, openings_lookup)
+    # one computation for the month probes and the merge
+    fact = gold["fact_games"].localCheckpoint()
+    for dim, keys in DIM_KEYS.items():
+        dim_path = os.path.join(gold_dir, dim)
+        existing_dim = (
+            spark.read.schema(DIM_SCHEMAS[dim]).parquet(dim_path)
+            if fs_exists(spark, dim_path)
+            else None
+        )
+        fresh = new_dim_rows(spark, existing_dim, gold[dim], keys)
+        if fresh is None and existing_dim is None:
+            # an idle first month (no games) still creates the dim, so
+            # readers of the gold layer always find it
+            fresh = local_df(spark, [], DIM_SCHEMAS[dim])
+        if fresh is not None:
+            fresh.write.mode("append").parquet(dim_path)
+    # Driver-sized: a monthly re-pull touches 1-2 months.  Re-pulled
+    # games may carry dates outside the bronze file's nominal month, so
+    # the rows are probed, never the file name.
+    months = {
+        (r["y"], r["m"])
+        for r in fact.select(
+            F.year("game_date").alias("y"), F.month("game_date").alias("m")
+        )
+        .distinct()
+        .collect()
+    }
+    existing = None
+    if months and commit.has_partition_dirs(spark, fact_path):
+        live = spark.read.schema(GOLD_FACT_SCHEMA).parquet(fact_path)
+        # A re-pull can correct a game's date into another month, which
+        # leaves its stale row in a partition outside ``months``.  A
+        # game_url-only scan of the other partitions, semi-joined with
+        # the broadcast keys, finds those months; they join the rewrite
+        # set, so the merge retires the stale row and the commit drops
+        # a month left empty.  At warehouse scale a game_url → (year,
+        # month) key index or a MERGE-capable table format replaces it.
+        months |= {
+            (r["year"], r["month"])
+            for r in live.select("game_url", "year", "month")
+            .where(~_in_months(months))
+            .join(F.broadcast(fact.select("game_url")), "game_url", "left_semi")
+            .select("year", "month")
+            .distinct()
+            .collect()
+        }
+        existing = live.where(_in_months(months)).drop("year", "month")
+    merged = merge_fact(existing, fact)
+    commit.two_phase_partition_overwrite(
+        spark,
+        merged.withColumn("year", F.year("game_date")).withColumn(
+            "month", F.month("game_date")
+        ),
+        fact_path,
+        ["year", "month"],
+        token=token,
+        rewrite_set=months,
+    )

@@ -155,7 +155,7 @@ def chess_silver_plan(spark: SparkSession, json_path: str) -> DataFrame:
 
 def c02_chess_gold_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full gold fact build from the staged silver parquet: role-playing
-    CASEs, 5-way validation join, latest-wins merge.  The oracle
+    CASEs and the 5-way validation join.  The oracle
     recomputes the fact projection (python_scripts.py:533-564) from the
     identical silver bytes."""
     silver = spark.read.parquet(_stage_silver(spark))

@@ -21,9 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import latest_wins, new_dim_rows
+from ..operators.merge import new_dim_rows
 from ..schemas import DIM_KEYS
 from ..sources.tables import WAREHOUSE_SCHEMA, create_warehouse
+from .gold import merge_fact
 
 
 def read_watermark(spark: SparkSession, schema: str = WAREHOUSE_SCHEMA):
@@ -62,5 +63,5 @@ def load_warehouse(
     incoming = gold["fact_games"].select(*existing_fact.columns)
     if wm is not None:
         incoming = incoming.where(F.col("last_updated") > F.lit(wm))
-    merged = latest_wins(existing_fact, incoming, ["game_url"], "last_updated")
+    merged = merge_fact(existing_fact, incoming)
     merged.localCheckpoint().write.insertInto(fact_table, overwrite=True)

@@ -127,25 +127,25 @@ def cached_column(spark: SparkSession, key: tuple, builder):
     key — same key, same tree.  Column objects are immutable and
     plan-independent (they reference columns by NAME), so one tree can
     be embedded in any number of plans; the pq encoder factories
-    (r11 Finding 9) already rely on exactly this reuse across
-    micro-batch plans.  This caches expression STRUCTURE only — never
-    data, never results: every action still computes from its inputs.
+    already rely on exactly this reuse across micro-batch plans.  This
+    caches expression STRUCTURE only — never data, never results: every
+    action still computes from its inputs.
 
     Keyed weakly by the SparkSession so a stopped/replaced session
     (whose JVM object handles would be stale) simply misses and
     rebuilds.  ``builder`` takes no arguments and may return a Column
     or a tuple of Columns.
 
-    Bounded and thread-safe (r11 ADVICE): entries are value-keyed
-    (PQ encoders key on full codebook values), so a session that
-    retrains models forever would otherwise accumulate one large
-    Python+py4j tree per distinct model; past ``_EXPR_CACHE_MAX``
-    entries the oldest-inserted entry is evicted (insertion-order FIFO
-    — the working set per session is a handful of frozen-model trees,
-    so recency bookkeeping would be ceremony).  The lock guards the
-    lazy init and the check-then-build: builders are pure, but two
-    racing builders would otherwise both pay the py4j construction and
-    one inner dict could be lost.
+    Bounded and thread-safe: entries are value-keyed (PQ encoders key
+    on full codebook values), so a session that retrains models forever
+    would otherwise accumulate one large Python+py4j tree per distinct
+    model; past ``_EXPR_CACHE_MAX`` entries the oldest-inserted entry is
+    evicted (insertion-order FIFO — the working set per session is a
+    handful of frozen-model trees, so recency bookkeeping would be
+    ceremony).  The lock guards the lazy init and the dict, never the
+    build: a slow builder must not stall other keys' lookups or builds.
+    Two callers racing on one missing key both build; the first insert
+    wins and both return it.
     """
     global _EXPR_CACHE
     with _EXPR_CACHE_LOCK:
@@ -154,10 +154,14 @@ def cached_column(spark: SparkSession, key: tuple, builder):
 
             _EXPR_CACHE = weakref.WeakKeyDictionary()
         per_session = _EXPR_CACHE.setdefault(spark, {})
+        if key in per_session:
+            return per_session[key]
+    built = builder()
+    with _EXPR_CACHE_LOCK:
         if key not in per_session:
             if len(per_session) >= _EXPR_CACHE_MAX:
                 per_session.pop(next(iter(per_session)))
-            per_session[key] = builder()
+            per_session[key] = built
         return per_session[key]
 
 

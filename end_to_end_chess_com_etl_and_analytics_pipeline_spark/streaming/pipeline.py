@@ -7,11 +7,12 @@ dims (T5).  Streaming-native equivalents:
 
 - T1: a file source over the bronze directory — one JSON per arriving
   month; ``availableNow`` trigger gives the batch-backfill behaviour.
-- T2: the gold merge runs in ``foreachBatch`` of the same stream — no
+- T2: the gold landing runs in ``foreachBatch`` of the same stream — no
   external trigger plumbing.
-- T3/T4: event-time watermark + the same latest-wins merge kernel the
-  batch path uses (operators.merge.latest_wins) — one implementation,
-  two drivers.
+- T3/T4: event-time watermark; each micro-batch lands through
+  ``plans.gold.land_gold``, the one gold landing path, which a batch
+  backfill calls once over all its months — so the stream and the
+  backfill produce the same gold.
 - plus watermarked tumbling-window aggregation over the events stream,
   which the reference lacks entirely.
 
@@ -29,10 +30,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.gold import build_gold, merge_fact
+from ..plans.gold import land_gold
 from ..plans.silver import bronze_to_silver
-from ..schemas import DIM_KEYS, DIM_SCHEMAS, GOLD_FACT_SCHEMA, RAW_GAME_SCHEMA
-from ..session import conf_scope, local_df
+from ..schemas import GOLD_FACT_SCHEMA, RAW_GAME_SCHEMA
+from ..session import conf_scope
 from ..sources.tables import read_events_raw, repair_events_ts
 
 
@@ -115,183 +116,25 @@ def run_incremental_gold(
     checkpoint_dir: str,
     username: str,
     run_ts: str,
+    openings_lookup: DataFrame | None = None,
 ) -> None:
-    """Incremental gold build: each arriving bronze month merges into the
-    gold fact with the latest-wins kernel; dims are append-only.
+    """Incremental gold build: each arriving bronze month is one
+    micro-batch, landed by :func:`plans.gold.land_gold` under the swap
+    token ``b{batch_id}``, so a checkpoint replay reuses its token.
     ``availableNow`` processes the backlog then stops (the Airflow
-    catchup=True equivalent).
+    catchup=True equivalent)."""
 
-    The fact lives partitioned by (year, month) of game_date, and each
-    micro-batch is **partition-scoped**: only the months in the batch's
-    rewrite set — the batch's own months plus any month holding a
-    stale cross-month copy of a batch key — are read for the
-    latest-wins merge (partition pruning on the scan) and only those
-    are rewritten — via the crash-atomic two-phase partition swap in
-    operators/commit.py, so no crash point leaves a month observable
-    empty or half-written (pinned by
-    test_incremental_gold_crash_replay).  A month's arrival
-    costs O(that month) in data plus a game_url-column-only probe of
-    the other partitions (finding stale copies; see merge_batch), not
-    O(table) in data — the difference between a working and a seized
-    pipeline when the fact is 100 TB.  Months already on disk that the
-    batch doesn't touch are left byte-identical (pinned by
-    test_incremental_gold_untouched_partitions; the cross-month
-    correction path by test_incremental_gold_cross_month_correction)."""
-    from functools import reduce
-
-    silver_stream = stream_bronze_to_silver(spark, bronze_dir)
-    fact_path = os.path.join(gold_dir, "fact_games")
-
-    from ..operators.commit import (
-        has_partition_dirs,
-        recover_pending_swaps,
-        two_phase_partition_overwrite,
-    )
-    from ..operators.merge import new_dim_rows
-    from ..sources.tables import fs_exists
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # finish any fact swap a previous attempt crashed mid-commit
-        # BEFORE anything reads the fact this batch
-        recover_pending_swaps(spark, fact_path)
-        # The bronze read and the PGN parse run once: the fact, every
-        # dim and the month probe below consume this materialized batch.
-        batch = batch_df.localCheckpoint()
-        gold = build_gold(spark, batch, username, run_ts)
-        # pins the fact so the month probe below and the merge/write
-        # share one computation and the write cannot read-from-while-
-        # writing
-        batch_fact = gold["fact_games"].localCheckpoint()
-        # T5: dims are append-only (the reference's monthly create_dim_*
-        # tasks).  Only rows whose key is new land, as one more file; a
-        # batch that brings no new key writes nothing.  Existing dim
-        # files are never rewritten, so no crash point loses a dim's
-        # history, and a replayed batch finds its keys present and
-        # appends nothing twice.
-        for dim, keys in DIM_KEYS.items():
-            dim_path = os.path.join(gold_dir, dim)
-            existing_dim = (
-                spark.read.schema(DIM_SCHEMAS[dim]).parquet(dim_path)
-                if fs_exists(spark, dim_path)
-                else None
-            )
-            fresh = new_dim_rows(spark, existing_dim, gold[dim], keys)
-            if fresh is None and existing_dim is None:
-                # an idle first month (no games) still creates the dim,
-                # so readers of the gold layer always find it
-                fresh = local_df(spark, [], DIM_SCHEMAS[dim])
-            if fresh is not None:
-                fresh.write.mode("append").parquet(dim_path)
-        # Months this batch touches — driver-sized (one row per month;
-        # a monthly re-pull touches 1-2). Re-pulled games may carry
-        # game_dates outside the bronze file's nominal month, so probe
-        # the transformed rows, never the file name.
-        months = {
-            (r["y"], r["m"])
-            for r in batch_fact.select(
-                F.year("game_date").alias("y"), F.month("game_date").alias("m")
-            )
-            .distinct()
-            .collect()
-        }
-        existing = None
-        if has_partition_dirs(spark, fact_path) and months:
-            # A re-pull can CORRECT a game's game_date into a different
-            # month; the stale row then lives in a partition the batch's
-            # own months never touch, and a months-of-the-batch-only
-            # merge would leave both copies alive (one game_url, two
-            # months).  So probe which OTHER partitions hold any of the
-            # batch's keys — a key-column-only scan (game_url + the
-            # partition values; column pruning reads nothing else) with
-            # the batch's own months partition-pruned away, semi-joined
-            # against the broadcast key set — and fold the hits into
-            # the rewrite set.  The latest-wins merge then retires the
-            # stale row and dynamic overwrite rewrites its old month
-            # without it.  Cost: O(batch month) data + this one-column
-            # probe of the remaining partitions per batch; a warehouse
-            # deployment replaces the probe with a slim game_url →
-            # (year, month) key index (or a MERGE-capable table
-            # format's key lookup).
-            # unique already: the in-batch latest-wins keeps one row a key
-            batch_keys = batch_fact.select("game_url")
-            in_batch_months = reduce(
-                lambda a, b: a | b,
-                [
-                    F.col("year").eqNullSafe(F.lit(y))
-                    & F.col("month").eqNullSafe(F.lit(m))
-                    for (y, m) in months
-                ],
-            )
-            stale_months = {
-                (r["y"], r["m"])
-                for r in spark.read.schema(GOLD_FACT_SCHEMA)
-                .parquet(fact_path)
-                .select("game_url", "year", "month")
-                .where(~in_batch_months)
-                .join(F.broadcast(batch_keys), "game_url", "left_semi")
-                .select(
-                    F.col("year").alias("y"), F.col("month").alias("m")
-                )
-                .distinct()
-                .collect()
-            }
-            months |= stale_months
-            hit = reduce(
-                lambda a, b: a | b,
-                [
-                    F.col("year").eqNullSafe(F.lit(y))
-                    & F.col("month").eqNullSafe(F.lit(m))
-                    for (y, m) in months
-                ],
-            )
-            # partition pruning: only the overlapping months are read
-            existing = (
-                spark.read.schema(GOLD_FACT_SCHEMA)
-                .parquet(fact_path)
-                .where(hit)
-                .drop("year", "month")
-            )
-        merged = merge_fact(existing, batch_fact).localCheckpoint()
-        out = merged.withColumn("year", F.year("game_date")).withColumn(
-            "month", F.month("game_date")
-        )
-        # two-phase commit (operators/commit.py): only partitions
-        # present in `out` (= the rewrite set) are staged and swapped;
-        # all other months' files untouched.  A month whose ONLY game
-        # moved away has no rows in `out` and cannot be rewritten-empty
-        # — it goes in the commit's drop set, applied in the same
-        # crash-recoverable phase 2.  NULL partition values use Spark's
-        # __HIVE_DEFAULT_PARTITION__ directory name (a NULL game_date
-        # row lands there, and its correction must clean it like any
-        # month's).
-        months_out = {
-            (r["y"], r["m"])
-            for r in out.select(
-                F.col("year").alias("y"), F.col("month").alias("m")
-            )
-            .distinct()
-            .collect()
-        }
-        null_part = "__HIVE_DEFAULT_PARTITION__"
-        drops = [
-            f"year={null_part if y is None else y}"
-            f"/month={null_part if m is None else m}"
-            for (y, m) in months - months_out
-        ]
-        two_phase_partition_overwrite(
-            spark,
-            out,
-            fact_path,
-            ["year", "month"],
-            token=f"b{batch_id}",
-            drop_partitions=drops,
+    def land(batch_df: DataFrame, batch_id: int) -> None:
+        land_gold(
+            spark, batch_df, gold_dir, username, run_ts, f"b{batch_id}",
+            openings_lookup,
         )
 
     _drain(
         spark,
-        silver_stream.writeStream.foreachBatch(merge_batch).option(
-            "checkpointLocation", checkpoint_dir
-        ),
+        stream_bronze_to_silver(spark, bronze_dir)
+        .writeStream.foreachBatch(land)
+        .option("checkpointLocation", checkpoint_dir),
     )
 
 
@@ -513,7 +356,7 @@ def streaming_lm_gate(
     # pin the frozen model frames ONCE: without the checkpoint every
     # micro-batch's scoring action re-scans (and re-broadcasts) the
     # vocab/stats parquets — model-artifact-sized, so pinning is O(V)
-    # (r11, the st11 qterms pattern)
+    # (the st11 qterms pattern)
     vocab = spark.read.parquet(vocab_path).localCheckpoint()
     stats = spark.read.parquet(stats_path).localCheckpoint()
     lo = LM_KEEP_LO if keep_lo is None else keep_lo
@@ -557,7 +400,7 @@ def streaming_bm25_scores(
     scalars = spark.read.parquet(scalars_path)
     qterms = spark.read.parquet(qterms_path).localCheckpoint()
     # prune the vocab-sized terms table to the batch's query tokens
-    # ONCE, outside the micro-batch loop (r11): bm25_score inner-joins
+    # ONCE, outside the micro-batch loop: bm25_score inner-joins
     # on qterms' tokens anyway, so the pruned frame is semantically
     # identical — but without it every micro-batch re-scanned and
     # re-broadcast the full terms parquet (guide §4.5's once-per-task
@@ -680,8 +523,8 @@ def streaming_ivf_pq_encode(
     # the codebooks are FROZEN for the whole stream, so the encode
     # projection's Column trees (centroid argmin + M codebook argmin
     # lambdas — ~0.5 s of driver-side expression construction,
-    # measured) are built ONCE here, not once per micro-batch (r11;
-    # guide §4's heavyweight-init-once discipline applied to plan
+    # measured) are built ONCE here, not once per micro-batch (guide
+    # §4's heavyweight-init-once discipline applied to plan
     # construction)
     encoder = ivf_pq_corpus_encoder(
         spark, centroids, codebooks, vec_col, id_col, residual
@@ -754,7 +597,7 @@ def run_streaming_scd2(
     O(batch + affected users' version rows): untouched users' rows are
     never recomputed.
 
-    Partition-scoped carry-over (r8 verdict #4): the table lives hash-
+    Partition-scoped carry-over: the table lives hash-
     bucketed by user (``__bucket = pmod(xxhash64(user_id), n_buckets)``
     — layout only, dropped by readers), and a batch rewrites ONLY the
     buckets its users hash into: the state scan partition-prunes to
@@ -767,7 +610,7 @@ def run_streaming_scd2(
     null probe injects them), hash to a real bucket, and must re-
     collapse against their prior versions like any user.
 
-    Crash atomicity (r8/r9 ADVICE, closed round 10): the bucket swap is
+    Crash atomicity: the bucket swap is
     a two-phase stage/intent/rename commit (operators/commit.py — the
     BM25 index-refresh protocol applied to partition dirs).  The batch
     stages its recomputed buckets to a reader-hidden sibling, records an
@@ -778,7 +621,7 @@ def run_streaming_scd2(
     state is re-read (post-intent).  No bucket is ever observable
     empty; pinned by test_streaming_scd2_crash_replay.
 
-    Layout persistence (r9 ADVICE): ``n_buckets`` is written once as a
+    Layout persistence: ``n_buckets`` is written once as a
     hidden marker file beside the table and asserted on every later
     run — a resume with a different ``n_buckets`` raises instead of
     silently pruning the wrong partitions and duplicating history.
@@ -826,7 +669,7 @@ def run_streaming_scd2(
         # (q25's contract).  Not just hygiene: a NULL-type row passes
         # through the lag collapse as a run BREAKER without becoming a
         # run START, so keeping them makes the version rows an
-        # insufficient statistic and stream ≠ batch (r9 null probe).
+        # insufficient statistic and stream ≠ batch (the null probe).
         b = batch_df.select("user_id", "event_type", "ts", "event_id").where(
             F.col("event_type").isNotNull()
         )

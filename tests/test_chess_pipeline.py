@@ -270,23 +270,28 @@ def test_gold_build(spark, silver, openings_lookup):
     assert "French Defense: Advance Variation" in names
 
 
-def test_fact_merge_idempotent_latest_wins(spark, silver):
-    """T4/J2 property tests: re-running a month is a no-op; a re-pull
-    with a newer last_updated replaces rows (latest-wins)."""
-    gold1 = build_gold(spark, silver, fx.USERNAME, "2024-02-01 00:00:00")
-    fact1 = gold1["fact_games"].cache()
-    # same month again, same run_ts → identical fact
-    gold2 = build_gold(
-        spark, silver, fx.USERNAME, "2024-02-01 00:00:00", existing_fact=fact1
+def test_fact_merge_idempotent_latest_wins(spark, silver, tmp_path):
+    """T4/J2 property tests on the one gold landing path: re-landing a
+    month is a no-op; a re-pull with a newer last_updated replaces rows
+    (latest-wins)."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.gold import (
+        land_gold,
     )
-    fact2 = gold2["fact_games"].cache()
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.streaming.pipeline import (
+        read_gold_fact,
+    )
+
+    gold = str(tmp_path / "gold")
+    land_gold(spark, silver, gold, fx.USERNAME, "2024-02-01 00:00:00", "t1")
+    fact1 = read_gold_fact(spark, gold).localCheckpoint()
+    # same month again, same run_ts → identical fact
+    land_gold(spark, silver, gold, fx.USERNAME, "2024-02-01 00:00:00", "t2")
+    fact2 = read_gold_fact(spark, gold)
     assert fact2.count() == fact1.count()
     assert fact2.exceptAll(fact1).count() == 0
-    # re-pull with newer ts → last_updated advances, count unchanged
-    gold3 = build_gold(
-        spark, silver, fx.USERNAME, "2024-03-01 00:00:00", existing_fact=fact1
-    )
-    fact3 = gold3["fact_games"]
+    # re-pull with newer ts → every last_updated advances, count unchanged
+    land_gold(spark, silver, gold, fx.USERNAME, "2024-03-01 00:00:00", "t3")
+    fact3 = read_gold_fact(spark, gold)
     assert fact3.count() == fact1.count()
     assert (
         fact3.agg(F.min("last_updated")).collect()[0][0]
@@ -295,17 +300,17 @@ def test_fact_merge_idempotent_latest_wins(spark, silver):
 
 
 def test_dim_merge_insert_if_absent(spark, silver):
-    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.gold import (
-        merge_dim,
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.merge import (
+        insert_if_absent,
     )
 
     dim1 = build_dim_date(silver).cache()
-    merged = merge_dim(dim1, build_dim_date(silver), keys=["game_date"])
+    merged = insert_if_absent(dim1, build_dim_date(silver), keys=["game_date"])
     assert merged.count() == dim1.count()  # never shrinks, no dups
     # new month adds rows monotonically
     raw2 = spark.createDataFrame(fx.month_payload(2), RAW_GAME_SCHEMA)
     dim2 = build_dim_date(bronze_to_silver(raw2))
-    merged2 = merge_dim(dim1, dim2, keys=["game_date"])
+    merged2 = insert_if_absent(dim1, dim2, keys=["game_date"])
     assert merged2.count() >= dim1.count()
 
 

@@ -6,6 +6,9 @@ uncached one (the memo caches expression structure, never data)."""
 
 from __future__ import annotations
 
+import sys
+import threading
+
 from pyspark.sql import functions as F
 
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark import session as S
@@ -31,6 +34,63 @@ def test_same_key_returns_same_tree(spark):
     c3 = cached_column(spark, ("t", 2), build)
     assert c3 is not c1
     assert len(calls) == 2
+
+
+def test_slow_builder_does_not_block_other_keys(spark):
+    """Builders run outside the cache lock: while key A's builder waits,
+    key B's builder still runs in another thread and releases it."""
+    started, released = threading.Event(), threading.Event()
+    waited = {}
+
+    def build_a():
+        started.set()
+        waited["released"] = released.wait(10)
+        return F.lit("a")
+
+    def build_b():
+        released.set()
+        return F.lit("b")
+
+    keys = [("slow-builder", "A"), ("slow-builder", "B")]
+    a = threading.Thread(target=cached_column, args=(spark, keys[0], build_a))
+    a.start()
+    assert started.wait(10)
+    b = threading.Thread(target=cached_column, args=(spark, keys[1], build_b))
+    b.start()
+    a.join(30)
+    b.join(30)
+    for k in keys:
+        S._EXPR_CACHE[spark].pop(k, None)
+    assert not a.is_alive() and not b.is_alive()
+    assert waited["released"]
+
+
+def test_racing_builders_all_get_the_first_insert(spark):
+    """Threads racing on the same missing keys may each build, but the
+    first insert wins: every caller of a key gets one object."""
+    keys = [("race", i) for i in range(4)]
+    got = {k: [] for k in keys}
+    interval = sys.getswitchinterval()
+
+    def worker():
+        for _ in range(50):
+            for k in keys:
+                got[k].append(cached_column(spark, k, object))
+
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+    finally:
+        sys.setswitchinterval(interval)
+        for k in keys:
+            S._EXPR_CACHE[spark].pop(k, None)
+    assert not any(t.is_alive() for t in threads)
+    for k in keys:
+        assert len(got[k]) == 400 and len({id(o) for o in got[k]}) == 1, k
 
 
 def test_cached_tree_reused_across_plans(spark):
@@ -67,7 +127,7 @@ def test_minhash_signature_cached_equals_fresh(spark):
 def test_cache_bounded_fifo_eviction(spark):
     """Value-keyed entries (pq encoders key on whole codebooks) must
     not accumulate unboundedly in a long-lived session that retrains
-    models (r11 ADVICE): past _EXPR_CACHE_MAX the oldest entry is
+    models: past _EXPR_CACHE_MAX the oldest entry is
     evicted and a re-request simply rebuilds."""
     per_session = S._EXPR_CACHE[spark] if S._EXPR_CACHE else None
     saved = dict(per_session) if per_session is not None else None
@@ -92,9 +152,9 @@ def test_cache_bounded_fifo_eviction(spark):
 
 
 def test_pq_encode_accepts_list_carry(spark):
-    """A list-valued carry was accepted before the r11 memo (it is
-    only iterated) — the memo key must normalize it, not raise
-    TypeError: unhashable (r11 ADVICE)."""
+    """A list-valued carry was accepted before the memo (it is only
+    iterated) — the memo key must normalize it, not raise TypeError:
+    unhashable."""
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.pq import (
         pq_encode,
     )

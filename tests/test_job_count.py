@@ -18,10 +18,10 @@ from end_to_end_chess_com_etl_and_analytics_pipeline_spark.streaming.pipeline im
     run_incremental_gold,
 )
 
-# Measured counts (25 and 13 on Spark 4.1, local mode) plus a little
+# Measured counts (21 and 13 on Spark 4.1, local mode) plus a little
 # headroom for plan-shape drift across Spark releases.  The streaming
 # count includes the stream's own jobs around its one micro-batch.
-STREAMING_JOB_BUDGET = 28
+STREAMING_JOB_BUDGET = 24
 WAREHOUSE_JOB_BUDGET = 15
 
 

@@ -234,7 +234,7 @@ def test_incremental_gold_cross_month_correction(spark, tmp_path):
     """A re-pull that CORRECTS a game's date into a different month must
     retire the stale row in the old month's partition: exactly one row
     per game_url survives, living in the corrected month (the
-    stale-month probe in run_incremental_gold's merge_batch)."""
+    stale-month probe in plans.gold.land_gold)."""
     import json
 
     bronze = tmp_path / "bronze"
