@@ -1,40 +1,35 @@
-"""Crash-atomic partition overwrite: a two-phase stage/intent/rename
-commit for partitioned parquet tables maintained in place.
+"""The package's one in-place rewrite protocol for partitioned parquet
+tables — a crash-atomic two-phase stage/intent/rename commit — and its
+one home for Hadoop FileSystem work: the FS handle, the checked rename
+and the table walk.
 
-Spark's dynamic partition overwrite deletes and rewrites the affected
-partition directories directly in the live table; a crash mid-swap can
-leave an affected partition empty, and a foreachBatch checkpoint replay
-then rebuilds that partition from the batch's rows alone — silently
-losing its prior history (the streaming SCD2 and incremental-gold
-sinks both replay that way).  This module applies the same two-phase
-protocol ``bm25_refresh_index`` uses for its index artifacts
-(operators/retrieval.py) to arbitrary partitioned tables:
+Gold's month swap (plans/gold.py::land_gold), the streaming SCD2 dim's
+bucket swap and compaction / z-order maintenance (operators/compact.py)
+all land here.  Rewriting a partition dir in place (Spark's dynamic
+partition overwrite) deletes it before the new files exist: a crash in
+between leaves it empty, and a foreachBatch replay then rebuilds it
+from the batch's rows alone, silently losing its prior history.
 
-- **Phase 1 (stage):** write the batch's full replacement content for
-  the affected partitions to ``{table}/.staged_{token}`` — a
-  dot-prefixed sibling Spark's file listing hides from every reader of
-  the live table — then record partition directories to DROP (the
-  caller's rewrite-set partitions the batch emptied, which dynamic
-  overwrite cannot express) as empty marker dirs under
-  ``.staged_{token}/_drops/``, and finally create the intent file
-  ``{table}/._swap_intent_{token}``.  Nothing live is touched; a crash
-  anywhere in phase 1 leaves the live table exactly as it was, and the
-  checkpoint replay re-stages under the same deterministic token with
-  ``mode("overwrite")``, clobbering the leftovers.
-- **Phase 2 (swap):** per staged partition directory: delete the live
-  directory, rename the staged one in; then delete each drop-marked
-  live directory; then remove the staging root and the intent.  Every
-  step is skip-if-already-done, so :func:`recover_pending_swaps` —
-  called before any read of the table — resumes a crashed phase 2
-  exactly (the intent file means staging completed against the
-  pre-swap state, so replaying the renames is correct).
+- **Phase 1 (stage):** write the replacement content of the affected
+  partitions under ``{table}/.staged_{token}`` (one partitioned frame,
+  or one frame per leaf at ``{staged}/{rel}``) — a dot-prefixed dir
+  Spark's listing hides from every reader.  :func:`commit_staged` then
+  drop-marks the rewrite-set partitions the batch emptied (empty dirs
+  under ``.staged_{token}/_drops/``) and creates the intent file
+  ``{table}/._swap_intent_{token}``.  A crash in phase 1 leaves the
+  live table as it was; the replay re-stages under the same token.
+- **Phase 2 (swap):** per staged leaf: delete the live dir, rename the
+  staged one in; then delete each drop-marked live dir and any parent
+  it left empty; then remove the staging root and the intent.  Every
+  step is skip-if-already-done, so :func:`recover_pending_swaps`,
+  called before any read of the table, resumes a crashed phase 2
+  exactly (the intent means staging completed against the pre-swap
+  state).
 
 Directory renames are atomic on HDFS and POSIX filesystems; object
 stores without atomic rename need their committer or a transactional
-table format instead — the same caveat the BM25 index carries.  All
-metadata goes through the Hadoop FS API so scheme-prefixed table roots
-(viewfs://, hdfs://) behave exactly like file:// (the fs_exists lesson,
-sources/tables.py:273).
+table format.  All metadata goes through the Hadoop FS API, so
+scheme-prefixed roots (viewfs://, hdfs://) behave like file://.
 """
 
 from __future__ import annotations
@@ -43,6 +38,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import _hidden_path
+
 _INTENT = "._swap_intent_"
 _STAGED = ".staged_"
 # Spark's dir name for a NULL partition value; integer and plain string
@@ -50,11 +47,45 @@ _STAGED = ".staged_"
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _fs(spark: SparkSession, path: str):
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop ``Path`` class, the ``FileSystem`` of ``path``)."""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     P = jvm.org.apache.hadoop.fs.Path
     return P, P(path).getFileSystem(hconf)
+
+
+def rename_or_die(fs, src, dst) -> None:
+    """``fs.rename``, raising where the FileSystem returns False (a
+    missing source, an existing destination) instead of throwing."""
+    if not fs.rename(src, dst):
+        raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def walk_table(fs, root) -> list[tuple[str, list]]:
+    """``(rel, data files)`` for every dir under the Hadoop Path
+    ``root`` (itself as rel ``''``) that holds data files or has no
+    visible subdir.  Spark's hidden-path rule (sources/tables.py::_hidden_path)
+    skips staging roots, intents, drop markers, ``_SUCCESS`` and
+    checksums.  A staged dir whose leaf was renamed out has no files,
+    so phase 2 does not mistake it for a leaf."""
+    out: list[tuple[str, list]] = []
+
+    def rec(path, rel):
+        kids = [
+            k
+            for k in fs.listStatus(path)
+            if not _hidden_path(k.getPath().getName())
+        ]
+        dirs = [k.getPath() for k in kids if k.isDirectory()]
+        for d in dirs:
+            rec(d, f"{rel}/{d.getName()}" if rel else d.getName())
+        files = [k for k in kids if k.isFile()]
+        if files or not dirs:
+            out.append((rel, files))
+
+    rec(root, "")
+    return out
 
 
 def has_partition_dirs(spark: SparkSession, table_path: str) -> bool:
@@ -62,7 +93,7 @@ def has_partition_dirs(spark: SparkSession, table_path: str) -> bool:
     directory.  The existence check for two-phase-maintained tables —
     ``fs_exists`` on the root is wrong here because markers, intents and
     staging leftovers create the root before any data goes live."""
-    P, fs = _fs(spark, table_path)
+    P, fs = hadoop_fs(spark, table_path)
     root = P(table_path.rstrip("/"))
     if not fs.exists(root):
         return False
@@ -72,62 +103,43 @@ def has_partition_dirs(spark: SparkSession, table_path: str) -> bool:
     )
 
 
-def _leaf_partitions(fs, P, root, require_files: bool) -> list[str]:
-    """Relative paths of the leaf partition dirs under ``root`` —
-    every path component contains ``=``; a leaf has no ``=`` subdirs.
-    ``require_files`` guards phase-2 idempotency: after a leaf is
-    renamed out, its now-empty parent must not be mistaken for a leaf
-    (it would clobber the live parent); drop markers are legitimately
-    empty, so the drops walk disables the guard."""
-    out: list[str] = []
-
-    def rec(path, rel):
-        kids = list(fs.listStatus(path))
-        subparts = [
-            k
-            for k in kids
-            if k.isDirectory() and "=" in k.getPath().getName()
-        ]
-        if subparts:
-            for k in subparts:
-                name = k.getPath().getName()
-                rec(k.getPath(), f"{rel}/{name}" if rel else name)
-        elif rel and (not require_files or any(k.isFile() for k in kids)):
-            out.append(rel)
-
-    rec(root, "")
-    return out
-
-
-def _rename_or_die(fs, src, dst) -> None:
-    if not fs.rename(src, dst):
-        raise IOError(f"partition swap rename failed: {src} -> {dst}")
+def staged_root(table_path: str, token: str) -> str:
+    """The reader-hidden dir phase 1 writes swap ``token``'s content to."""
+    return f"{table_path.rstrip('/')}/{_STAGED}{token}"
 
 
 def _finish_swap(spark: SparkSession, table_path: str, token: str) -> None:
     """Phase 2: swap staged partition dirs live, apply drops, clear the
     intent.  Idempotent at every step — safe to re-run after a crash at
     any point."""
-    P, fs = _fs(spark, table_path)
+    P, fs = hadoop_fs(spark, table_path)
     root = table_path.rstrip("/")
-    staged = P(f"{root}/{_STAGED}{token}")
-    if fs.exists(staged):
-        drops_root = P(f"{root}/{_STAGED}{token}/_drops")
-        if fs.exists(drops_root):
-            for rel in _leaf_partitions(fs, P, drops_root, False):
-                live = P(f"{root}/{rel}")
-                if fs.exists(live):
-                    fs.delete(live, True)
-        for rel in _leaf_partitions(fs, P, staged, True):
-            src = P(f"{root}/{_STAGED}{token}/{rel}")
+    staged = staged_root(root, token)
+    if fs.exists(P(staged)):
+        for rel, files in walk_table(fs, P(staged)):
+            if not (rel and files):
+                continue
             dst = P(f"{root}/{rel}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            parent = dst.getParent()
-            if not fs.exists(parent):
-                fs.mkdirs(parent)
-            _rename_or_die(fs, src, dst)
-        fs.delete(staged, True)
+            fs.delete(dst, True)
+            fs.mkdirs(dst.getParent())
+            rename_or_die(fs, P(f"{staged}/{rel}"), dst)
+        drops = P(f"{staged}/_drops")
+        if fs.exists(drops):
+            for rel, _ in walk_table(fs, drops):
+                if not rel:
+                    continue
+                live = P(f"{root}/{rel}")
+                fs.delete(live, True)
+                # a parent the drop emptied (year=Y after its last
+                # month) holds no partition; has_partition_dirs must
+                # not count it
+                parent = live.getParent()
+                for _ in range(rel.count("/")):
+                    if fs.exists(parent) and len(fs.listStatus(parent)):
+                        break
+                    fs.delete(parent, False)
+                    parent = parent.getParent()
+        fs.delete(P(staged), True)
     fs.delete(P(f"{root}/{_INTENT}{token}"), False)
 
 
@@ -136,7 +148,7 @@ def recover_pending_swaps(spark: SparkSession, table_path: str) -> list[str]:
     clear staging leftovers from pre-intent crashes (no intent — the
     checkpoint replay re-stages them from scratch).  Runs before every
     merge batch and before the table is read; returns finished tokens."""
-    P, fs = _fs(spark, table_path)
+    P, fs = hadoop_fs(spark, table_path)
     root = P(table_path.rstrip("/"))
     if not fs.exists(root):
         return []
@@ -150,6 +162,28 @@ def recover_pending_swaps(spark: SparkSession, table_path: str) -> list[str]:
     return tokens
 
 
+def commit_staged(
+    spark: SparkSession,
+    table_path: str,
+    token: str,
+    rewrite_set: Iterable[str] = (),
+) -> None:
+    """Commit the content staged at :func:`staged_root`: drop-mark each
+    partition of ``rewrite_set`` (relative leaf paths) that was not
+    staged, write the intent, then run phase 2.  The staged leaf dirs
+    tell which partitions were filled, so that takes a listing, not a
+    Spark job."""
+    P, fs = hadoop_fs(spark, table_path)
+    staged = staged_root(table_path, token)
+    drops = set(rewrite_set)
+    if drops:
+        drops -= {rel for rel, files in walk_table(fs, P(staged)) if files}
+    for rel in drops:
+        fs.mkdirs(P(f"{staged}/_drops/{rel}"))
+    fs.createNewFile(P(f"{table_path.rstrip('/')}/{_INTENT}{token}"))
+    _finish_swap(spark, table_path, token)
+
+
 def two_phase_partition_overwrite(
     spark: SparkSession,
     df: DataFrame,
@@ -159,34 +193,31 @@ def two_phase_partition_overwrite(
     rewrite_set: Iterable[tuple] = (),
 ) -> None:
     """Crash-atomic replacement of exactly the partitions present in
-    ``df``.  ``rewrite_set`` holds the partition value tuples (in
-    ``partition_cols`` order) the caller rewrites; each one ``df`` has no
-    rows for — a partition the batch emptied, which dynamic overwrite
-    cannot express — is dropped in the same phase 2.  The staged leaf
-    dirs tell which partitions ``df`` filled, so working that out takes
-    a listing, not a Spark job.
+    ``df``: stage it partitioned by ``partition_cols``, then
+    :func:`commit_staged`.  ``rewrite_set`` holds the partition value
+    tuples (in ``partition_cols`` order) the caller rewrites; each one
+    ``df`` has no rows for — a partition the batch emptied — is dropped
+    in the same phase 2.
 
     ``token`` must be deterministic per batch (the micro-batch id): a
     replay after a pre-intent crash restages over its own leftovers; a
     replay after the intent finds phase 2 completed or completable by
     :func:`recover_pending_swaps` before it re-reads state."""
-    P, fs = _fs(spark, table_path)
-    root = table_path.rstrip("/")
-    staged = f"{root}/{_STAGED}{token}"
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
-    drops = {
-        "/".join(
-            f"{c}={_NULL_PARTITION if v is None else v}"
-            for c, v in zip(partition_cols, values)
-        )
-        for values in rewrite_set
-    }
-    if drops:
-        drops -= set(_leaf_partitions(fs, P, P(staged), True))
-    for rel in drops:
-        fs.mkdirs(P(f"{staged}/_drops/{rel}"))
-    fs.createNewFile(P(f"{root}/{_INTENT}{token}"))
-    _finish_swap(spark, table_path, token)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(
+        staged_root(table_path, token)
+    )
+    commit_staged(
+        spark,
+        table_path,
+        token,
+        [
+            "/".join(
+                f"{c}={_NULL_PARTITION if v is None else v}"
+                for c, v in zip(partition_cols, values)
+            )
+            for values in rewrite_set
+        ],
+    )
 
 
 def read_int_marker(
@@ -195,7 +226,7 @@ def read_int_marker(
     """Read a layout parameter persisted as an empty dot-file
     ``{prefix}{value}`` in the table root (hidden from readers), or
     None if the table carries no marker."""
-    P, fs = _fs(spark, table_path)
+    P, fs = hadoop_fs(spark, table_path)
     root = P(table_path.rstrip("/"))
     if not fs.exists(root):
         return None
@@ -209,7 +240,7 @@ def read_int_marker(
 def write_int_marker(
     spark: SparkSession, table_path: str, prefix: str, value: int
 ) -> None:
-    P, fs = _fs(spark, table_path)
+    P, fs = hadoop_fs(spark, table_path)
     root = table_path.rstrip("/")
     fs.mkdirs(P(root))
     fs.createNewFile(P(f"{root}/{prefix}{value}"))

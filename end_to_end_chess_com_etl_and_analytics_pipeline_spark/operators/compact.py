@@ -19,13 +19,16 @@ Spark-first shape:
   ``coalesce(ceil(bytes / target))`` pass — coalesce, not
   repartition: compaction must not shuffle, it only merges read
   splits into fewer write tasks;
-- the rewrite lands via dynamic partition overwrite, so concurrent
-  readers of OTHER partitions never see a hole.
+- the rewritten partitions land through operators/commit.py: each is
+  staged under one reader-hidden root and all are swapped in by one
+  crash-atomic commit, so readers see each partition entirely old or
+  entirely new, a crash leaves a swap that ``recover_pending_swaps``
+  finishes, and untouched partitions are never disturbed.
 
 Used with `sources.tables.write_parquet` partitioned layouts; pinned
 by tests/test_layout.py (file count shrinks to the bin-packed target,
 bytes within tolerance, data identical, untouched partitions keep
-their files).
+their files, staging leftovers and a crashed swap).
 """
 
 from __future__ import annotations
@@ -35,49 +38,82 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..session import local_df
+from . import commit
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # the classic HDFS-block target
+# every compaction stages under one token: recover_pending_swaps, run
+# first, finishes or clears a crashed one before the table is listed
+_TOKEN = "compact"
+
+
+def _target_files(total_bytes: int, target_bytes: int) -> int:
+    return max(1, math.ceil(total_bytes / target_bytes))
 
 
 def partition_file_stats(
     spark: SparkSession, path: str
 ) -> list[tuple[str, int, int]]:
-    """(partition_rel_path, n_files, total_bytes) per leaf directory of
-    a partitioned parquet table — driver-side FileSystem metadata only.
-    For an unpartitioned table, one entry with rel_path ''."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
+    """(partition_rel_path, n_files, total_bytes) per directory of a
+    parquet table that holds data files — driver-side FileSystem
+    metadata only, through commit.walk_table, so hidden dirs (staging
+    leftovers among them) are never counted.  For an unpartitioned
+    table, one entry with rel_path ''.  Data files sitting next to
+    partition subdirs (an unpartitioned writer raced a partitioned one)
+    are fragmentation too and get their own entry."""
+    P, fs = commit.hadoop_fs(spark, path)
+    return [
+        (rel, len(files), sum(f.getLen() for f in files))
+        for rel, files in commit.walk_table(fs, P(path))
+        if files
+    ]
 
-    def walk(p):  # -> list of (dir_path, [data files])
-        files, subdirs = [], []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                subdirs.append(st.getPath())
-            elif not name.startswith("_") and not name.startswith("."):
-                files.append(st)
-        if subdirs:
-            out = []
-            for d in subdirs:
-                out.extend(walk(d))
-            # Data files sitting NEXT TO subdirectories (mixed level —
-            # e.g. an unpartitioned writer raced a partitioned one) are
-            # still fragmentation; emit them rather than dropping them.
-            if files:
-                out.append((p, files))
-            return out
-        return [(p, files)] if files else []
 
-    root_str = fs.makeQualified(root).toString()
-    out = []
-    for d, files in walk(root):
-        rel = fs.makeQualified(d).toString()[len(root_str):].lstrip("/")
-        out.append(
-            (rel, len(files), sum(f.getLen() for f in files))
-        )
-    return out
+def _coalesced(df: DataFrame, dest: str, n_files: int) -> None:
+    df.coalesce(n_files).write.mode("overwrite").parquet(dest)
+
+
+def _rewrite_fragmented(
+    spark: SparkSession,
+    path: str,
+    partition_by: list[str],
+    target_bytes: int,
+    min_files: int,
+    write,
+) -> tuple[list[tuple[str, int, int]], list[str]]:
+    """Rewrite every over-fragmented data dir of ``path`` with
+    ``write(df, dest, n_files)``; returns (the stats it chose from, the
+    rewritten rel paths).  Partition leaves are staged under one root
+    and swapped in by one ``commit.commit_staged``.  The unpartitioned
+    root cannot be a leaf swap: it is written to a sibling dir that is
+    renamed over the deleted table.  A data dir that is not a
+    ``partition_by`` leaf (files beside partition subdirs) is refused,
+    since swapping it would delete the partitions beneath it."""
+    root = path.rstrip("/")
+    commit.recover_pending_swaps(spark, root)
+    stats = partition_file_stats(spark, root)
+    todo = []
+    for rel, n, b in stats:
+        n_out = _target_files(b, target_bytes)
+        if n < min_files or n <= n_out:
+            continue
+        if [c.split("=", 1)[0] for c in rel.split("/") if c] != list(partition_by):
+            raise ValueError(
+                f"{root}/{rel} is not a leaf of a table partitioned by "
+                f"{partition_by}; it cannot be compacted in place"
+            )
+        todo.append((rel, n_out))
+    if not partition_by and todo:
+        P, fs = commit.hadoop_fs(spark, root)
+        tmp = root + ".__compacting__"
+        write(spark.read.parquet(root), tmp, todo[0][1])
+        fs.delete(P(root), True)
+        commit.rename_or_die(fs, P(tmp), P(root))
+    elif todo:
+        staged = commit.staged_root(root, _TOKEN)
+        for rel, n_out in todo:
+            write(spark.read.parquet(f"{root}/{rel}"), f"{staged}/{rel}", n_out)
+        commit.commit_staged(spark, root, _TOKEN)
+    return stats, [rel for rel, _ in todo]
 
 
 def compact_partitions(
@@ -87,57 +123,20 @@ def compact_partitions(
     target_bytes: int = DEFAULT_TARGET_BYTES,
     min_files: int = 2,
 ) -> list[str]:
-    """Bin-pack every over-fragmented partition of a partitioned parquet
-    table to ``ceil(total_bytes / target_bytes)`` files; returns the
-    relative paths of the partitions rewritten.
+    """Bin-pack every over-fragmented partition of a parquet table
+    partitioned by ``partition_by`` (``[]`` for an unpartitioned one)
+    to ``ceil(total_bytes / target_bytes)`` files; returns the relative
+    paths of the partitions rewritten.
 
     A partition qualifies when it holds MORE files than its bin-packed
     target (and at least ``min_files``) — compaction only ever reduces
-    file count.  The rewrite reads just the selected partitions
-    (partition-pruned scan), merges read splits with ``coalesce`` (no
-    shuffle), and lands via dynamic partition overwrite so untouched
+    file count.  The rewrite reads just the selected partition dirs,
+    merges read splits with ``coalesce`` (no shuffle), and lands
+    through one two-phase commit (operators/commit.py), so untouched
     partitions — and concurrent readers — are never disturbed."""
-    stats = partition_file_stats(spark, path)
-    todo = [
-        (rel, n, b)
-        for rel, n, b in stats
-        if n >= min_files and n > max(1, math.ceil(b / target_bytes))
-    ]
-    rewritten = []
-    for rel, n, b in todo:
-        n_out = max(1, math.ceil(b / target_bytes))
-        if rel == "":
-            # Unpartitioned table (or data files at the root): Spark
-            # cannot overwrite a path it is reading, so stage the
-            # compacted copy through a sibling temp dir and swap it in
-            # with a FileSystem rename (metadata-only on HDFS/local).
-            tmp = path.rstrip("/") + ".__compacting__"
-            spark.read.parquet(path).coalesce(n_out).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            jvm = spark.sparkContext._jvm
-            conf = spark.sparkContext._jsc.hadoopConfiguration()
-            p_root = jvm.org.apache.hadoop.fs.Path(path)
-            p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-            fs = p_root.getFileSystem(conf)
-            fs.delete(p_root, True)
-            fs.rename(p_tmp, p_root)
-            rewritten.append(rel)
-            continue
-        # partition-pruned read of exactly this leaf; base-path keeps
-        # the partition columns in the frame for the overwrite
-        part_df: DataFrame = (
-            spark.read.option("basePath", path).parquet(f"{path}/{rel}")
-        )
-        (
-            part_df.coalesce(n_out)
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-        rewritten.append(rel)
-    return rewritten
+    return _rewrite_fragmented(
+        spark, path, partition_by, target_bytes, min_files, _coalesced
+    )[1]
 
 
 def maintain_table(
@@ -148,61 +147,38 @@ def maintain_table(
     target_bytes: int = DEFAULT_TARGET_BYTES,
     min_files: int = 2,
 ) -> dict:
-    """The lakehouse maintenance loop, one idempotent pass:
-    ``fragmentation_report`` picks the over-fragmented partitions, and
-    each is rewritten ONCE — bin-packed via ``compact_partitions`` when
-    ``zorder`` is None, or z-order-clustered on ``zorder=(col_a, col_b)``
-    (``operators.layout.write_zordered``) when given, so the single
-    rewrite pays for both file-count AND scan-pruning health.
+    """The lakehouse maintenance loop, one idempotent pass: the
+    fragmentation report picks the over-fragmented partitions, and each
+    is rewritten ONCE — bin-packed as ``compact_partitions`` does when
+    ``zorder`` is None, or z-order-clustered on ``zorder=(col_a,
+    col_b)`` (``operators.layout.write_zordered``) when given, so the
+    single rewrite pays for both file-count AND scan-pruning health.
 
-    The z-order rewrite stages each partition through an
-    underscore-prefixed temp dir (invisible to parquet listing) and
-    swaps it in with a FileSystem rename, so concurrent readers of
-    OTHER partitions are never disturbed.  A second pass on a healthy
-    table rewrites nothing — that is the idempotence contract pinned by
-    tests/test_layout.py::test_maintain_table_end_to_end.
+    The rewrites land exactly as compaction's do: staged under one
+    reader-hidden root and swapped in by one two-phase commit
+    (operators/commit.py).  A second pass on a healthy table rewrites
+    nothing — that is the idempotence contract pinned by
+    tests/test_layout.py::test_maintain_table_end_to_end_over_streaming_gold.
 
     Returns {"report": [Row…], "rewritten": [rel…]}.
     """
     from .layout import write_zordered
 
-    report = fragmentation_report(spark, path, target_bytes).collect()
-    if zorder is None:
-        rewritten = compact_partitions(
-            spark, path, partition_by, target_bytes, min_files
-        )
-        return {"report": report, "rewritten": rewritten}
+    def zordered(df: DataFrame, dest: str, n_files: int) -> None:
+        write_zordered(df, *zorder, dest, n_files=n_files)
 
-    col_a, col_b = zorder
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    rewritten = []
-    for r in report:
-        if not (r["n_files"] >= min_files and r["n_files"] > r["target_files"]):
-            continue
-        rel = r["partition"]
-        leaf = f"{path}/{rel}" if rel else path
-        # rel == '': temp must live OUTSIDE path or the swap-delete
-        # would remove it; rel != '': an underscore-prefixed sibling
-        # inside the table is invisible to readers mid-maintenance.
-        tmp = (
-            path.rstrip("/") + ".__maintaining__"
-            if rel == ""
-            else f"{path}/_maint_{rel.replace('/', '_').replace('=', '_')}"
-        )
-        write_zordered(
-            spark.read.parquet(leaf),
-            col_a,
-            col_b,
-            tmp,
-            n_files=int(r["target_files"]),
-        )
-        p_leaf = jvm.org.apache.hadoop.fs.Path(leaf)
-        fs.delete(p_leaf, True)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), p_leaf)
-        rewritten.append(rel)
-    return {"report": report, "rewritten": rewritten}
+    stats, rewritten = _rewrite_fragmented(
+        spark,
+        path,
+        partition_by,
+        target_bytes,
+        min_files,
+        _coalesced if zorder is None else zordered,
+    )
+    return {
+        "report": _report(spark, stats, target_bytes).collect(),
+        "rewritten": rewritten,
+    }
 
 
 def fragmentation_report(
@@ -211,10 +187,13 @@ def fragmentation_report(
     """The monitoring face: one row per partition with file count,
     bytes, and the bin-packed target — what an operator dashboards to
     decide when to run compaction."""
-    rows = [
-        (rel, n, b, max(1, math.ceil(b / target_bytes)))
-        for rel, n, b in partition_file_stats(spark, path)
-    ]
+    return _report(spark, partition_file_stats(spark, path), target_bytes)
+
+
+def _report(
+    spark: SparkSession, stats: list[tuple[str, int, int]], target_bytes: int
+) -> DataFrame:
+    rows = [(rel, n, b, _target_files(b, target_bytes)) for rel, n, b in stats]
     return local_df(
         spark,
         rows,

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import round_fixed
 from ..functions.text import tokens
 from ..session import run_concurrently
+from .commit import hadoop_fs, rename_or_die
 
 
 def bm25_tf(
@@ -255,22 +256,6 @@ def bm25_build_index(
     write_bm25_index(tf, terms, scalars, path)
 
 
-def _index_fs(spark: "SparkSession", path: str):  # noqa: F821
-    """(hadoop Path class, FileSystem) for an index root — all commit
-    metadata goes through the Hadoop FS API so scheme-prefixed roots
-    (viewfs://, hdfs://) behave exactly like file:// (the fs_exists
-    lesson, sources/tables.py:273)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    return P, P(path).getFileSystem(hconf)
-
-
-def _rename_or_die(fs, src, dst) -> None:
-    if not fs.rename(src, dst):
-        raise IOError(f"index commit rename failed: {src} -> {dst}")
-
-
 def _finish_refresh_commit(spark: "SparkSession", path: str, token: str) -> None:  # noqa: F821
     """Phase 2 of a refresh: swap the fully-staged artifacts live, then
     mark the delta applied and drop the intent.  Every step is a
@@ -279,13 +264,13 @@ def _finish_refresh_commit(spark: "SparkSession", path: str, token: str) -> None
     and each staged tf file moves under a token-deterministic name (a
     re-run sees the destination and discards the source instead of
     appending a second copy)."""
-    P, fs = _index_fs(spark, path)
+    P, fs = hadoop_fs(spark, path)
     root = path.rstrip("/")
     for art in ("terms", "scalars"):
         staged = P(f"{root}/{art}.__staged_{token}__")
         if fs.exists(staged):
             fs.delete(P(f"{root}/{art}"), True)
-            _rename_or_die(fs, staged, P(f"{root}/{art}"))
+            rename_or_die(fs, staged, P(f"{root}/{art}"))
     staged_tf = P(f"{root}/tf.__delta_{token}__")
     if fs.exists(staged_tf):
         for st in fs.listStatus(staged_tf):
@@ -296,7 +281,7 @@ def _finish_refresh_commit(spark: "SparkSession", path: str, token: str) -> None
             if fs.exists(dst):
                 fs.delete(st.getPath(), False)
             else:
-                _rename_or_die(fs, st.getPath(), dst)
+                rename_or_die(fs, st.getPath(), dst)
         fs.delete(staged_tf, True)
     fs.mkdirs(P(f"{root}/_applied_deltas"))
     fs.createNewFile(P(f"{root}/_applied_deltas/{token}"))
@@ -308,7 +293,7 @@ def _recover_pending_refreshes(spark: "SparkSession", path: str) -> list[str]:  
     means its staging completed against the PRE-delta state, so
     replaying the swaps is exact).  Runs before every refresh and
     before index reads are trusted; returns the recovered tokens."""
-    P, fs = _index_fs(spark, path)
+    P, fs = hadoop_fs(spark, path)
     root = P(path.rstrip("/"))
     if not fs.exists(root):
         return []
@@ -365,7 +350,7 @@ def bm25_refresh_index(
 
     _recover_pending_refreshes(spark, path)
     token = delta_token if delta_token is not None else "adhoc"
-    P, fs = _index_fs(spark, path)
+    P, fs = hadoop_fs(spark, path)
     root = path.rstrip("/")
     if delta_token is not None and fs.exists(
         P(f"{root}/_applied_deltas/{token}")

@@ -354,10 +354,10 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     incremental merge into a blind full rewrite (found by
     tests/test_nonlocal_fs.py: the streaming gold merge left stale
     cross-month copies alive when the fact lived on viewfs)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)
+    from ..operators.commit import hadoop_fs
+
+    P, fs = hadoop_fs(spark, path)
+    return fs.exists(P(path))
 
 
 def write_parquet(

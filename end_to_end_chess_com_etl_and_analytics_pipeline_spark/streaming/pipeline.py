@@ -611,8 +611,8 @@ def run_streaming_scd2(
     collapse against their prior versions like any user.
 
     Crash atomicity: the bucket swap is
-    a two-phase stage/intent/rename commit (operators/commit.py — the
-    BM25 index-refresh protocol applied to partition dirs).  The batch
+    a two-phase stage/intent/rename commit (operators/commit.py, the
+    package's one in-place rewrite protocol).  The batch
     stages its recomputed buckets to a reader-hidden sibling, records an
     intent, then swaps per-bucket by rename; every merge batch first
     runs :func:`recover_pending_swaps`, so a crash at ANY point either

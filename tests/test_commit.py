@@ -1,11 +1,13 @@
 """Crash-atomic partition swap (operators/commit.py): a simulated crash
 at every protocol point — pre-intent, post-intent, and mid-swap — must
 leave the table recoverable to exactly the batch-equivalent state after
-a checkpoint replay (the r8/r9 verdict's stage/intent/rename ask for
-st13 and the incremental gold fact)."""
+a checkpoint replay (the streaming SCD2 dim and the incremental gold
+fact).  A guard keeps every Hadoop FileSystem handle and rename in
+that module."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import os
 
@@ -15,6 +17,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+import end_to_end_chess_com_etl_and_analytics_pipeline_spark as pkg
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators import commit
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.streaming.pipeline import (
     run_streaming_scd2,
@@ -366,3 +369,31 @@ def test_incremental_gold_dim_append_crash_replay(spark, tmp_path, monkeypatch):
     streamed = read_gold_fact(spark, str(gold))
     assert streamed.count() == 90
     assert streamed.exceptAll(batch["fact_games"]).count() == 0
+
+
+def test_one_hadoop_fs_handle_and_one_checked_rename():
+    """Only operators/commit.py opens a Hadoop FileSystem or renames on
+    one, once each: every other module goes through ``hadoop_fs`` and
+    ``rename_or_die``."""
+    root = os.path.dirname(pkg.__file__)
+    calls = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            calls += [
+                (os.path.relpath(path, root), node.func.attr)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("getFileSystem", "rename")
+                # os.rename is a local-disk call, not a Hadoop one
+                and not (
+                    isinstance(node.func.value, ast.Name) and node.func.value.id == "os"
+                )
+            ]
+    helper = os.path.join("operators", "commit.py")
+    assert sorted(calls) == [(helper, "getFileSystem"), (helper, "rename")], calls

@@ -2,8 +2,8 @@
 to gold.  Pins that gold does not depend on how months are split across
 landings or on their order, that the stream and a backfill agree on the
 openings book's canonical names, that a game leaving the NULL-date
-partition drops it, and that only the commit knows Spark's NULL
-partition name."""
+partition drops it and its emptied parent, and that only the commit
+knows Spark's NULL partition name."""
 
 from __future__ import annotations
 
@@ -120,6 +120,8 @@ def test_null_date_partition_dropped_when_its_game_moves(spark, tmp_path):
         "2024-04-01 00:00:00", "t2",
     )
     assert not os.path.exists(null_dir)
+    # the emptied parent is no partition either
+    assert not os.path.exists(os.path.dirname(null_dir))
     rows = spark.read.parquet(fact_dir).select("game_url", "year", "month").collect()
     assert [tuple(r) for r in rows] == [(undated["url"], 2024, 2)]
 

@@ -1,14 +1,22 @@
 """Z-order layout tests: Morton-value python reference, grid-bucket
 boundary exactness, the x54 pruning verdict, and the REAL write path's
-parquet footer stats (the thing production pruning actually reads)."""
+parquet footer stats (the thing production pruning actually reads).
+Compaction and maintenance tests: bin-packing, the unpartitioned swap,
+staging leftovers and a crash inside compaction's two-phase commit."""
 
 from __future__ import annotations
 
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators import commit
+from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.compact import (
+    compact_partitions,
+    partition_file_stats,
+)
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.layout import (
     Z_BITS,
     interleave_bits,
@@ -280,3 +288,70 @@ def test_partition_file_stats_mixed_level_files_counted(spark, tmp_path):
     os.replace(stray, os.path.join(path, "part-stray.parquet"))
     stats = {rel: n for rel, n, _ in partition_file_stats(spark, path)}
     assert stats == {"month=1": 1, "": 1}
+
+
+def _write_one_file_per_row(spark, path, rows):
+    for p, v in rows:
+        spark.createDataFrame([(p, v)], "p int, v long").coalesce(1).write.mode(
+            "append"
+        ).partitionBy("p").parquet(path)
+
+
+def _table_rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).select("p", "v").collect()))
+
+
+def test_compaction_leaves_staging_leftover_unswapped(spark, tmp_path):
+    """A crash before the intent of a two-phase swap leaves
+    ``.staged_<token>/p=1`` behind, hidden from readers.  Compaction
+    must neither count it as a partition nor swap it live over the real
+    ``p=1``."""
+    path = str(tmp_path / "tbl")
+    _write_one_file_per_row(spark, path, [(1, 1), (1, 2), (1, 3)])
+    spark.createDataFrame([(1, 100), (1, 101)], "p int, v long").write.partitionBy(
+        "p"
+    ).parquet(os.path.join(path, ".staged_b7"))
+    assert [(rel, n) for rel, n, _ in partition_file_stats(spark, path)] == [
+        ("p=1", 3)
+    ]
+    pre = _table_rows(spark, path)
+    assert pre == [(1, 1), (1, 2), (1, 3)]
+
+    assert compact_partitions(spark, path, ["p"], target_bytes=1 << 30) == ["p=1"]
+    assert _table_rows(spark, path) == pre
+    assert [n for rel, n, _ in partition_file_stats(spark, path)] == [1]
+    assert not any(n.startswith(".staged_") for n in os.listdir(path))
+
+
+def test_compaction_crash_after_intent_is_recovered(spark, tmp_path, monkeypatch):
+    """Kill compaction between its intent and its swap: the live table
+    still reads the pre-compaction rows, and recover_pending_swaps
+    finishes the compaction."""
+    path = str(tmp_path / "tbl")
+    _write_one_file_per_row(
+        spark, path, [(1, 1), (1, 2), (1, 3), (2, 4), (2, 5)]
+    )
+    pre = _table_rows(spark, path)
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash: intent written, swap pending")
+
+    monkeypatch.setattr(commit, "_finish_swap", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        compact_partitions(spark, path, ["p"], target_bytes=1 << 30)
+    monkeypatch.undo()
+    assert _table_rows(spark, path) == pre
+    assert {rel: n for rel, n, _ in partition_file_stats(spark, path)} == {
+        "p=1": 3,
+        "p=2": 2,
+    }
+
+    assert commit.recover_pending_swaps(spark, path) == ["compact"]
+    assert _table_rows(spark, path) == pre
+    assert {rel: n for rel, n, _ in partition_file_stats(spark, path)} == {
+        "p=1": 1,
+        "p=2": 1,
+    }
+    assert not any(
+        n.startswith((".staged_", "._swap_intent_")) for n in os.listdir(path)
+    )
