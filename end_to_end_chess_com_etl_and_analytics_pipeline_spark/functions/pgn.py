@@ -1,8 +1,11 @@
 """PGN / chess-domain column expressions (SURVEY.md §2.8-2.9).
 
 Every reference UDF (udfs.py:53-171) becomes a *native* Spark expression —
-JVM-side, whole-stage-codegen'd, no Python boundary — which is the single
-biggest engine-level win over the reference's row-at-a-time DuckDB UDFs.
+JVM-side, no Python boundary — which is the single biggest engine-level
+win over the reference's row-at-a-time DuckDB UDFs.  The regex and string
+expressions are whole-stage-codegen'd; the higher-order functions
+(``transform``, ``filter``, ``zip_with``) run their lambda bodies
+interpreted, so a body must never re-evaluate a whole-PGN expression.
 
 Reference parity notes are inline; the one deliberate divergence is
 ``opening_name_from_url``: the reference's ``extract_opening_name``
@@ -65,25 +68,24 @@ def add_move_numbers(moves: Column) -> Column:
     '' for the missing black move, so the pair is ``"3. Bb5 "``.join'd —
     i.e. a trailing space *inside* the last element).  We reproduce that
     byte-for-byte: concat always inserts the separating space.
+
+    ``moves`` enters each higher-order function as its argument, never
+    inside a lambda body: Spark evaluates lambda bodies interpreted and
+    shares no subexpression with the outer projection, so a body that
+    names ``moves`` (a ``regexp_extract_all`` over the whole PGN)
+    re-runs that regex once per move pair.  ``zip_with`` pads the
+    shorter black list with NULL, the missing reply of an odd game.
     """
-    pair_count = F.ceil(F.size(moves) / F.lit(2)).cast("int")
-    idx = F.sequence(F.lit(0), pair_count - F.lit(1))
+    whites = F.filter(moves, lambda _, i: i % 2 == 0)
+    blacks = F.filter(moves, lambda _, i: i % 2 == 1)
+    pairs = F.zip_with(
+        whites, blacks, lambda w, b: F.concat(w, F.lit(" "), F.coalesce(b, F.lit("")))
+    )
+    numbered = F.transform(
+        pairs, lambda p, i: F.concat((i + 1).cast("string"), F.lit(". "), p)
+    )
     return F.when(F.size(moves) == 0, F.lit("")).otherwise(
-        F.array_join(
-            F.transform(
-                idx,
-                lambda i: F.concat(
-                    (i + 1).cast("string"),
-                    F.lit(". "),
-                    F.element_at(moves, i * 2 + 1),
-                    F.lit(" "),
-                    # try_element_at: the final white move of an odd-length
-                    # game has no black reply (ANSI mode would throw)
-                    F.coalesce(F.try_element_at(moves, i * 2 + 2), F.lit("")),
-                ),
-            ),
-            " ",
-        )
+        F.array_join(numbered, " ")
     )
 
 

@@ -18,8 +18,9 @@ Here both are generic DataFrame combinators.  Scale notes:
 - ``absent_rows`` is a null-safe LEFT ANTI join: the incoming rows
   whose key is new, where a NULL key matches a NULL key (Chess.com's
   daily-game control ``1/86400`` formats to a NULL ``time_control``).
-  Append-only tables (the gold and warehouse dims) write just these,
-  through ``new_dim_rows``; ``insert_if_absent`` unions them with the
+  Append-only tables (the gold and warehouse dims) write just these;
+  ``new_dim_rows`` picks them for all dims in one collect, with the same
+  null-safe match, and ``insert_if_absent`` unions them with the
   existing rows.  SQL ``NOT IN`` returns *no rows* if the subquery
   yields a NULL; ``left_anti`` keeps non-matching rows.  We expose
   ``not_in_semantics=True`` to replicate the SQL behaviour exactly
@@ -28,10 +29,10 @@ Here both are generic DataFrame combinators.  Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import local_df
@@ -105,24 +106,67 @@ def absent_rows(
     )
 
 
+def collect_tagged(frames: Mapping[str, DataFrame]) -> dict[str, list[Row]]:
+    """Collect several small frames in one action, each frame's rows
+    (Rows of its own columns) under its tag.
+
+    The frames travel as one tagged union: a ``__tag`` column naming a
+    row's frame and one struct column per frame, set only in the row's
+    own frame's column (``unionByName`` fills the others with NULL).
+    Their stages then run in one query, submitted together, instead of
+    one scheduler round trip per frame."""
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            df.select(F.lit(tag).alias("__tag"), F.struct("*").alias(tag))
+            for tag, df in frames.items()
+        ],
+    )
+    found = {tag: [] for tag in frames}
+    for r in union.collect():
+        found[r["__tag"]].append(r[r["__tag"]])
+    return found
+
+
 def new_dim_rows(
     spark: SparkSession,
-    existing: DataFrame | None,
-    incoming: DataFrame,
-    keys: Sequence[str],
-) -> DataFrame | None:
-    """The rows an append-only dim must add, as a one-file frame ready
-    to append — or None when every incoming key is present, so the
-    caller writes nothing.
+    existing: Mapping[str, DataFrame | None],
+    incoming: Mapping[str, DataFrame],
+    keys: Mapping[str, Sequence[str]],
+    probes: Mapping[str, DataFrame] | None = None,
+) -> tuple[dict[str, DataFrame], dict[str, list[Row]]]:
+    """The rows each append-only dim must add, for all dims at once.
 
-    Dims are broadcast-sized, so the absent rows come to the driver:
-    one job both finds them and tells whether there is anything to
-    write, and the append then reads driver-local rows, not the
-    ``existing``/``incoming`` lineage a second time."""
-    rows = absent_rows(existing, incoming, keys).collect()
-    if not rows:
-        return None
-    return local_df(spark, rows, incoming.schema).coalesce(1)
+    ``incoming[dim]`` lands against ``existing[dim]`` (None when the
+    dim does not exist yet) on ``keys[dim]``.  Returns the frames to
+    append, one file each, under the dims that need a write: a dim with
+    a new key, or a dim that does not exist yet — an idle first month
+    still creates it, empty, so readers always find it.  A dim whose
+    every incoming key is present is absent from the result, and the
+    caller writes nothing to it.
+
+    Dims are broadcast-sized, so ONE ``collect_tagged`` brings the
+    incoming dims, the existing dims' keys and the caller's other small
+    ``probes`` to the driver (the probes' rows are the second value),
+    and the absent rows are picked there: the key match is the
+    null-safe one of ``absent_rows`` (Python ``None == None``), without
+    one broadcast and one collect per dim.  The appends read
+    driver-local rows, not the ``existing``/``incoming`` lineage a
+    second time."""
+    probes = probes or {}
+    present = {
+        f"__keys_{dim}": df.select(*keys[dim])
+        for dim, df in existing.items()
+        if df is not None
+    }
+    found = collect_tagged({**incoming, **present, **probes})
+    fresh = {}
+    for dim, df in incoming.items():
+        known = {tuple(r) for r in found.get(f"__keys_{dim}", ())}
+        rows = [r for r in found[dim] if tuple(r[k] for k in keys[dim]) not in known]
+        if rows or existing[dim] is None:
+            fresh[dim] = local_df(spark, rows, df.schema).coalesce(1)
+    return fresh, {tag: found[tag] for tag in probes}
 
 
 def insert_if_absent(

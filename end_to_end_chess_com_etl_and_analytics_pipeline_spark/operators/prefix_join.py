@@ -19,18 +19,24 @@ parallel, lexicon ships once per executor, no shuffle of the big side.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def token_prefixes(c: Column, max_tokens: int, sep: str = " ") -> Column:
-    """All leading-token prefixes of a delimited string, longest last:
-    ``"a b c"`` → ``["a", "a b", "a b c"]`` (capped at ``max_tokens``)."""
-    toks = F.split(c, F.lit(sep))
-    n = F.least(F.size(toks), F.lit(max_tokens))
+    """All leading-token prefixes of a string split on the literal
+    ``sep``, longest last: ``"a b c"`` → ``["a", "a b", "a b c"]``
+    (capped at ``max_tokens``).  Prefix ``i`` is ``substring_index(c,
+    sep, i)``, one scan of the string; the split that counts the tokens
+    runs once per row, outside the lambda, whose body Spark evaluates
+    interpreted once per prefix."""
+    n = F.least(F.size(F.split(c, F.lit(re.escape(sep)))), F.lit(max_tokens))
     return F.transform(
         F.sequence(F.lit(1), n),
-        lambda i: F.array_join(F.slice(toks, 1, i), sep),
+        # F.substring_index takes a Python int count, not a Column
+        lambda i: F.call_function("substring_index", c, F.lit(sep), i),
     )
 
 

@@ -38,56 +38,65 @@ from ..functions.pgn import (
 )
 from ..operators import commit
 from ..operators.merge import latest_wins, new_dim_rows
-from ..schemas import DIM_KEYS, DIM_SCHEMAS, GOLD_FACT_SCHEMA
-from ..session import local_df
+from ..schemas import DIM_KEYS, DIM_SCHEMAS, FACT_GAMES_SCHEMA, GOLD_FACT_SCHEMA
+from ..session import cached_column
 from ..sources.tables import dim_results_seed, fs_exists
 
 
+def _openings_columns():
+    """dim_openings' projections: the slug-derived columns, the lookup's
+    flattened-name side, the join condition, and the canonical-name
+    projection over the join."""
+    name = opening_name_from_url(F.col("pgn_eco_url"))
+    canon = F.coalesce(F.col("__canon"), F.col("opening_name"))
+    return (
+        (
+            F.col("pgn_eco_url"),
+            name.alias("opening_name"),
+            opening_family(name).alias("opening_family"),
+            opening_variation(name).alias("opening_variation"),
+            F.col("pgn_eco").alias("eco_code"),
+        ),
+        (
+            F.regexp_replace(F.col("name"), r"[:,]", "").alias("__flat"),
+            F.col("name").alias("__canon"),
+        ),
+        F.regexp_replace(F.col("opening_name"), r"[:,]", "") == F.col("__flat"),
+        (
+            F.col("pgn_eco_url"),
+            canon.alias("opening_name"),
+            opening_family(canon).alias("opening_family"),
+            opening_variation(canon).alias("opening_variation"),
+            F.col("eco_code"),
+        ),
+    )
+
+
 def build_dim_openings(
-    silver: DataFrame, openings_lookup: DataFrame | None = None
+    spark: SparkSession, silver: DataFrame, openings_lookup: DataFrame | None = None
 ) -> DataFrame:
     """dim_openings (python_scripts.py:256-282): distinct opening URL →
     name/family/variation/eco.  With ``openings_lookup`` (the 3.5k-row
     openings.csv), canonical names come from a broadcast join on the
     slug-derived name; otherwise the slug name stands alone."""
-    name = opening_name_from_url(F.col("pgn_eco_url"))
-    dim = silver.select(
-        "pgn_eco_url",
-        name.alias("opening_name"),
-        opening_family(name).alias("opening_family"),
-        opening_variation(name).alias("opening_variation"),
-        F.col("pgn_eco").alias("eco_code"),
-    ).distinct()
-    if openings_lookup is not None:
-        # canonical `Family: Variation` punctuation where the lookup has it
-        lk = openings_lookup.select(
-            F.regexp_replace(F.col("name"), r"[:,]", "").alias("__flat"),
-            F.col("name").alias("__canon"),
-        ).dropDuplicates(["__flat"])
-        dim = (
-            dim.join(
-                F.broadcast(lk),
-                F.regexp_replace(dim.opening_name, r"[:,]", "") == lk.__flat,
-                "left",
-            )
-            .withColumn("opening_name", F.coalesce("__canon", "opening_name"))
-            .withColumn("opening_family", opening_family(F.col("opening_name")))
-            .withColumn("opening_variation", opening_variation(F.col("opening_name")))
-            .drop("__flat", "__canon")
-        )
-    return dim
+    slug_cols, lookup_cols, on, canon_cols = cached_column(
+        spark, ("dim_openings",), _openings_columns
+    )
+    dim = silver.select(*slug_cols).distinct()
+    if openings_lookup is None:
+        return dim
+    # canonical `Family: Variation` punctuation where the lookup has it
+    lk = openings_lookup.select(*lookup_cols).dropDuplicates(["__flat"])
+    return dim.join(F.broadcast(lk), on, "left").select(*canon_cols)
 
 
-def build_dim_date(silver: DataFrame) -> DataFrame:
-    """dim_date (python_scripts.py:326-366): distinct game dates with
-    parts; quarter via the reference's CASE/BETWEEN (F8)."""
+def _date_columns():
     month = F.month("game_date")
     return (
-        silver.select("game_date")
-        .where(F.col("game_date").isNotNull())
-        .distinct()
-        .select(
-            "game_date",
+        F.col("game_date"),
+        F.col("game_date").isNotNull(),
+        (
+            F.col("game_date"),
             F.year("game_date").alias("year"),
             month.alias("month"),
             F.date_format("game_date", "MMMM").alias("month_name"),
@@ -98,17 +107,29 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
             .when(month.between(7, 9), 3)
             .otherwise(4)
             .alias("quarter"),
-        )
+        ),
     )
 
 
-def build_dim_time_control(silver: DataFrame) -> DataFrame:
+def build_dim_date(spark: SparkSession, silver: DataFrame) -> DataFrame:
+    """dim_date (python_scripts.py:326-366): distinct game dates with
+    parts; quarter via the reference's CASE/BETWEEN (F8)."""
+    date, known, cols = cached_column(spark, ("dim_date",), _date_columns)
+    return silver.select(date).where(known).distinct().select(*cols)
+
+
+def build_dim_time_control(spark: SparkSession, silver: DataFrame) -> DataFrame:
     """dim_time_control (python_scripts.py:394-443): distinct formatted
     control → time_class (DISTINCT on every path, §2.11.2)."""
-    return silver.select(
-        format_time_control(F.col("time_control")).alias("time_control"),
-        "time_class",
-    ).distinct()
+    cols = cached_column(
+        spark,
+        ("dim_time_control",),
+        lambda: (
+            format_time_control(F.col("time_control")).alias("time_control"),
+            F.col("time_class"),
+        ),
+    )
+    return silver.select(*cols).distinct()
 
 
 def build_dim_results(spark: SparkSession) -> DataFrame:
@@ -117,44 +138,66 @@ def build_dim_results(spark: SparkSession) -> DataFrame:
     return dim_results_seed(spark)
 
 
-def _my(white_expr: Column, black_expr: Column, username: str) -> Column:
+def _fact_columns(username: str) -> tuple[Column, ...]:
+    """build_fact's projection for one user, less the run timestamp."""
     is_white = F.lower(F.col("pgn_white_user")) == username.lower()
-    return F.when(is_white, white_expr).otherwise(black_expr)
 
+    def my(white: str, black: str) -> Column:
+        return F.when(is_white, F.col(white)).otherwise(F.col(black))
 
-def build_fact(silver: DataFrame, username: str, run_ts: str) -> DataFrame:
-    """fact_games projection (python_scripts.py:533-564): role-playing
-    CASEs pivot white/black columns into my/opponent columns; duration in
-    seconds (F9); move count (D5); run-timestamp audit column (F12,
-    parameterized — never interpolated SQL)."""
-    u = username
-    return silver.select(
-        "game_url",
-        "game_date",
-        "start_time",
-        "end_time",
+    return (
+        F.col("game_url"),
+        F.col("game_date"),
+        F.col("start_time"),
+        F.col("end_time"),
         (F.unix_timestamp("end_time") - F.unix_timestamp("start_time"))
         .cast("bigint")
         .alias("game_duration_secs"),
         format_time_control(F.col("time_control")).alias("time_control"),
-        _my(F.lit("white"), F.lit("black"), u).alias("my_color"),
-        _my(F.col("pgn_white_user"), F.col("pgn_black_user"), u).alias("my_username"),
-        _my(F.col("pgn_black_user"), F.col("pgn_white_user"), u).alias(
-            "opponent_username"
-        ),
-        _my(F.col("white_rating"), F.col("black_rating"), u).alias("my_rating"),
-        _my(F.col("black_rating"), F.col("white_rating"), u).alias("opponent_rating"),
-        _my(F.col("white_result"), F.col("black_result"), u).alias("my_result"),
-        _my(F.col("black_result"), F.col("white_result"), u).alias("opponent_result"),
+        F.when(is_white, F.lit("white")).otherwise(F.lit("black")).alias("my_color"),
+        my("pgn_white_user", "pgn_black_user").alias("my_username"),
+        my("pgn_black_user", "pgn_white_user").alias("opponent_username"),
+        my("white_rating", "black_rating").alias("my_rating"),
+        my("black_rating", "white_rating").alias("opponent_rating"),
+        my("white_result", "black_result").alias("my_result"),
+        my("black_result", "white_result").alias("opponent_result"),
         F.col("pgn_current_position").alias("game_fen"),
         F.col("pgn_eco_url").alias("opening_url"),
         F.col("pgn_trans").alias("game_pgn"),
         pgn_depth(F.col("pgn_trans")).alias("moves"),
-        F.lit(run_ts).cast("timestamp").alias("last_updated"),
+    )
+
+
+def build_fact(
+    spark: SparkSession, silver: DataFrame, username: str, run_ts: str
+) -> DataFrame:
+    """fact_games projection (python_scripts.py:533-564): role-playing
+    CASEs pivot white/black columns into my/opponent columns; duration in
+    seconds (F9); move count (D5); run-timestamp audit column (F12,
+    parameterized — never interpolated SQL).  The projection is built
+    once per session and user; the run timestamp, new on every run, is
+    its own literal column outside the cached tree."""
+    cols = cached_column(spark, ("fact_games", username), lambda: _fact_columns(username))
+    return silver.select(*cols, F.lit(run_ts).cast("timestamp").alias("last_updated"))
+
+
+def _star_join_columns():
+    """validate_star_join's dim key projections, join conditions and the
+    fact's own columns."""
+    return (
+        F.col("game_date"),
+        F.col("pgn_eco_url").alias("opening_url"),
+        F.col("result_code").alias("__rc_my"),
+        F.col("result_code").alias("__rc_op"),
+        F.col("my_result") == F.col("__rc_my"),
+        F.col("opponent_result") == F.col("__rc_op"),
+        F.col("time_control"),
+        tuple(F.col(c) for c in FACT_GAMES_SCHEMA.fieldNames()),
     )
 
 
 def validate_star_join(
+    spark: SparkSession,
     fact: DataFrame,
     dim_date: DataFrame,
     dim_openings: DataFrame,
@@ -164,25 +207,23 @@ def validate_star_join(
     """J1: the reference's 5-way LEFT join projecting ``fact.*`` only
     (python_scripts.py:566-573) — a dim-coverage validation that must not
     change the row count (dims are built DISTINCT; §2.11.4).  dim_results
-    role-plays twice (my/opponent).  All dims broadcast."""
-    dr_my = dim_results.select(F.col("result_code").alias("__rc_my"))
-    dr_op = dim_results.select(F.col("result_code").alias("__rc_op"))
-    joined = (
-        fact.join(F.broadcast(dim_date.select("game_date")), "game_date", "left")
-        .join(
-            F.broadcast(dim_openings.select(F.col("pgn_eco_url").alias("opening_url"))),
-            "opening_url",
-            "left",
-        )
-        .join(F.broadcast(dr_my), fact.my_result == dr_my.__rc_my, "left")
-        .join(F.broadcast(dr_op), fact.opponent_result == dr_op.__rc_op, "left")
-        .join(
-            F.broadcast(dim_time_control.select("time_control")),
-            "time_control",
-            "left",
-        )
+    role-plays twice (my/opponent).  All dims broadcast.
+
+    A dim side that is distinct on its join key provably keeps every
+    fact row once, and Catalyst drops such a join (no broadcast job):
+    dim_date is distinct by construction, and the static dim_results
+    seed's codes are unique, so its key projections say so."""
+    date, opening, rc_my, rc_op, on_my, on_op, tc, fact_cols = cached_column(
+        spark, ("star_join",), _star_join_columns
     )
-    return joined.select(*fact.columns)
+    joined = (
+        fact.join(F.broadcast(dim_date.select(date)), "game_date", "left")
+        .join(F.broadcast(dim_openings.select(opening)), "opening_url", "left")
+        .join(F.broadcast(dim_results.select(rc_my).distinct()), on_my, "left")
+        .join(F.broadcast(dim_results.select(rc_op).distinct()), on_op, "left")
+        .join(F.broadcast(dim_time_control.select(tc)), "time_control", "left")
+    )
+    return joined.select(*fact_cols)
 
 
 def merge_fact(
@@ -213,16 +254,18 @@ def build_gold(
     openings_lookup: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Full gold layer for one silver frame — the reference's DAG-1 tail
-    (four dim loads + fact load) as one lineage."""
+    (four dim loads + fact load) as one lineage.  Every Column tree comes
+    from the session's cache (session.cached_column), so a warm session
+    builds only the DataFrames."""
     dims = {
-        "dim_openings": build_dim_openings(silver, openings_lookup),
-        "dim_date": build_dim_date(silver),
-        "dim_time_control": build_dim_time_control(silver),
+        "dim_openings": build_dim_openings(spark, silver, openings_lookup),
+        "dim_date": build_dim_date(spark, silver),
+        "dim_time_control": build_dim_time_control(spark, silver),
         "dim_results": build_dim_results(spark),
     }
-    fact = build_fact(silver, username, run_ts)
     fact = validate_star_join(
-        fact,
+        spark,
+        build_fact(spark, silver, username, run_ts),
         dims["dim_date"],
         dims["dim_openings"],
         dims["dim_results"],
@@ -258,7 +301,10 @@ def land_gold(
       (partition pruning) and replaced, through the crash-atomic
       two-phase swap in operators/commit.py; every other month stays
       byte-identical.  A call costs O(its months) in data plus a
-      game_url-only probe of the other partitions, not O(table).
+      game_url-only probe of the partitions, not O(table).
+
+    The dims' new keys and both month probes come back in one collect
+    (merge.new_dim_rows), and the fact is computed once, by its merge.
 
     ``token`` names the swap and must be deterministic per landing (the
     stream passes ``b{batch_id}``): a replay after a crash restages over
@@ -270,59 +316,55 @@ def land_gold(
     # the source read and the PGN parse run once for every consumer
     silver = silver.localCheckpoint()
     gold = build_gold(spark, silver, username, run_ts, openings_lookup)
-    # one computation for the month probes and the merge
-    fact = gold["fact_games"].localCheckpoint()
-    for dim, keys in DIM_KEYS.items():
+    existing_dims = {}
+    for dim in DIM_KEYS:
         dim_path = os.path.join(gold_dir, dim)
-        existing_dim = (
+        existing_dims[dim] = (
             spark.read.schema(DIM_SCHEMAS[dim]).parquet(dim_path)
             if fs_exists(spark, dim_path)
             else None
         )
-        fresh = new_dim_rows(spark, existing_dim, gold[dim], keys)
-        if fresh is None and existing_dim is None:
-            # an idle first month (no games) still creates the dim, so
-            # readers of the gold layer always find it
-            fresh = local_df(spark, [], DIM_SCHEMAS[dim])
-        if fresh is not None:
-            fresh.write.mode("append").parquet(dim_path)
-    # Driver-sized: a monthly re-pull touches 1-2 months.  Re-pulled
-    # games may carry dates outside the bronze file's nominal month, so
-    # the rows are probed, never the file name.
-    months = {
-        (r["y"], r["m"])
-        for r in fact.select(
-            F.year("game_date").alias("y"), F.month("game_date").alias("m")
-        )
-        .distinct()
-        .collect()
-    }
-    existing = None
-    if months and commit.has_partition_dirs(spark, fact_path):
+    # The star-join validation LEFT-joins every silver row, so the
+    # fact's months and game_urls are silver's.  Re-pulled games may carry dates
+    # outside the bronze file's nominal month, so the rows are probed,
+    # never the file name.
+    year_month = cached_column(
+        spark,
+        ("fact_partition",),
+        lambda: (F.year("game_date").alias("year"), F.month("game_date").alias("month")),
+    )
+    probes = {"months": silver.select(*year_month).distinct()}
+    live = None
+    if commit.has_partition_dirs(spark, fact_path):
         live = spark.read.schema(GOLD_FACT_SCHEMA).parquet(fact_path)
         # A re-pull can correct a game's date into another month, which
-        # leaves its stale row in a partition outside ``months``.  A
-        # game_url-only scan of the other partitions, semi-joined with
-        # the broadcast keys, finds those months; they join the rewrite
-        # set, so the merge retires the stale row and the commit drops
-        # a month left empty.  At warehouse scale a game_url → (year,
-        # month) key index or a MERGE-capable table format replaces it.
-        months |= {
-            (r["year"], r["month"])
-            for r in live.select("game_url", "year", "month")
-            .where(~_in_months(months))
-            .join(F.broadcast(fact.select("game_url")), "game_url", "left_semi")
+        # leaves its stale row in a partition the batch does not touch.
+        # A game_url-only scan, semi-joined with the broadcast keys,
+        # finds the months holding the batch's keys; they join the
+        # rewrite set, so the merge retires the stale row and the commit
+        # drops a month left empty.  At warehouse scale a game_url →
+        # (year, month) key index or a MERGE-capable table format
+        # replaces it.
+        probes["stale_months"] = (
+            live.select("game_url", "year", "month")
+            .join(F.broadcast(silver.select("game_url")), "game_url", "left_semi")
             .select("year", "month")
             .distinct()
-            .collect()
-        }
+        )
+    fresh, found = new_dim_rows(
+        spark, existing_dims, {dim: gold[dim] for dim in DIM_KEYS}, DIM_KEYS, probes
+    )
+    for dim, rows in fresh.items():
+        rows.write.mode("append").parquet(os.path.join(gold_dir, dim))
+    months = {(r["year"], r["month"]) for r in found["months"]}
+    existing = None
+    if months and live is not None:
+        months |= {(r["year"], r["month"]) for r in found["stale_months"]}
         existing = live.where(_in_months(months)).drop("year", "month")
-    merged = merge_fact(existing, fact)
+    merged = merge_fact(existing, gold["fact_games"])
     commit.two_phase_partition_overwrite(
         spark,
-        merged.withColumn("year", F.year("game_date")).withColumn(
-            "month", F.month("game_date")
-        ),
+        merged.select("*", *year_month),
         fact_path,
         ["year", "month"],
         token=token,

@@ -4,9 +4,11 @@ The reference's silver step (python_scripts.py:169-205) is one DuckDB
 SELECT flattening the raw JSON game objects and regex-exploding the PGN
 text blob into 24 typed columns, followed by a pandas hop that promotes
 the PGN time-of-day strings to full timestamps.  Here it is a single
-DataFrame projection — every regex and the move-numbering UDF replacement
-run as JVM native expressions inside one whole-stage-codegen span, and
-the timestamp promotion is part of the same projection (no pandas).
+DataFrame projection of JVM native expressions (no pandas, no Python
+UDF): the tag regexes and the timestamp promotion are whole-stage
+codegen'd; the move numbering is a chain of higher-order functions,
+whose lambda bodies run interpreted over one move list per game
+(functions.pgn.add_move_numbers).
 
 At 100 TB: this is a pure map — no shuffle at all; parallelism is the
 file split count.  Write partitioned by (year, month) so downstream gold
@@ -19,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.pgn import add_move_numbers, pgn_date, pgn_moves, pgn_tag
+from ..session import cached_column
 
 
 def _time_tag_to_ts(date_col: Column, pgn: Column, tag: str) -> Column:
@@ -35,19 +38,17 @@ def _time_tag_to_ts(date_col: Column, pgn: Column, tag: str) -> Column:
     )
 
 
-def bronze_to_silver(raw: DataFrame) -> DataFrame:
-    """Flatten one month of raw games into the 24-column silver contract
-    (schemas.SILVER_SCHEMA)."""
+def _silver_columns() -> tuple[Column, ...]:
     pgn = F.col("pgn")
     game_date = pgn_date(pgn, "Date")
     end_game_date = pgn_date(pgn, "EndDate")
     moves = pgn_moves(pgn)
-    return raw.select(
+    return (
         F.col("url").alias("game_url"),
-        "time_control",
-        "rated",
-        "time_class",
-        "rules",
+        F.col("time_control"),
+        F.col("rated"),
+        F.col("time_class"),
+        F.col("rules"),
         F.col("white.rating").alias("white_rating"),
         F.col("white.result").alias("white_result"),
         F.col("black.rating").alias("black_rating"),
@@ -67,4 +68,14 @@ def bronze_to_silver(raw: DataFrame) -> DataFrame:
         end_game_date.alias("end_game_date"),
         F.array_join(moves, " ").alias("pgn_raw"),
         add_move_numbers(moves).alias("pgn_trans"),
+    )
+
+
+def bronze_to_silver(raw: DataFrame) -> DataFrame:
+    """Flatten one month of raw games into the 24-column silver contract
+    (schemas.SILVER_SCHEMA).  The projection's Column tree is built once
+    per session (session.cached_column): it is the same for every month,
+    and building it costs a py4j round trip per node."""
+    return raw.select(
+        *cached_column(raw.sparkSession, ("bronze_to_silver",), _silver_columns)
     )

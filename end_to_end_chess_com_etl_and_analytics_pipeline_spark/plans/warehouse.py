@@ -27,12 +27,15 @@ from ..sources.tables import WAREHOUSE_SCHEMA, create_warehouse
 from .gold import merge_fact
 
 
+def _watermark(fact: DataFrame) -> DataFrame:
+    return fact.agg(F.max("last_updated").alias("wm"))
+
+
 def read_watermark(spark: SparkSession, schema: str = WAREHOUSE_SCHEMA):
     """High-watermark read (A4/T3): max last_updated already loaded, or
     None on an empty warehouse.  Over JDBC this whole aggregate pushes
     down as a subquery-dbtable."""
-    fact = spark.table(f"{schema}.fact_games")
-    return fact.agg(F.max("last_updated").alias("wm")).collect()[0].wm
+    return _watermark(spark.table(f"{schema}.fact_games")).collect()[0].wm
 
 
 def load_warehouse(
@@ -46,20 +49,25 @@ def load_warehouse(
 
     Each dim gets only the rows whose key it lacks, appended as one file;
     a load that brings no new key writes nothing to it.  A replayed load
-    finds its keys present, so the append is idempotent."""
+    finds its keys present, so the append is idempotent.  The four dims'
+    new keys and the watermark come back in one collect
+    (merge.new_dim_rows)."""
     create_warehouse(spark, location=location, schema=schema)
 
-    for dim, keys in DIM_KEYS.items():
-        table = f"{schema}.{dim}"
-        existing = spark.table(table)
-        incoming = gold[dim].select(*existing.columns)
-        fresh = new_dim_rows(spark, existing, incoming, keys)
-        if fresh is not None:
-            fresh.write.insertInto(table, overwrite=False)
-
+    existing = {dim: spark.table(f"{schema}.{dim}") for dim in DIM_KEYS}
     fact_table = f"{schema}.fact_games"
     existing_fact = spark.table(fact_table)
-    wm = read_watermark(spark, schema)
+    fresh, found = new_dim_rows(
+        spark,
+        existing,
+        {dim: gold[dim].select(*existing[dim].columns) for dim in DIM_KEYS},
+        DIM_KEYS,
+        {"watermark": _watermark(existing_fact)},
+    )
+    for dim, rows in fresh.items():
+        rows.write.insertInto(f"{schema}.{dim}", overwrite=False)
+
+    wm = found["watermark"][0]["wm"]
     incoming = gold["fact_games"].select(*existing_fact.columns)
     if wm is not None:
         incoming = incoming.where(F.col("last_updated") > F.lit(wm))

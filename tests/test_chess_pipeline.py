@@ -304,12 +304,12 @@ def test_dim_merge_insert_if_absent(spark, silver):
         insert_if_absent,
     )
 
-    dim1 = build_dim_date(silver).cache()
-    merged = insert_if_absent(dim1, build_dim_date(silver), keys=["game_date"])
+    dim1 = build_dim_date(spark, silver).cache()
+    merged = insert_if_absent(dim1, build_dim_date(spark, silver), keys=["game_date"])
     assert merged.count() == dim1.count()  # never shrinks, no dups
     # new month adds rows monotonically
     raw2 = spark.createDataFrame(fx.month_payload(2), RAW_GAME_SCHEMA)
-    dim2 = build_dim_date(bronze_to_silver(raw2))
+    dim2 = build_dim_date(spark, bronze_to_silver(raw2))
     merged2 = insert_if_absent(dim1, dim2, keys=["game_date"])
     assert merged2.count() >= dim1.count()
 

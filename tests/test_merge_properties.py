@@ -2,8 +2,10 @@
 (SURVEY.md §5.2.3): latest-wins upsert is idempotent, latest-wins, and
 key-unique; insert-if-absent never shrinks, never overwrites, and is
 idempotent; the absent rows an append-only table adds are exactly the
-incoming rows with a new key, and appending them twice adds nothing —
-over arbitrary generated key/version data, NULL keys included.
+incoming rows with a new key, and appending them twice adds nothing;
+picking them for several dims in one collect agrees with the per-dim
+anti-join — over arbitrary generated key/version data, NULL keys
+included.
 
 Example counts are small because each example runs Spark jobs; the
 generators still cover duplicate keys, ties, and empty frames.
@@ -18,6 +20,7 @@ from end_to_end_chess_com_etl_and_analytics_pipeline_spark.operators.merge impor
     absent_rows,
     insert_if_absent,
     latest_wins,
+    new_dim_rows,
 )
 
 ROWS = st.lists(
@@ -109,3 +112,29 @@ def test_absent_rows_properties(spark, old, new):
     # appending them makes a replay a no-op
     appended = old_df.unionByName(fresh)
     assert absent_rows(appended, new_df, ["k"]).count() == 0
+
+
+@given(old=ROWS, new=ROWS, first=ROWS)
+@settings(**_SETTINGS)
+def test_new_dim_rows_properties(spark, old, new, first):
+    """Two dims and a probe in one collect: an existing dim gets exactly
+    absent_rows' rows as one file, or no write when nothing is new; a dim
+    that does not exist yet gets every incoming row, and a write even
+    when there are none (an idle first month); the probe's rows come
+    back as collected."""
+    old_df, new_df, first_df = _df(spark, old), _df(spark, new), _df(spark, first)
+    fresh, found = new_dim_rows(
+        spark,
+        {"a": old_df, "b": None},
+        {"a": new_df, "b": first_df},
+        {"a": ["k"], "b": ["k"]},
+        {"p": first_df.select("k")},
+    )
+    want = _sorted(absent_rows(old_df, new_df, ["k"]).collect())
+    if want:
+        assert _sorted(fresh["a"].collect()) == want
+        assert fresh["a"].rdd.getNumPartitions() == 1
+    else:
+        assert "a" not in fresh
+    assert _sorted(fresh["b"].collect()) == _sorted(first)
+    assert _sorted(found["p"]) == _sorted((k,) for k, _, _ in first)
