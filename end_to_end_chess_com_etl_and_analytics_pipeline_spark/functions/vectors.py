@@ -89,6 +89,26 @@ def usable_vec(a: Column, require_nonzero: bool = True) -> Column:
     )
 
 
+def usable_col(spark, name: str, require_nonzero: bool = True) -> Column:
+    """``usable_vec(F.col(name), require_nonzero)``, built once per
+    session (session.cached_column): each build of its forall/exists
+    lambdas is ~40 py4j round trips, paid again by every serving call."""
+    from ..session import cached_column
+
+    return cached_column(
+        spark,
+        ("usable_vec", name, require_nonzero),
+        lambda: usable_vec(F.col(name), require_nonzero),
+    )
+
+
+def norm_col(spark, name: str) -> Column:
+    """``norm(F.col(name))``, built once per session (see usable_col)."""
+    from ..session import cached_column
+
+    return cached_column(spark, ("norm", name), lambda: norm(F.col(name)))
+
+
 def usable_vec_sql(expr: str, require_nonzero: bool = True) -> str:
     """DuckDB twin of :func:`usable_vec`."""
     # the explicit IS NULL clause mirrors usable_vec's coalesce-to-false:

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.fastlit import array_lit
 from ..functions.rounding import round_fixed
-from ..functions.vectors import usable_vec
+from ..functions.vectors import usable_col, usable_vec
 from ..session import local_df, run_concurrently
 from .clustering import _sq_dist, kmeans
 
@@ -244,6 +244,11 @@ def pq_encode(
     return enc(vectors)
 
 
+def _cents_key(centroids: list[tuple[int, list[float]]]) -> tuple:
+    """Hashable value key of a coarse centroid set."""
+    return tuple((int(c), tuple(float(v) for v in cv)) for c, cv in centroids)
+
+
 def _books_key(codebooks: Codebooks) -> tuple:
     """Hashable value key of a codebook set (memoization identity)."""
     return tuple(
@@ -269,7 +274,21 @@ def _reconstruct(
     and a join for what is a constant-table index lookup.  Codes are
     valid indices by construction (pq_encode's argmin emits 0..k-1
     over the same books), so the lookup can never go out of bounds;
-    the inner joins' drop-on-no-match branch was equally unreachable."""
+    the inner joins' drop-on-no-match branch was equally unreachable.
+    The reconstruction tree is built once per session and codebook set."""
+    from ..session import cached_column
+
+    spark = codes.sparkSession
+    recon = cached_column(
+        spark,
+        ("pq_recon", _books_key(codebooks)),
+        lambda: _recon_col(spark, codebooks),
+    )
+    return codes.select(F.col(id_col).alias("cand_id"), *keep, recon)
+
+
+def _recon_col(spark, codebooks: Codebooks) -> Column:
+    """``__recon``: the concat of each subspace's codebook entry."""
     parts = []
     for j, book in enumerate(codebooks):
         ordered = sorted(book, key=lambda t: t[0])
@@ -288,16 +307,12 @@ def _reconstruct(
             vec_lit = F.expr("CAST(array() AS array<array<double>>)")
         else:
             vec_lit = array_lit(
-                codes.sparkSession,
+                spark,
                 [[float(v) for v in sub] for _code, sub in ordered],
                 "array<array<double>>",
             )
         parts.append(F.get(vec_lit, F.col(f"code_{j}")))
-    return codes.select(
-        F.col(id_col).alias("cand_id"),
-        *keep,
-        F.concat(*parts).alias("__recon"),
-    )
+    return F.concat(*parts).alias("__recon")
 
 
 def pq_adc_topk(
@@ -511,7 +526,7 @@ def ivf_pq_encode_corpus(
         vec_col,
         id_col,
         bool(residual),
-        tuple((int(c), tuple(float(v) for v in cv)) for c, cv in centroids),
+        _cents_key(centroids),
         _books_key(codebooks),
     )
     enc = cached_column(
@@ -535,15 +550,15 @@ def _query_probes(
     ``nprobe`` nearest coarse cells — the foldable-literal argsort both
     ivf_pq_topk_from_codes and the persisted-index scan pruning derive
     probed cells from (ONE definition, so the pruning filter can never
-    disagree with the scoring join)."""
-    cids_lit, cvs_lit = _cent_literal(queries.sparkSession, centroids)
-    qs = queries.where(
-        usable_vec(F.col(vec_col), require_nonzero=False)
-    ).select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    return qs.select(
-        "query_id",
-        "__qv",
-        F.explode(
+    disagree with the scoring join).  The filter and the probe tree are
+    built once per session and (centroids, nprobe)."""
+    from ..session import cached_column
+
+    spark = queries.sparkSession
+
+    def probe_cells():
+        cids_lit, cvs_lit = _cent_literal(spark, centroids)
+        return F.explode(
             F.transform(
                 F.slice(
                     F.array_sort(
@@ -554,7 +569,19 @@ def _query_probes(
                 ),
                 lambda s: s["cid"],
             )
-        ).alias("__cell"),
+        ).alias("__cell")
+
+    qs = queries.where(usable_col(spark, vec_col, require_nonzero=False)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+    )
+    return qs.select(
+        "query_id",
+        "__qv",
+        cached_column(
+            spark,
+            ("ivf_probe_cells", _cents_key(centroids), int(nprobe)),
+            probe_cells,
+        ),
     )
 
 
@@ -571,10 +598,11 @@ def ivf_pq_topk_from_codes(
 ) -> DataFrame:
     """ADC scoring over an EXISTING (id, __cell, codes) table — the
     read side of a persisted/streamed IVF-PQ index (st12)."""
+    from ..session import cached_column
+
     spark = codes.sparkSession
     probes = _query_probes(queries, centroids, nprobe, vec_col, id_col)
     recon = _reconstruct(codes, codebooks, id_col, keep=("__cell",))
-    cand_vec = F.col("__recon")
     if residual:
         cents_df = local_df(
             spark,
@@ -582,18 +610,24 @@ def ivf_pq_topk_from_codes(
             "__cell long, __cvec array<double>",
         )
         recon = recon.join(F.broadcast(cents_df), "__cell")
-        cand_vec = F.zip_with(
-            F.col("__cvec"), F.col("__recon"), lambda x, y: x + y
+
+    def adc_d2():
+        cand_vec = F.col("__recon")
+        if residual:
+            cand_vec = F.zip_with(
+                F.col("__cvec"), F.col("__recon"), lambda x, y: x + y
+            )
+        return round_fixed(_sq_dist(F.col("__qv"), cand_vec), 6).alias(
+            "adc_d2"
         )
+
     scored = (
         recon.join(F.broadcast(probes), "__cell")
         .where(F.col("cand_id") != F.col("query_id"))
         .select(
             "query_id",
             "cand_id",
-            round_fixed(_sq_dist(F.col("__qv"), cand_vec), 6).alias(
-                "adc_d2"
-            ),
+            cached_column(spark, ("ivf_adc_d2", bool(residual)), adc_d2),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_fixed
-from ..functions.vectors import usable_vec, cosine_staged, norm
+from ..functions.vectors import cosine_staged, norm, norm_col, usable_col, usable_vec
 
 
 def brute_force_topk(
@@ -593,10 +593,11 @@ def mmr_rerank(
     # Mirrored in the oracle CTEs (plans/extensions._mmr_sql_tail).
     pool_df = pool_df.where(~F.isnan(F.col("rel")))
 
-    vecs = corpus.where(usable_vec(F.col(vec_col))).select(
+    spark = corpus.sparkSession
+    vecs = corpus.where(usable_col(spark, vec_col)).select(
         F.col(id_col).alias("__vid"),
         F.col(vec_col).alias("__v"),
-        norm(F.col(vec_col)).alias("__vn"),
+        norm_col(spark, vec_col).alias("__vn"),
     )
     # Pairwise candidate sims WITHOUT a pool self-join (r11): the pool
     # is serving-batch-sized (|Q| x pool rows), so broadcast ITS ids
@@ -654,9 +655,7 @@ def mmr_rerank(
             "query_id",
             # pure function of nothing but column NAMES — one build per
             # session (session.cached_column)
-            cached_column(
-                corpus.sparkSession, ("mmr_pairs_col",), _build_pairs_col
-            ),
+            cached_column(spark, ("mmr_pairs_col",), _build_pairs_col),
         )
     )
     rels_grouped = pool_df.groupBy("query_id").agg(

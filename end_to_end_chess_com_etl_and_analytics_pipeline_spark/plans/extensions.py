@@ -46,7 +46,7 @@ from ..operators.dedup import (
 from ..operators.similarity import brute_force_topk, ivf_topk, mmr_rerank
 from ..operators.windows import sessionize, sliding_agg, tumbling_agg
 from ..sources.tables import load_table, raw_row_count, read_parquet_noinfer
-from ..session import local_df, run_concurrently, scratch_dir
+from ..session import local_df, persisted_index, run_concurrently, scratch_dir
 
 # ---------------------------------------------------------------------------
 # shared oracle-SQL building blocks
@@ -1050,53 +1050,69 @@ _X58_SQL = _x58_sql(0)
 
 def x61_bm25_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 against a PERSISTED index (the batch path rebuilds the
-    index per query batch; st11 freezes only terms/scalars).  Build + persist the full index ONCE
-    (operators/retrieval.py::bm25_build_index — tf range-laid-out by
-    token, so scans prune row groups), then score a SECOND query batch
-    (the corpus's terms ranked 9..16 by total count — disjoint from
-    x58's top-8, proving the artifacts serve arbitrary later batches)
-    via bm25_topk_from_index: no re-tokenization, no corpus shuffle,
-    the tf scan pushed down to ``token IN (batch terms)``.  Scoring
-    cost is O(postings of the query terms), independent of corpus size
-    (SCALE.md's persisted-vs-rebuild row).  Oracle: the x58 SQL with
-    the query window OFFSET by 8."""
-    with scratch_dir("x61_") as root:
-        return x61_scoring_frame(spark, sf_dir, root).localCheckpoint()
+    index per query batch; st11 freezes only terms/scalars).  The full
+    index (operators/retrieval.py::bm25_build_index — tf range-laid-out
+    by token, so scans prune row groups) and the corpus's top-16 term
+    ranking are built once per session by :func:`x61_build_index`
+    through ``session.persisted_index``, keyed by the documents
+    table's files (path, length, modification time): a rewritten table
+    rebuilds on the next call, and the index lives until the registry
+    releases it or the interpreter exits.  Every call then scores the
+    SECOND query batch (the terms ranked 9..16 by total count —
+    disjoint from x58's top-8, proving the artifacts serve arbitrary
+    later batches) via :func:`x61_serving_frame`: no re-tokenization,
+    no corpus shuffle, the tf scan pushed down to ``token IN (batch
+    terms)``.  Scoring cost is O(postings of the query terms),
+    independent of corpus size (SCALE.md's persisted-vs-rebuild row).
+    The result is materialized, so it outlives a later rebuild.
+    Oracle: the x58 SQL with the query window OFFSET by 8."""
+    import os as _os
+
+    root, top_terms = persisted_index(
+        spark,
+        "bm25",
+        (2 * _X58_TOPQ,),
+        [_os.path.join(sf_dir, "documents.parquet")],
+        lambda root: x61_build_index(spark, sf_dir, root),
+    )
+    return x61_serving_frame(spark, root, top_terms).localCheckpoint()
 
 
-def x61_scoring_frame(
-    spark: SparkSession, sf_dir: str, root: str
-) -> DataFrame:
-    """Build + persist the index at ``root`` and return the UNMATERIALIZED
-    scoring frame against it.  Split out of x61 so the plan audit
-    (tools/explain_audit.py) can explain the real scoring plan — the
-    pushed ``token IN (...)`` filter on the tf scan — instead of the
-    ``Scan ExistingRDD`` the registry entry's localCheckpoint leaves
-    behind.  Caller owns ``root``'s lifetime:
-    the frame reads from it lazily."""
-    from ..operators.retrieval import bm25_build_index, bm25_topk_from_index
+def x61_build_index(spark: SparkSession, sf_dir: str, root: str) -> list[str]:
+    """Build + persist the documents' BM25 index at ``root``; return
+    its {2·_X58_TOPQ} most frequent terms (total count desc, token
+    asc), the ranking x61's query batch is sliced from."""
+    from ..operators.retrieval import bm25_build_index
 
-    docs = load_table(spark, "documents", sf_dir)
-    bm25_build_index(docs, root)
+    bm25_build_index(load_table(spark, "documents", sf_dir), root)
     terms = read_parquet_noinfer(spark, root + "/terms")
-    top2 = (
-        terms.orderBy(F.col("cnt").desc(), F.col("token").asc())
+    return [
+        r["token"]
+        for r in terms.orderBy(F.col("cnt").desc(), F.col("token").asc())
         .limit(2 * _X58_TOPQ)
         .collect()
-    )
+    ]
+
+
+def x61_serving_frame(
+    spark: SparkSession, root: str, top_terms: list[str]
+) -> DataFrame:
+    """The UNMATERIALIZED scoring frame of x61's query batch (terms
+    ranked 9..16) against the index at ``root``.  Split out so the plan
+    audit (tools/explain_audit.py) can explain the real scoring plan —
+    the pushed ``token IN (...)`` filter on the tf scan — instead of
+    the ``Scan ExistingRDD`` the registry entry's localCheckpoint
+    leaves behind.  The frame reads from ``root`` lazily."""
+    from ..operators.retrieval import bm25_topk_from_index
+
+    batch = top_terms[_X58_TOPQ:]
     queries = local_df(
-        spark,
-        [(r["token"], [r["token"]]) for r in top2[_X58_TOPQ:]],
-        "query string, terms array<string>",
+        spark, [(t, [t]) for t in batch], "query string, terms array<string>"
     )
-    # the query tokens are the collected top2 slice itself — pass them
-    # driver-side so the pruning-token derivation needs no collect job
+    # the query tokens are driver-resident, so the pruning-token
+    # derivation needs no collect job
     return bm25_topk_from_index(
-        spark,
-        root,
-        queries,
-        k=_X58_K,
-        query_tokens=[r["token"] for r in top2[_X58_TOPQ:]],
+        spark, root, queries, k=_X58_K, query_tokens=batch
     )
 
 
@@ -1431,7 +1447,7 @@ def _ivf_pq_model(
 
 
 def _model_queries(
-    spark: SparkSession, fin: DataFrame, init: list, lo: int, hi: int
+    spark: SparkSession, schema, init: list, lo: int, hi: int
 ) -> DataFrame:
     """The family's query batch as a LOCAL frame: rows ranked
     [lo, hi) by ascending vec_id among the usable corpus — exactly
@@ -1439,15 +1455,15 @@ def _model_queries(
     the already-collected init rows (``init`` is the _X59_KC ≥ hi
     lowest usable ids, ascending) so the query side is a
     LocalTableScan instead of a corpus-scanning TakeOrdered subtree.
-    Schema (vec_id, embedding) is copied from ``fin`` so the element
-    type (array<float>) and all downstream arithmetic are identical."""
+    Columns (vec_id, embedding) take their types from ``schema``, the
+    corpus's, so the element type (array<float>) and all downstream
+    arithmetic are identical."""
     from pyspark.sql.types import StructType
 
-    schema = StructType([fin.schema["vec_id"], fin.schema["embedding"]])
     return local_df(
         spark,
         [(r["vec_id"], r["embedding"]) for r in init[lo:hi]],
-        schema,
+        StructType([schema["vec_id"], schema["embedding"]]),
     )
 
 
@@ -1465,7 +1481,7 @@ def x62_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pq import ivf_pq_topk
 
     fin, cents, books, init = _ivf_pq_model(spark, sf_dir)
-    queries = _model_queries(spark, fin, init, 0, _X62_NQ)
+    queries = _model_queries(spark, fin.schema, init, 0, _X62_NQ)
     return ivf_pq_topk(
         fin, queries, cents, books, k=_X62_K, nprobe=_X62_NPROBE
     )
@@ -1624,7 +1640,7 @@ def st12_streaming_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             codes_dir,
             _os.path.join(root, "ckpt"),
         )
-        queries = _model_queries(spark, fin, init, 0, _X62_NQ)
+        queries = _model_queries(spark, fin.schema, init, 0, _X62_NQ)
         return ivf_pq_topk_from_codes(
             read_parquet_noinfer(spark, codes_dir),
             queries,
@@ -1638,52 +1654,83 @@ def st12_streaming_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x65_ivf_pq_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ against a PERSISTED index (x62 re-derives codebooks and
     re-encodes the corpus on every call — not the production shape).
-    Build + persist
-    the full index ONCE (operators/pq.py::ivf_pq_build_index — codes
-    range-laid-out by cell so scans prune row groups), then score a
-    SECOND query batch (the finite vectors ranked {_X62_NQ}..{2·_X62_NQ}
-    by id — disjoint from x62's first {_X62_NQ}, proving the artifact
-    serves arbitrary later batches, the x61 offset pattern) via
-    ivf_pq_topk_from_persisted: no re-encode, no codebook rebuild, the
-    codes scan pushed down to ``__cell IN (probed cells)``.  Scoring
-    cost is O(postings of the probed cells), independent of corpus
-    size.  Oracle: the x62 SQL with the query window OFFSET by
-    {_X62_NQ}."""
-    with scratch_dir("x65_") as root:
-        return x65_scoring_frame(spark, sf_dir, root).localCheckpoint()
+    The model and the full index (:func:`x65_build_index`) are built
+    once per session and shared with x67 (:func:`_ivf_pq_index`): keyed
+    by the model constants and the embeddings table's files (path,
+    length, modification time), rebuilt on the first call after a file
+    changes, and kept until the registry releases it or the
+    interpreter exits.  Every call then scores the SECOND query batch (the finite vectors ranked
+    {_X62_NQ}..{2·_X62_NQ} by id — disjoint from x62's first
+    {_X62_NQ}, proving the artifact serves arbitrary later batches, the
+    x61 offset pattern) via :func:`x65_serving_frame`: no re-encode, no
+    codebook rebuild, the codes scan pushed down to ``__cell IN
+    (probed cells)``.  Scoring cost is O(postings of the probed cells),
+    independent of corpus size.  Oracle: the x62 SQL with the query
+    window OFFSET by {_X62_NQ}."""
+    root, model = _ivf_pq_index(spark, sf_dir)
+    return x65_serving_frame(spark, root, model).localCheckpoint()
 
 
-def x65_scoring_frame(
-    spark: SparkSession, sf_dir: str, root: str
-) -> DataFrame:
-    """Build + persist the index at ``root`` and return the
-    UNMATERIALIZED scoring frame against it — split out of x65 so the
-    plan audit (tools/explain_audit.py) can explain the real scoring
-    plan (the pushed ``__cell IN (...)`` filter on the codes scan)
-    instead of the localCheckpoint's ``Scan ExistingRDD`` (the
-    x61_scoring_frame lesson).  Caller owns ``root``'s lifetime."""
-    from ..operators.pq import (
-        ivf_pq_build_index,
-        ivf_pq_topk_from_persisted,
-        py_probe_cells,
+def _ivf_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, tuple]:
+    """``(root, model)`` of the embeddings' IVF-PQ index, built by
+    :func:`x65_build_index` through ``session.persisted_index``."""
+    import os as _os
+
+    return persisted_index(
+        spark,
+        "ivf_pq",
+        (_X59_M, _X59_KC),
+        [_os.path.join(sf_dir, "embeddings.parquet")],
+        lambda root: x65_build_index(spark, sf_dir, root),
     )
 
+
+def x65_build_index(spark: SparkSession, sf_dir: str, root: str) -> tuple:
+    """Train the family's model (:func:`_ivf_pq_model`), persist the
+    full index at ``root`` (operators/pq.py::ivf_pq_build_index — codes
+    range-laid-out by cell so scans prune row groups) and return the
+    driver-sized model a server needs: (corpus schema, centroids,
+    codebooks, init rows).  An empty corpus persists nothing."""
+    from ..operators.pq import ivf_pq_build_index
+
     fin, cents, books, init = _ivf_pq_model(spark, sf_dir)
+    if cents and books[0]:
+        ivf_pq_build_index(fin, cents, books, root)
+    return fin.schema, cents, books, init
+
+
+def x65_serving_frame(spark: SparkSession, root: str, model: tuple) -> DataFrame:
+    """The UNMATERIALIZED scoring frame of x65's query batch against the
+    index at ``root`` — split out so the plan audit
+    (tools/explain_audit.py) can explain the real scoring plan (the
+    pushed ``__cell IN (...)`` filter on the codes scan) instead of the
+    localCheckpoint's ``Scan ExistingRDD``.  Reads ``root`` lazily."""
+    _schema, cents, books, _init = model
     if not cents or not books[0]:
-        # empty corpus (the empty-inputs contract): nothing to persist
+        # empty corpus (the empty-inputs contract): nothing persisted
         return spark.createDataFrame(
             [], "query_id long, cand_id long, adc_d2 double, rnk int"
         )
-    ivf_pq_build_index(fin, cents, books, root)
-    queries = _model_queries(spark, fin, init, _X62_NQ, 2 * _X62_NQ)
-    # the query vectors are a slice of the already-collected init rows,
-    # so the probed-cell pruning set is computed driver-side (exact
-    # mirror of _query_probes; no collect job — guide §5)
-    return ivf_pq_topk_from_persisted(
+    return _persisted_ann(spark, root, model, _X62_K)[1]
+
+
+def _persisted_ann(
+    spark: SparkSession, root: str, model: tuple, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """(queries, ADC top-``k`` candidates) of the family's second query
+    batch (ranks {_X62_NQ}..{2·_X62_NQ}) against the index at
+    ``root``.  The query vectors are a slice of the model's init rows,
+    so the probed-cell pruning set is computed driver-side (exact
+    mirror of _query_probes; no collect job)."""
+    from ..operators.pq import ivf_pq_topk_from_persisted, py_probe_cells
+
+    schema, cents, _books, init = model
+    queries = _model_queries(spark, schema, init, _X62_NQ, 2 * _X62_NQ)
+    return queries, ivf_pq_topk_from_persisted(
         spark,
         root,
         queries,
-        k=_X62_K,
+        k=k,
         nprobe=_X62_NPROBE,
         probe_cells=py_probe_cells(
             init[_X62_NQ:2 * _X62_NQ], cents, _X62_NPROBE
@@ -2824,14 +2871,28 @@ def _exact_cosine_pool(usable: DataFrame, cand: DataFrame) -> DataFrame:
     x66 (in-plan ANN pool) and x67 (persisted-index pool) so the rerank
     semantics can never drift between the registered and the production
     composition."""
-    from ..functions.vectors import cosine_staged, norm
+    from ..functions.vectors import cosine_staged, norm_col
+    from ..session import cached_column
 
+    spark = usable.sparkSession
+    vn = norm_col(spark, "embedding")
+    # pure trees of column names: built once per session
+    rel = cached_column(
+        spark,
+        ("exact_cosine_rel",),
+        lambda: round_fixed(
+            cosine_staged(
+                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
+            ),
+            6,
+        ).alias("rel"),
+    )
     return (
         cand.join(
             usable.select(
                 F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("__qv"),
-                norm(F.col("embedding")).alias("__qn"),
+                vn.alias("__qn"),
             ),
             "query_id",
         )
@@ -2839,77 +2900,53 @@ def _exact_cosine_pool(usable: DataFrame, cand: DataFrame) -> DataFrame:
             usable.select(
                 F.col("vec_id").alias("cand_id"),
                 F.col("embedding").alias("__cv"),
-                norm(F.col("embedding")).alias("__cn"),
+                vn.alias("__cn"),
             ),
             "cand_id",
         )
-        .select(
-            "query_id",
-            "cand_id",
-            round_fixed(
-                cosine_staged(
-                    F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-                ),
-                6,
-            ).alias("rel"),
-        )
+        .select("query_id", "cand_id", rel)
     )
 
 
 def x67_persisted_ann_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production RAG serving shape as a SCORED query: candidate generation FROM the persisted
-    IVF-PQ artifact — x65's build-once index, scoring a LATER disjoint
-    query batch (the finite vectors ranked {_X62_NQ}..{2·_X62_NQ}, the
-    x61 offset pattern) with the codes scan pushed down to
-    ``__cell IN (probed cells)`` — then x66's exact cosine rerank of
-    the pool survivors and the same greedy MMR diversification.  No
-    stage re-encodes or re-trains: the per-batch cost is O(postings of
-    the probed cells) + O(|Q|·pool) rerank + a corpus-independent
-    greedy — the 7.5×-per-1000× decade tools/ivfpq_persist_probe.py
-    measures, now attached to a registered name.  Oracle: the shared
-    x62 ANN CTE chain with the OFFSET query batch feeding the shared
-    x64 greedy chain — every half reused from a parent oracle, so none
-    can drift."""
-    with scratch_dir("x67_") as root:
-        return x67_scoring_frame(spark, sf_dir, root).localCheckpoint()
+    """The production RAG serving shape as a SCORED query: candidate
+    generation FROM the persisted IVF-PQ index x65 serves from (one
+    model and index per session and embeddings table, built on the
+    first call and after a file changes, :func:`_ivf_pq_index`),
+    scoring a LATER disjoint query batch (the
+    finite vectors ranked {_X62_NQ}..{2·_X62_NQ}, the x61 offset
+    pattern) with the codes scan pushed down to ``__cell IN (probed
+    cells)`` — then x66's exact cosine rerank of the pool survivors and
+    the same greedy MMR diversification (:func:`x67_serving_frame`).  No
+    call after the first re-encodes or re-trains: the per-batch cost is
+    O(postings of the probed cells) + O(|Q|·pool) rerank + a
+    corpus-independent greedy — the 7.5×-per-1000× decade
+    tools/ivfpq_persist_probe.py measures, now attached to a registered
+    name.  Oracle: the shared x62 ANN CTE chain with the OFFSET query
+    batch feeding the shared x64 greedy chain — every half reused from a
+    parent oracle, so none can drift."""
+    root, model = _ivf_pq_index(spark, sf_dir)
+    return x67_serving_frame(spark, sf_dir, root, model).localCheckpoint()
 
 
-def x67_scoring_frame(
-    spark: SparkSession, sf_dir: str, root: str
+def x67_serving_frame(
+    spark: SparkSession, sf_dir: str, root: str, model: tuple
 ) -> DataFrame:
-    """Build + persist the index at ``root`` and return the
-    UNMATERIALIZED persisted-pool MMR frame — split out of x67 so the
-    plan audit can explain the real scoring plan (the pushed
-    ``__cell IN`` filter under the rerank/MMR stages) instead of the
-    localCheckpoint's ``Scan ExistingRDD``.  Caller owns ``root``."""
-    from ..functions.vectors import usable_vec
-    from ..operators.pq import (
-        ivf_pq_build_index,
-        ivf_pq_topk_from_persisted,
-        py_probe_cells,
-    )
+    """The UNMATERIALIZED persisted-pool MMR frame of x67's query batch
+    against the index at ``root`` — split out so the plan audit can
+    explain the real scoring plan (the pushed ``__cell IN`` filter
+    under the rerank/MMR stages) instead of the localCheckpoint's
+    ``Scan ExistingRDD``.  Reads ``root`` lazily."""
+    from ..functions.vectors import usable_col
 
-    fin, cents, books, init = _ivf_pq_model(spark, sf_dir)
+    _schema, cents, books, _init = model
     if not cents or not books[0]:
         return spark.createDataFrame(
             [], "query_id long, cand_id long, mmr_rank int, mmr_score double"
         )
-    ivf_pq_build_index(fin, cents, books, root)
-    queries = _model_queries(spark, fin, init, _X62_NQ, 2 * _X62_NQ)
-    # driver-side probed-cell set (the x65 fast path — the query batch
-    # is a slice of the collected init rows; no collect job)
-    cand = ivf_pq_topk_from_persisted(
-        spark,
-        root,
-        queries,
-        k=_MMR_POOL,
-        nprobe=_X62_NPROBE,
-        probe_cells=py_probe_cells(
-            init[_X62_NQ:2 * _X62_NQ], cents, _X62_NPROBE
-        ),
-    )
+    queries, cand = _persisted_ann(spark, root, model, _MMR_POOL)
     emb = load_table(spark, "embeddings", sf_dir)
-    usable = emb.where(usable_vec(F.col("embedding")))
+    usable = emb.where(usable_col(spark, "embedding"))
     pool_df = _exact_cosine_pool(usable, cand)
     return mmr_rerank(
         emb,
@@ -2967,6 +3004,22 @@ pool AS MATERIALIZED (
     WHERE NOT isnan(rel))"""
     )
     return _mmr_sql_tail(pool_ctes)
+
+
+# the persisted-index queries' build + serve at a root the caller owns,
+# outside the registry: the plan audits explain these frames, whose
+# index scans carry the pushed token-IN / __cell-IN filters
+SERVING_FRAMES: dict[str, Callable[[SparkSession, str, str], DataFrame]] = {
+    "x61_bm25_persisted_index": lambda spark, sf_dir, root: x61_serving_frame(
+        spark, root, x61_build_index(spark, sf_dir, root)
+    ),
+    "x65_ivf_pq_persisted_index": lambda spark, sf_dir, root: x65_serving_frame(
+        spark, root, x65_build_index(spark, sf_dir, root)
+    ),
+    "x67_persisted_ann_mmr": lambda spark, sf_dir, root: x67_serving_frame(
+        spark, sf_dir, root, x65_build_index(spark, sf_dir, root)
+    ),
+}
 
 
 EXT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -17,7 +17,8 @@ import shutil
 import tempfile
 import threading
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,6 +51,21 @@ def conf_scope(spark: SparkSession, key: str, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Describe the jobs the ``with`` body runs on this thread as
+    ``text`` (``spark.job.description``, kept per job in the status
+    store).  On exit — normal or raised — the thread's previous
+    description is put back.  A caller's job group is left as it is."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -92,8 +108,9 @@ def scratch_dir(prefix: str):
     """A fresh ``tempfile.mkdtemp`` directory (so ``TMPDIR`` applies)
     for one query's artifacts, removed on exit — normal or raised.  A
     frame reading from it must be materialized (``localCheckpoint``, a
-    memory-sink table) inside the ``with`` body.  The package's one
-    creator of scratch space (a guard test keeps it that way)."""
+    memory-sink table) inside the ``with`` body.  :func:`persisted_index`
+    holds one open per registered index.  The package's one creator of
+    scratch space (a guard test keeps it that way)."""
     path = tempfile.mkdtemp(prefix=prefix)
     try:
         yield path
@@ -166,6 +183,125 @@ def cached_column(spark: SparkSession, key: tuple, builder):
                 per_session.pop(next(iter(per_session)))
             per_session[key] = built
         return per_session[key]
+
+
+class _Index(NamedTuple):
+    fingerprint: tuple
+    root: str
+    model: object
+    scope: ExitStack  # holds the root's scratch_dir open
+
+
+_INDEXES = None  # weakref.WeakKeyDictionary[SparkSession, dict[slot, _Index]]
+_INDEX_LOCK = threading.Lock()
+
+
+def _input_fingerprint(spark: SparkSession, paths) -> tuple:
+    """(path, length, modification time) of every data file under
+    ``paths``, listed through the Hadoop FS like the commit protocol's
+    table walk."""
+    from .operators.commit import hadoop_fs, walk_table
+
+    out = []
+    for path in paths:
+        P, fs = hadoop_fs(spark, path)
+        for _rel, files in walk_table(fs, P(path)):
+            out += [
+                (f.getPath().toString(), f.getLen(), f.getModificationTime())
+                for f in files
+            ]
+    return tuple(out)
+
+
+def _root_exists(spark: SparkSession, root: str) -> bool:
+    from .operators.commit import hadoop_fs
+
+    P, fs = hadoop_fs(spark, root)
+    return fs.exists(P(root))
+
+
+def persisted_index(
+    spark: SparkSession, kind: str, consts: tuple, inputs, build
+) -> tuple[str, object]:
+    """``(root, model)`` of the index ``kind`` built with the constants
+    ``consts`` over the data files under ``inputs``, built once per
+    session and then served.
+
+    ``build(root)`` writes the index artifacts under ``root`` and
+    returns the driver-sized model a server needs besides them
+    (centroids, codebooks, a term ranking) — never a query result.  The
+    registry keeps one entry per (kind, consts, inputs), valid while
+    the inputs' fingerprint (every data file's path, length and
+    modification time) is unchanged and its root exists; otherwise the
+    next call rebuilds into a fresh ``scratch_dir`` root and removes the
+    stale one.  So the first call costs a build and later calls only
+    the listing; a frame read from ``root`` must be materialized before
+    a later call could replace it.
+
+    Keyed weakly by the SparkSession, like :func:`cached_column`.  The
+    build runs outside the lock: two callers racing on one missing key
+    both build, the first insert wins, both get its root, and the
+    loser's root is removed.  :func:`release_indexes` removes roots
+    early; the rest go at interpreter exit."""
+    global _INDEXES
+    slot = (kind, consts, tuple(inputs))
+    fingerprint = _input_fingerprint(spark, inputs)
+    with _INDEX_LOCK:
+        if _INDEXES is None:
+            import atexit
+            import weakref
+
+            _INDEXES = weakref.WeakKeyDictionary()
+            atexit.register(release_indexes)
+        per_session = _INDEXES.setdefault(spark, {})
+        entry = per_session.get(slot)
+    if (
+        entry is not None
+        and entry.fingerprint == fingerprint
+        and _root_exists(spark, entry.root)
+    ):
+        return entry.root, entry.model
+    with ExitStack() as scope:
+        root = scope.enter_context(scratch_dir(f"{kind}_index_"))
+        model = build(root)
+        built = _Index(fingerprint, root, model, scope.pop_all())
+    with _INDEX_LOCK:
+        # re-fetched: release_indexes may have dropped the session's dict
+        per_session = _INDEXES.setdefault(spark, {})
+        current = per_session.get(slot)
+        if (
+            current is not None
+            and current is not entry
+            and current.fingerprint == fingerprint
+        ):
+            # another caller inserted this key while we built
+            winner, loser = current, built
+        else:
+            per_session[slot] = winner = built
+            loser = current
+    if loser is not None:
+        loser.scope.close()
+    return winner.root, winner.model
+
+
+def index_roots(spark: SparkSession) -> list[str]:
+    """The roots of ``spark``'s live registry entries."""
+    with _INDEX_LOCK:
+        return [e.root for e in (_INDEXES or {}).get(spark, {}).values()]
+
+
+def release_indexes(spark: SparkSession | None = None) -> None:
+    """Drop ``spark``'s registry entries (every session's when None)
+    and remove their roots; the next call of each index rebuilds."""
+    with _INDEX_LOCK:
+        sessions = [spark] if spark is not None else list(_INDEXES or {})
+        entries = [
+            e
+            for s in sessions
+            for e in (_INDEXES or {}).pop(s, {}).values()
+        ]
+    for e in entries:
+        e.scope.close()
 
 
 def get_spark(

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 from ..plans.gold import land_gold
 from ..plans.silver import bronze_to_silver
 from ..schemas import GOLD_FACT_SCHEMA, RAW_GAME_SCHEMA
-from ..session import conf_scope
+from ..session import conf_scope, job_description
 from ..sources.tables import read_events_raw, repair_events_ts
 
 
@@ -122,13 +122,17 @@ def run_incremental_gold(
     micro-batch, landed by :func:`plans.gold.land_gold` under the swap
     token ``b{batch_id}``, so a checkpoint replay reuses its token.
     ``availableNow`` processes the backlog then stops (the Airflow
-    catchup=True equivalent)."""
+    catchup=True equivalent).  The landing's jobs carry the description
+    ``land_gold b{batch_id}``, so the status store names the code that
+    ran them (a description, not a job group: a caller's group stays
+    intact)."""
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        land_gold(
-            spark, batch_df, gold_dir, username, run_ts, f"b{batch_id}",
-            openings_lookup,
-        )
+        with job_description(spark, f"land_gold b{batch_id}"):
+            land_gold(
+                spark, batch_df, gold_dir, username, run_ts, f"b{batch_id}",
+                openings_lookup,
+            )
 
     _drain(
         spark,

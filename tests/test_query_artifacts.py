@@ -1,5 +1,6 @@
 """Per-query artifacts: ``session.scratch_dir`` owns every scratch
-directory a query writes, ``session.run_concurrently`` runs the
+directory a query writes (a persisted index's root too, held by the
+session's index registry), ``session.run_concurrently`` runs the
 concurrent artifact writes with the caller's job tag, and
 ``sources.tables.local_data_files`` is the one driver-side listing.
 Pins that queries leave no scratch directory behind, that a pool
@@ -18,6 +19,8 @@ from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.suites import (
     FULL_QUERIES,
 )
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.session import (
+    index_roots,
+    release_indexes,
     run_concurrently,
     scratch_dir,
 )
@@ -27,7 +30,8 @@ from tests.test_conf_scope import _calls_with_enclosing_function, _package_modul
 
 # queries whose artifacts live in scratch dirs: a memory-sink drain, a
 # streaming gold merge, the streaming SCD2 table, and the two
-# persisted-index queries with concurrent artifact writes
+# persisted-index queries with concurrent artifact writes, whose index
+# roots the session's registry keeps
 _SCRATCH_QUERIES = (
     "st01_streaming_tumbling",
     "st04_incremental_gold",
@@ -50,18 +54,27 @@ def test_scratch_dir_removed_on_exit_and_raise(tmp_path, monkeypatch):
 
 
 def test_queries_leave_no_scratch_dirs(spark, tmp_path, monkeypatch):
-    """Each query's result stays readable after its scratch dir is
-    gone, and nothing is left in the temp root."""
+    """Each query's result stays readable after its own scratch dirs
+    are gone: the temp root holds exactly the index registry's live
+    roots (x61's and x67's indexes), and releasing the registry
+    empties it."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    release_indexes(spark)
     for name in _SCRATCH_QUERIES:
         rows = FULL_QUERIES[name](spark, SF_DIR).collect()
         assert rows, name
-        assert os.listdir(tmp_path) == [], name
+        live = sorted(os.path.basename(r) for r in index_roots(spark))
+        assert sorted(os.listdir(tmp_path)) == live, name
+    assert len(index_roots(spark)) == 2
+    release_indexes(spark)
+    assert os.listdir(tmp_path) == []
 
 
 def test_pool_jobs_carry_the_callers_job_group(spark):
     """Every job a persisted-index query runs, those of its concurrent
-    artifact writes included, belongs to the caller's job group."""
+    artifact writes included, belongs to the caller's job group.  The
+    registry is released first, so the calls build their indexes."""
+    release_indexes(spark)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "artifact-tag-probe"

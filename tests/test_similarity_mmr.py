@@ -302,10 +302,12 @@ def test_x67_pool_scans_persisted_index(spark, tmp_path):
     queries must be the OFFSET batch, disjoint from x62's."""
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.extensions import (
         _X62_NQ,
-        x67_scoring_frame,
+        SERVING_FRAMES,
     )
 
-    frame = x67_scoring_frame(spark, SF_DIR, str(tmp_path / "idx"))
+    frame = SERVING_FRAMES["x67_persisted_ann_mmr"](
+        spark, SF_DIR, str(tmp_path / "idx")
+    )
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "In(__cell" in plan
     assert "CartesianProduct" not in plan

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.gold import build_gold
@@ -455,3 +456,63 @@ def test_streaming_state_drops_pre_epoch_rows(spark, tmp_path):
         "user_id", F.session_window("ts", "30 minutes")
     ).agg(F.count("*").alias("n"))
     assert {r["user_id"] for r in batch.collect()} == {5, 6, 7}
+
+
+def test_job_description_restored_on_exit_and_raise(spark):
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.session import (
+        job_description,
+    )
+
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    for caller in ("caller", None):
+        sc.setLocalProperty(key, caller)
+        try:
+            with job_description(spark, "inner"):
+                assert sc.getLocalProperty(key) == "inner"
+            assert sc.getLocalProperty(key) == caller
+            with pytest.raises(RuntimeError):
+                with job_description(spark, "inner"):
+                    raise RuntimeError("body fails")
+            assert sc.getLocalProperty(key) == caller
+        finally:
+            sc.setLocalProperty(key, None)
+
+
+def test_landing_jobs_carry_their_description(spark, tmp_path, monkeypatch):
+    """Every job a re-pull's ``foreachBatch`` landing runs — its
+    concurrent writes and AQE stages included — carries the description
+    ``land_gold b{batch_id}`` in the status store."""
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.streaming import (
+        pipeline,
+    )
+
+    jsc = spark.sparkContext._jsc.sc()
+    landed = []
+
+    def recording(*args, _land=pipeline.land_gold):
+        first = jsc.dagScheduler().nextJobId()
+        _land(*args)
+        landed.append((args[5], range(first, jsc.dagScheduler().nextJobId())))
+
+    bronze, gold, ckpt = tmp_path / "bronze", tmp_path / "gold", tmp_path / "ck"
+    bronze.mkdir()
+    demo.write_month_json(str(bronze / "2024-01-games.json"), month=1)
+    run_incremental_gold(
+        spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+        "2024-03-01 00:00:00",
+    )
+    demo.write_month_json(str(bronze / "2024-01-repull.json"), month=1)
+    monkeypatch.setattr(pipeline, "land_gold", recording)
+    run_incremental_gold(
+        spark, str(bronze), str(gold), str(ckpt), demo.USERNAME,
+        "2024-04-01 00:00:00",
+    )
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    assert [token for token, _jobs in landed] == ["b1"]
+    jobs = landed[0][1]
+    assert len(jobs) > 0
+    for job_id in jobs:
+        desc = store.job(job_id).description()
+        assert desc.isDefined() and desc.get() == "land_gold b1", job_id

@@ -114,27 +114,21 @@ def main() -> None:
         "",
     ]
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.extensions import (
-        x61_scoring_frame,
-        x65_scoring_frame,
-        x67_scoring_frame,
+        SERVING_FRAMES,
     )
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.session import (
         scratch_dir,
     )
 
-    # the persisted-index registry entries localCheckpoint (their index
-    # dir is gone on return), which hides the scoring plan behind Scan
-    # ExistingRDD; audit the live scoring frame so the pushed token-IN /
-    # __cell-IN filter on the index scan is visible
-    scoring_frames = {
-        "x61_bm25_persisted_index": x61_scoring_frame,
-        "x65_ivf_pq_persisted_index": x65_scoring_frame,
-        "x67_persisted_ann_mmr": x67_scoring_frame,
-    }
+    # the persisted-index registry entries localCheckpoint their
+    # result, which hides the scoring plan behind Scan ExistingRDD;
+    # build each index at an audit-owned root and audit the live
+    # serving frame, so the pushed token-IN / __cell-IN filter on the
+    # index scan is visible
     for name, claim in HEADLINE:
         with scratch_dir(f"{name}_audit_") as root:
-            if name in scoring_frames:
-                df = scoring_frames[name](spark, sf_dir, root)
+            if name in SERVING_FRAMES:
+                df = SERVING_FRAMES[name](spark, sf_dir, root)
             else:
                 df = qs[name](spark, sf_dir)
             df.collect()  # let AQE finalize

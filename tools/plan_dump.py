@@ -31,19 +31,15 @@ def main() -> int:
         DEFAULT_SF_DIR as sf_dir,
     )
 
-    # the persisted-index registry entries localCheckpoint (their index
-    # dir is gone on return), which hides the scoring plan behind Scan
-    # ExistingRDD; explain the live scoring frame instead
-    scoring_frames = {
-        "x61_bm25_persisted_index": extensions.x61_scoring_frame,
-        "x65_ivf_pq_persisted_index": extensions.x65_scoring_frame,
-        "x67_persisted_ann_mmr": extensions.x67_scoring_frame,
-    }
+    # the persisted-index registry entries localCheckpoint their
+    # result, which hides the scoring plan behind Scan ExistingRDD;
+    # build each index at a root this tool owns and explain the live
+    # serving frame instead
     spark = get_spark(app_name=f"plan-dump-{subdir}-{tag}")
     for name in names:
         with scratch_dir(f"{name}_plan_") as root:
-            if name in scoring_frames:
-                df = scoring_frames[name](spark, sf_dir, root)
+            if name in extensions.SERVING_FRAMES:
+                df = extensions.SERVING_FRAMES[name](spark, sf_dir, root)
             else:
                 df = suites.FULL_QUERIES[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(

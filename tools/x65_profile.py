@@ -71,7 +71,7 @@ def main() -> int:
         mark("build_index (encode+4 writes)", t0)
 
         t0 = time.perf_counter()
-        queries = _model_queries(spark, fin, init, _X62_NQ, 2 * _X62_NQ)
+        queries = _model_queries(spark, fin.schema, init, _X62_NQ, 2 * _X62_NQ)
         out = ivf_pq_topk_from_persisted(
             spark, root, queries, k=_X62_K, nprobe=_X62_NPROBE
         )
