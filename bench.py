@@ -69,8 +69,8 @@ HEADLINE = [
     # PQ/ANN family: the headline keeps the shapes a production
     # cluster runs — x62 (the canonical in-plan IVF×PQ composition),
     # x65 (score from the persisted index), and x67 (serving:
-    # persisted pool → exact rerank → MMR).  x61, x65 and x67 build
-    # their index on the session's first call only, so their
+    # persisted pool → exact rerank → MMR).  x61, x65, x67 and x45
+    # build their index on the session's first call only, so their
     # best-of-3 below times serving.  x59 (bare
     # encode), x60 (flat ADC) and x66 (re-encoding MMR twin of x67)
     # are subsumed stages of those three; they stay oracle-scored in

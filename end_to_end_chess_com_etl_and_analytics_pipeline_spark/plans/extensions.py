@@ -47,6 +47,7 @@ from ..operators.similarity import brute_force_topk, ivf_topk, mmr_rerank
 from ..operators.windows import sessionize, sliding_agg, tumbling_agg
 from ..sources.tables import load_table, raw_row_count, read_parquet_noinfer
 from ..session import local_df, persisted_index, run_concurrently, scratch_dir
+from .quality import x45_build_model, x45_serving_frame
 
 # ---------------------------------------------------------------------------
 # shared oracle-SQL building blocks
@@ -3008,7 +3009,8 @@ pool AS MATERIALIZED (
 
 # the persisted-index queries' build + serve at a root the caller owns,
 # outside the registry: the plan audits explain these frames, whose
-# index scans carry the pushed token-IN / __cell-IN filters
+# index scans carry the pushed token-IN / __cell-IN filters; x45's
+# scoring reads its LM artifacts instead of training them
 SERVING_FRAMES: dict[str, Callable[[SparkSession, str, str], DataFrame]] = {
     "x61_bm25_persisted_index": lambda spark, sf_dir, root: x61_serving_frame(
         spark, root, x61_build_index(spark, sf_dir, root)
@@ -3018,6 +3020,9 @@ SERVING_FRAMES: dict[str, Callable[[SparkSession, str, str], DataFrame]] = {
     ),
     "x67_persisted_ann_mmr": lambda spark, sf_dir, root: x67_serving_frame(
         spark, sf_dir, root, x65_build_index(spark, sf_dir, root)
+    ),
+    "x45_bigram_lm": lambda spark, sf_dir, root: x45_serving_frame(
+        spark, sf_dir, root, x45_build_model(spark, sf_dir, root)
     ),
 }
 

@@ -1,6 +1,7 @@
 """session.persisted_index: the session's registry of built indexes.
-x61 (BM25) and x65/x67 (IVF-PQ) build their index on the first call of
-a session and serve every later call from it.  Pins that a served call
+x61 (BM25), x65/x67 (IVF-PQ) and x45 (bigram LM, whose unigram half
+st07 serves to its stream) build their index on the first call of a
+session and serve every later call from it.  Pins that a served call
 runs no build job and returns the first call's rows, that a rewritten
 input table or a root deleted behind the registry's back rebuilds, and
 that racing builders end with one root."""
@@ -30,11 +31,13 @@ from tests.conftest import SF_DIR
 from tests.oracle_compare import compare
 
 X61, X67 = "x61_bm25_persisted_index", "x67_persisted_ann_mmr"
-_TABLE = {X61: "documents", X67: "embeddings"}
-# jobs of a served call, result collect included: 7 (x61) and 9 (x67)
-# measured on Spark 4.1, local mode, plus a little headroom; a call
-# that rebuilds its index runs 19 and 20
-_SERVE_JOB_BUDGET = {X61: 10, X67: 11}
+X45, ST07 = "x45_bigram_lm", "st07_streaming_lm_gate"
+_TABLE = {X61: "documents", X67: "embeddings", X45: "documents"}
+_INPUTS = sorted(set(_TABLE.values()))
+# jobs of a served call, result collect included: 7 (x61), 9 (x67) and
+# 7 (x45) measured on Spark 4.1, local mode, plus a little headroom; a
+# call that rebuilds its index runs 19, 20 and 14
+_SERVE_JOB_BUDGET = {X61: 10, X67: 11, X45: 9}
 
 
 def _next_job_id(spark) -> int:
@@ -49,7 +52,7 @@ def _private_corpus(tmp_path) -> str:
     """A writable copy of the fixture's two corpus tables."""
     sf = tmp_path / "sf"
     sf.mkdir()
-    for t in _TABLE.values():
+    for t in _INPUTS:
         shutil.copyfile(
             os.path.join(SF_DIR, f"{t}.parquet"), sf / f"{t}.parquet"
         )
@@ -59,7 +62,7 @@ def _private_corpus(tmp_path) -> str:
 def _assert_oracle(spark, name, sf_dir):
     con = duckdb.connect()
     try:
-        for t in _TABLE.values():
+        for t in _INPUTS:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
             )
@@ -104,7 +107,7 @@ def test_racing_builders_share_one_root(spark, tmp_path, monkeypatch):
     assert os.listdir(scratch) == []
 
 
-@pytest.mark.parametrize("name", [X61, X67])
+@pytest.mark.parametrize("name", [X61, X67, X45])
 def test_second_call_serves_without_building(spark, name):
     first = _rows(spark, name, SF_DIR)
     start = _next_job_id(spark)
@@ -112,6 +115,21 @@ def test_second_call_serves_without_building(spark, name):
     jobs = _next_job_id(spark) - start
     assert first and second == first
     assert jobs <= _SERVE_JOB_BUDGET[name], jobs
+    _assert_oracle(spark, name, SF_DIR)
+
+
+def test_st07_streams_against_the_lm_entry(spark, tmp_path):
+    """st07 scores its stream against the vocab and stats of x45's
+    entry: it registers no entry of its own, and a served call matches
+    x42's oracle like the first."""
+    sf = _private_corpus(tmp_path)
+    before = set(index_roots(spark))
+    _rows(spark, X45, sf)
+    (root,) = set(index_roots(spark)) - before
+    first = _rows(spark, ST07, sf)
+    _assert_oracle(spark, ST07, sf)
+    assert set(index_roots(spark)) - before == {root}
+    assert first and _rows(spark, ST07, sf) == first
 
 
 def test_rewritten_input_rebuilds(spark, tmp_path):
@@ -120,37 +138,38 @@ def test_rewritten_input_rebuilds(spark, tmp_path):
     over the new data."""
     sf = _private_corpus(tmp_path)
     old = {}
-    for name in (X61, X67):
+    for name in _TABLE:
         _assert_oracle(spark, name, sf)
         old[name] = _rows(spark, name, sf)
     roots = set(index_roots(spark))
 
     # the same rows with a later modification time: a rebuild, same rows
-    for t in _TABLE.values():
+    for t in _INPUTS:
         path = os.path.join(sf, f"{t}.parquet")
         mtime = os.stat(path).st_mtime + 10
         os.utime(path, (mtime, mtime))
-    for name in (X61, X67):
+    for name in _TABLE:
         assert _rows(spark, name, sf) == old[name]
     stale = roots - set(index_roots(spark))
-    assert len(stale) == 2 and not any(os.path.exists(r) for r in stale)
+    assert len(stale) == 3 and not any(os.path.exists(r) for r in stale)
 
     # three quarters of the rows: a rebuild over the new data
-    for t in _TABLE.values():
+    for t in _INPUTS:
         path = os.path.join(sf, f"{t}.parquet")
         table = pq.read_table(path)
         pq.write_table(table.slice(0, table.num_rows * 3 // 4), path)
-    for name in (X61, X67):
+    for name in _TABLE:
         _assert_oracle(spark, name, sf)
         assert _rows(spark, name, sf) != old[name], name
 
 
 def test_deleted_root_is_rebuilt(spark, tmp_path):
     sf = _private_corpus(tmp_path)
-    before = set(index_roots(spark))
-    first = _rows(spark, X61, sf)
-    (root,) = set(index_roots(spark)) - before
-    shutil.rmtree(root)
-    assert _rows(spark, X61, sf) == first
-    (rebuilt,) = set(index_roots(spark)) - before
-    assert rebuilt != root and os.path.isdir(rebuilt)
+    for name in (X61, X45):
+        before = set(index_roots(spark))
+        first = _rows(spark, name, sf)
+        (root,) = set(index_roots(spark)) - before
+        shutil.rmtree(root)
+        assert _rows(spark, name, sf) == first, name
+        (rebuilt,) = set(index_roots(spark)) - before
+        assert rebuilt != root and os.path.isdir(rebuilt)

@@ -65,7 +65,7 @@ HEADLINE = [
     ("x42_lm_quality", "LM trains in ONE checkpointed pass (explode + token hash-agg); top-V cut via orderBy+limit -> TakeOrderedAndProject (no global sort materialization); scoring pass = single corpus scan + broadcast LM join + one doc_id exchange; explode_outer keeps empty docs without a rejoin"),
     ("x43_corpus_funnel", "gates keep their own plans; the funnel adds only co-keyed doc_id flag joins that collapse to a SCALAR aggregate before the 3-row stack — nothing stage-shaped ever moves"),
     ("x44_snapshot_diff", "fingerprints are scan-side projections; ONE co-keyed full-outer join on doc_id is the only exchange — 8-byte hashes shuffle, never document strings"),
-    ("x45_bigram_lm", "training = two hash-aggs (bigram key, token key) + TakeOrderedAndProject top-B cut; both LM artifacts capped -> broadcast; scoring = corpus scan + two broadcast joins + one doc_id exchange"),
+    ("x45_bigram_lm", "scoring reads the persisted LM artifacts, so the plan holds no training: corpus scan (plus the undersplit-scan spread, a no-op at cluster scale) + two broadcast joins (bigram table, vocab) + the one-row stats broadcast + one doc_id exchange"),
     ("x46_source_quota", "two-phase top-Q: salted (source,salt) window prunes map-side, final source window sees <= SALTS*Q rows per source — no full-source sort at any scale"),
     ("x47_weighted_sample", "hash-derived E-S keys in a scan-local projection; orderBy+limit -> TakeOrderedAndProject (per-partition k-heaps, no global sort exchange)"),
     ("x48_script_mix", "five regexp_count columns + argmax fold in ONE codegen projection — zero exchanges beyond the undersplit-scan spread"),
@@ -85,6 +85,44 @@ HEADLINE = [
     ("x67_persisted_ann_mmr", "persisted-ANN MMR serving: scoring scans the frozen codes artifact with the pushed In(__cell,...) filter (x65's plan) — NO re-train, NO corpus re-encode; exact rerank is |Q|*pool id-keyed lookups; pairwise sims via broadcast pool ids (no pool self-join); ONE query_id exchange into the greedy applyInPandas"),
     ("st13_streaming_scd2", "the dimension table lives hash-bucketed by user — this audits the final table read (scan shows __bucket partition dirs); the per-batch merge reads ONLY affected buckets (partition pruning) and rewrites ONLY them via dynamic overwrite (untouched buckets pinned mtime-identical by tests/test_streaming_scd2.py)"),
 ]
+
+# claims about a builder's plans, audited beside the query's serving
+# frame: one plan per artifact the builder writes
+BUILD_CLAIMS = {
+    "x45_bigram_lm": "all three artifacts read the token counts as one checkpoint (Scan ExistingRDD), so no plan re-aggregates tokens; bigrams = corpus scan (plus the undersplit-scan spread) + one bigram-key hash-agg exchange + TakeOrderedAndProject top-B cut (no global sort), broadcast into the counts join; lm_vocab = TakeOrderedAndProject top-V over the counts; lm_stats = two scalar aggregates crossed into one row",
+}
+
+
+def _audit(spark, df) -> list[str]:
+    """PLANS.md lines for ``df``: the Exchange and broadcast-join
+    counts of its executed plan, then its formatted plan."""
+    df.collect()  # let AQE finalize
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    # count nodes on the executed (AQE-final) plan, where each node
+    # prints exactly once; formatted output is kept for display only
+    executed = (
+        df._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .split("== Initial Plan ==")[0]
+    )
+    # strip volatile ids ( #123 / plan_id=.. ) so regeneration diffs clean
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    n_ex = executed.count("Exchange ")
+    n_bc = executed.count("BroadcastHashJoin")
+    return [
+        f"**Observed:** {n_ex} Exchange node(s), {n_bc} broadcast join(s).",
+        "",
+        "```",
+        plan.strip(),
+        "```",
+        "",
+    ]
 
 
 def main() -> None:
@@ -116,6 +154,9 @@ def main() -> None:
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.extensions import (
         SERVING_FRAMES,
     )
+    from end_to_end_chess_com_etl_and_analytics_pipeline_spark.plans.quality import (
+        x45_training_frames,
+    )
     from end_to_end_chess_com_etl_and_analytics_pipeline_spark.session import (
         scratch_dir,
     )
@@ -125,43 +166,19 @@ def main() -> None:
     # build each index at an audit-owned root and audit the live
     # serving frame, so the pushed token-IN / __cell-IN filter on the
     # index scan is visible
+    build_frames = {"x45_bigram_lm": x45_training_frames}
     for name, claim in HEADLINE:
+        out += [f"## {name}", "", f"**Design claim:** {claim}."]
         with scratch_dir(f"{name}_audit_") as root:
             if name in SERVING_FRAMES:
                 df = SERVING_FRAMES[name](spark, sf_dir, root)
             else:
                 df = qs[name](spark, sf_dir)
-            df.collect()  # let AQE finalize
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            # count nodes on the executed (AQE-final) plan, where each
-            # node prints exactly once; formatted output is kept for
-            # display only
-            executed = (
-                df._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-                .split("== Initial Plan ==")[0]
-            )
-        # strip volatile ids ( #123 / plan_id=.. ) so regeneration diffs clean
-        plan = re.sub(r"#\d+L?", "#", plan)
-        plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
-        n_ex = executed.count("Exchange ")
-        n_bc = executed.count("BroadcastHashJoin")
-        out += [
-            f"## {name}",
-            "",
-            f"**Design claim:** {claim}.",
-            f"**Observed:** {n_ex} Exchange node(s), {n_bc} broadcast join(s).",
-            "",
-            "```",
-            plan.strip(),
-            "```",
-            "",
-        ]
+            out += _audit(spark, df)
+        if name in build_frames:
+            out += [f"**Builder claim:** {BUILD_CLAIMS[name]}.", ""]
+            for artifact, frame in build_frames[name](spark, sf_dir).items():
+                out += [f"### {name} builder: {artifact}", "", *_audit(spark, frame)]
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(HEADLINE)} queries)")
